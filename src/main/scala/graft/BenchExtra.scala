@@ -51,11 +51,10 @@ object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val mode = args.headOption.getOrElse("kg")
+    val mode = args.headOption.getOrElse("explain")
     val spark = session(cpus)
 
     mode match {
-      case "kg" => kgDecompose(spark, sfDir)
       case "explain" => explainAll(spark, sfDir, args.lift(1).getOrElse("before"))
       case "hdt" => hdtDecompose(spark, sfDir)
       case "minhash" => minhashDecompose(spark, sfDir)
@@ -67,62 +66,6 @@ object BenchExtra {
       case other => sys.error(s"unknown mode $other")
     }
     spark.stop()
-  }
-
-  /** Stage-level decomposition of the flagship kg_canonical_triples. */
-  private def kgDecompose(spark: SparkSession, sfDir: String): Unit = {
-    import graft.sources.Transcripts
-    import graft.rules.TranscriptRules
-    import graft.linking.Gazetteer
-
-    val sc = spark.sparkContext
-    // warm codegen on the smallest sf
-    try pipeline.Kg.canonicalTriples(spark, "/root/testdata/sf0.001").count()
-    catch { case _: Throwable => }
-
-    sc.setJobDescription("transcripts")
-    bench("transcripts noop")(noop(Transcripts(spark, sfDir)))
-    sc.setJobDescription("base triples")
-    bench("base triples noop")(noop(
-      TranscriptRules.triples(Transcripts(spark, sfDir))))
-    sc.setJobDescription("gazetteer+lengths")
-    bench("gaz + lengths") {
-      val g = Gazetteer(spark, sfDir)
-      Gazetteer.surfaceTokenLengths(g)
-    }
-    sc.setJobDescription("aliasCc fresh")
-    bench("aliasCc (fresh CC)")(
-      graphops.ConnectedComponents(Gazetteer.aliasEdges(spark, sfDir)).count())
-    val g = Gazetteer(spark, sfDir)
-    val lengths = Gazetteer.surfaceTokenLengths(g)
-    sc.setJobDescription("ngram spans")
-    bench("ngramSpans noop")(noop(
-      Gazetteer.ngramSpans(Transcripts(spark, sfDir), lengths)))
-    sc.setJobDescription("mentionsRaw")
-    bench("mentionsRaw noop")(noop(
-      Gazetteer.mentionsRaw(Transcripts(spark, sfDir), g, lengths)))
-    sc.setJobDescription("full no distinct")
-    val cc = pipeline.Kg.aliasCc(spark, sfDir)
-    bench("union (no distinct) noop") {
-      val t = Transcripts(spark, sfDir)
-      val base = TranscriptRules.triples(t)
-      val m = Gazetteer.mentionsRaw(t, g, lengths)
-        .join(broadcast(cc), col("alias_iri") === col("node"))
-        .select(
-          concat(lit("<http://graft.io/conv/"), col("conv_id"), lit("/turn/"),
-            col("turn_idx").cast("string"), lit(">")).as("subj"),
-          lit("<http://graft.io/p/mentions>").as("pred"),
-          concat(lit("<"), col("component"), lit(">")).as("obj"),
-          concat(lit("<http://graft.io/g/"), col("conv_id"), lit(">")).as("graph"))
-      noop(base.unionByName(m))
-    }
-    sc.setJobDescription("full + distinct count")
-    bench("canonicalTriples count (full)")(
-      pipeline.Kg.canonicalTriplesOver(Transcripts(spark, sfDir), spark, sfDir)
-        .count())
-    sc.setJobDescription("shared (memo) count")
-    bench("canonicalTriplesShared count")(
-      pipeline.Kg.canonicalTriplesShared(spark, sfDir).count())
   }
 
   /** HDT encode vs decode split for rdf_hdt_scan. */

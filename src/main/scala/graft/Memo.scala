@@ -1,0 +1,100 @@
+package graft
+
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.SparkSession
+
+/** The engine's one memo for values derived from input files: dimension
+  * frames, footer counts, probe answers and on-disk fixtures.
+  *
+  *  - Owner: an entry belongs to the SparkSession that computed it (a
+  *    `newSession()` never sees another session's entries), or to the JVM
+  *    for callers without a session, such as the `fs:probeRdf` UDF.
+  *    Entries of sessions whose SparkContext has stopped are dropped at
+  *    the next store.
+  *  - Fingerprint: an entry stores the sorted (relative path, length,
+  *    mtime) of the leaf files under the input roots its value reads. A
+  *    lookup that sees a different fingerprint recomputes and replaces the
+  *    entry, so entries grow with keys, not with input versions.
+  *  - Bound: at most [[MaxEntries]] entries; past it, values are computed
+  *    and not stored.
+  */
+object Memo {
+
+  val MaxEntries = 65536
+
+  private type Fingerprint = Seq[Seq[(String, Long, Long)]]
+  private final class Entry(val fingerprint: Fingerprint, val value: Any)
+
+  // owner → name → entry; owners compare by reference
+  private val byOwner =
+    new ConcurrentHashMap[AnyRef, ConcurrentHashMap[String, Entry]]()
+  private object Jvm
+  private lazy val jvmConf = new Configuration()
+
+  /** `compute`, memoized for `spark` under `name` while the leaf files
+    * under `inputs` stay the same.
+    */
+  def apply[T](spark: SparkSession, name: String, inputs: Seq[String])(
+      compute: => T): T =
+    lookup(spark, name,
+      fingerprint(spark.sparkContext.hadoopConfiguration, inputs), compute)
+
+  /** As [[apply]], owned by the JVM: for callers that have no session. */
+  def jvm[T](name: String, inputs: Seq[String])(compute: => T): T =
+    lookup(Jvm, name, fingerprint(jvmConf, inputs), compute)
+
+  private def lookup[T](owner: AnyRef, name: String, fp: Fingerprint,
+      compute: => T): T = {
+    val own = byOwner.get(owner)
+    val hit = if (own == null) null else own.get(name)
+    if (hit != null && hit.fingerprint == fp) hit.value.asInstanceOf[T]
+    else {
+      val v = compute
+      byOwner.keySet.removeIf {
+        case s: SparkSession => s.sparkContext.isStopped
+        case _ => false
+      }
+      if (hit != null || size < MaxEntries)
+        byOwner.computeIfAbsent(owner, _ => new ConcurrentHashMap[String, Entry]())
+          .put(name, new Entry(fp, v))
+      v
+    }
+  }
+
+  private def size: Int = {
+    var n = 0
+    byOwner.values.forEach(m => n += m.size)
+    n
+  }
+
+  /** Leaf files under `root` (the root itself when it is a file; none when
+    * it is missing), skipping every path below the root that has a
+    * component starting with `_` or `.`, as Spark's file index does:
+    * `_temporary/` attempt output, `_SUCCESS`, `.crc` checksums.
+    */
+  def leafFiles(conf: Configuration, root: String): Seq[FileStatus] = {
+    val p = new Path(root)
+    val fs = p.getFileSystem(conf)
+    def walk(s: FileStatus): Seq[FileStatus] =
+      if (!s.isDirectory) Seq(s)
+      else fs.listStatus(s.getPath).toSeq.filterNot { c =>
+        val n = c.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
+      }.flatMap(walk)
+    try walk(fs.getFileStatus(p))
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  private def fingerprint(conf: Configuration, roots: Seq[String]): Fingerprint =
+    roots.map { r =>
+      val root = new Path(r)
+      val base = root.getFileSystem(conf).makeQualified(root).toUri.getPath
+      leafFiles(conf, r).map { f =>
+        (f.getPath.toUri.getPath.stripPrefix(base), f.getLen,
+          f.getModificationTime)
+      }.sorted
+    }
+}

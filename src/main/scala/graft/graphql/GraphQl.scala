@@ -468,18 +468,11 @@ object GraphQl {
     // pattern reads it: Spark's publish()-equivalent of the reference's
     // shared record stream (MainCliVoidGenerator fans one scan into all
     // subscribers). Lazy lineage cut — blocks die with the result.
-    // `graft.graphql.sharedScan=false` opts out: when the quad table is
-    // huge AND every pattern is highly selective, P pruned/pushed-down
-    // scans beat materializing the full table (the cut hides per-pattern
-    // filter pushdown from the source scan) — a per-deployment tradeoff,
-    // not decidable from the query alone.
     def patterns(f: Field): Int =
       f.directives.count(_.name == "pattern") + f.children.map(patterns).sum
     val nPat = q.roots.map(patterns).sum
-    val share = quads.sparkSession.conf
-      .get("graft.graphql.sharedScan", "true").toBoolean
     val src =
-      if (nPat > 1 && share) {
+      if (nPat > 1) {
         import graft.Checkpoints.TruncateOps
         quads.truncateLineage(false)
       } else quads

@@ -20,10 +20,6 @@ object Gazetteer {
 
   val AliasNs = "http://graft.io/alias/"
 
-  /** Broadcast-cutoff probe results per canonical gazetteer plan. */
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   /** Deterministic gazetteer from the `nation` dimension: three surface
     * variants per entity, each its own alias IRI (the alias graph links
     * them; CC canonicalization picks the least IRI).
@@ -63,19 +59,6 @@ object Gazetteer {
           .otherwise(emptyArr))).as("r"))
       .select(col("r.src").as("src"), col("r.dst").as("dst"))
   }
-
-  /** Word-boundary normalization: every RUN of non-alphanumerics collapses
-    * to ONE space (static regex — compiled once, codegen). After this,
-    * "surface occurs at word boundaries" ≡ "the surface's token sequence
-    * appears as consecutive text tokens" — which turns the mention scan
-    * into an EQUI-join on token n-grams (below) instead of an
-    * O(rows × surfaces) substring scan.
-    */
-  def boundaryNormText(text: Column): Column =
-    // tokenize + rejoin instead of regexp_replace (see functions.Tokenize)
-    concat(lit(" "),
-      array_join(graft.functions.Tokenize.alnumTokens(text), " "),
-      lit(" "))
 
   /** Canonical join key of a surface: separators collapsed, trimmed. */
   def surfaceKey(surface: Column): Column =
@@ -212,19 +195,16 @@ object Gazetteer {
     val bc = broadcastGaz.getOrElse {
       val max = conf.get("graft.gazetteer.broadcastMaxRows",
         DefaultBroadcastMaxRows.toString).toLong
-      // memoized per canonical gazetteer plan: the probe count would
-      // otherwise re-evaluate the full gazetteer lineage on EVERY call,
-      // once for the probe and again for the join build (review-found).
-      // Files mutating mid-session are out of scope, as everywhere else.
+      // memoized per canonical gazetteer plan and its input files: the
+      // probe count would otherwise re-evaluate the full gazetteer lineage
+      // on EVERY call, once for the probe and again for the join build
+      // (review-found).
       val key = gaz.queryExecution.logical.canonicalized.toString + "|" + max
-      val cached = probeCache.get(key)
-      if (cached != null) cached.booleanValue
-      else {
-        val fits = gaz.count() <= max
-        if (probeCache.size < 1024)
-          probeCache.put(key, java.lang.Boolean.valueOf(fits))
-        fits
-      }
+      // (inputFiles are URI strings; the decoded Path form names the file)
+      val inputs = gaz.inputFiles.toSeq.map(f =>
+        new org.apache.hadoop.fs.Path(new java.net.URI(f)).toString)
+      graft.Memo(gaz.sparkSession, "gazetteer.fits:" + key, inputs)(
+        gaz.count() <= max)
     }
     val joined =
       if (bc) spans.join(broadcast(g), "__ng")

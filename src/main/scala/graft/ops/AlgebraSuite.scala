@@ -24,10 +24,6 @@ object AlgebraSuite {
   private def unit(s: SparkSession) =
     graft.rules.ConstructParser.unitFrame(s)
 
-  /** Once-per-JVM HDT fixture encodes (keyed by output path). */
-  private val hdtFixtureOnce =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Deterministic on-disk git repo for `ngs_git`: config-isolated
     * (`GIT_CONFIG_GLOBAL/SYSTEM=/dev/null`), fixed identity and epoch
     * author/committer dates make the two commit ids — and so the graph
@@ -806,9 +802,10 @@ object AlgebraSuite {
       // READER, the actual scale path, not fixture setup.
       val path = sys.props("java.io.tmpdir") +
         s"/graft_hdt_${dir.replaceAll("[^a-zA-Z0-9]", "_")}.hdt"
-      hdtFixtureOnce.computeIfAbsent(path, p => {
-        graft.sources.HdtIO.writeHdt(trip(s, dir), p); p
-      })
+      graft.Memo(s, "fixture.hdt:" + path,
+          Seq("events", "documents").map(t => s"$dir/$t.parquet")) {
+        graft.sources.HdtIO.writeHdt(trip(s, dir), path)
+      }
       RdfIO.readRdfAuto(s, path)
     }),
     // --- whole-script execution from text: LOAD + updates + query over

@@ -10,7 +10,9 @@ import graft.Checkpoints.TruncateOps
   * EXISTS = semi, UNION = union; SparqlIntegrateCmdImpls.java:1036,
   * algebra at :673-677). Here each triple pattern is a filtered
   * projection of the triple table and the join structure is handed to
-  * Catalyst, which reorders/broadcasts like any relational plan.
+  * Catalyst, which picks each join's strategy (broadcast or shuffle) but
+  * not the order: cost-based reordering is off and no table statistics
+  * exist, so joins run in textual pattern order.
   */
 object Bgp {
 

@@ -10,8 +10,8 @@ import graft.Checkpoints.TruncateOps
   * routes the full SPARQL grammar). Spark-first re-expression:
   *
   *  - link / inverse / sequence / alternative / negated set are pure
-  *    relational ops (filter, swap, equi-join, union) — Catalyst reorders
-  *    and broadcasts them like any join tree.
+  *    relational ops (filter, swap, equi-join, union), joined in textual
+  *    order (no cost-based reordering: CBO is off, no statistics exist).
   *  - `+`/`*` closures are iterative DISTINCT self-joins with DOUBLING
   *    (R ← R ∪ R∘R), so a diameter-d graph needs ⌈log₂ d⌉ rounds, not d —
   *    the right shape for a 1000-executor cluster where every round is a

@@ -173,22 +173,23 @@ object RmlSuite {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "rml_exec" -> ((s, dir) => Rml.execute(s, fixturesOnce("csv", dir,
-      writeCsvFixtures(s, dir)))),
-    "rml_json" -> ((s, dir) => Rml.execute(s, fixturesOnce("json", dir,
-      writeJsonFixtures(s, dir)))),
-    "rml_xml" -> ((s, dir) => Rml.execute(s, fixturesOnce("xml", dir,
-      writeXmlFixtures(s, dir)))),
-    "rml_xml_multi" -> ((s, dir) => Rml.execute(s, fixturesOnce("xmlm", dir,
-      writeXmlMultiFixtures(s, dir))).distinct())
+    "rml_exec" -> ((s, dir) => Rml.execute(s, fixtures(s, "csv", dir,
+      "customer", "nation")(writeCsvFixtures(s, dir)))),
+    "rml_json" -> ((s, dir) => Rml.execute(s, fixtures(s, "json", dir,
+      "nation")(writeJsonFixtures(s, dir)))),
+    "rml_xml" -> ((s, dir) => Rml.execute(s, fixtures(s, "xml", dir,
+      "nation")(writeXmlFixtures(s, dir)))),
+    "rml_xml_multi" -> ((s, dir) => Rml.execute(s, fixtures(s, "xmlm", dir,
+      "nation")(writeXmlMultiFixtures(s, dir))).distinct())
   )
 
-  // fixtures are deterministic functions of (kind, dir): write once per
-  // JVM so repeated runs (bench reps, verify) time the MAPPING EXECUTION,
-  // not the driver-side fixture manufacture
-  private def fixturesOnce(kind: String, dir: String,
-      write: => String): String =
-    RelationalSuite.memoOnce("rml:" + kind + ":" + dir)(write)
+  // fixtures are deterministic functions of (kind, dir): written once per
+  // session and input version so repeated runs (bench reps, verify) time
+  // the MAPPING EXECUTION, not the driver-side fixture manufacture
+  private def fixtures(s: SparkSession, kind: String, dir: String,
+      tables: String*)(write: => String): String =
+    graft.Memo(s, s"fixture.rml.$kind:$dir",
+      tables.map(t => s"$dir/$t.parquet"))(write)
 
   private val DG = "'<urn:x-arq:DefaultGraph>'"
 

@@ -45,9 +45,9 @@ import graft.Checkpoints.TruncateOps
   *
   * Everything compiles to Catalyst `Column`s / DataFrame joins at parse
   * time — the macro model (SparqlIntegrateCmdImpls.java:584-605): no
-  * interpretation at runtime, plans stay in whole-stage codegen and
-  * Catalyst reorders/broadcasts the pattern joins like any relational
-  * plan.
+  * interpretation at runtime, plans stay in whole-stage codegen. The
+  * pattern joins run in textual order: cost-based reordering is off and
+  * no table statistics exist.
   */
 object ConstructParser {
 
@@ -2845,7 +2845,7 @@ object ConstructParser {
     }
 
     /** Compile a group against the quad/triple table: patterns join on
-      * shared vars (Catalyst reorders/broadcasts), OPTIONAL = left outer,
+      * shared vars in textual order, OPTIONAL = left outer,
       * MINUS / FILTER NOT EXISTS = anti, FILTER EXISTS = semi, UNION =
       * union-by-name with NULLs for disjoint vars, BIND = withColumn,
       * FILTER = post-group predicate (SPARQL §8: filters apply to the

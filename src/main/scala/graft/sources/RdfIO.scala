@@ -213,19 +213,12 @@ object RdfIO {
     */
   def probeRdfLocal(path: String): Boolean = {
     // group-end FILTER re-application evaluates the probe once per
-    // RESULT row (triple-scale after a SERVICE join) — memoize per JVM
-    // so each file is read once; bounded so a pathological listing
-    // cannot grow the map unchecked (files mutating mid-session are out
-    // of scope, as everywhere else in the engine)
-    val cached = probeCache.get(path)
-    if (cached != null) return cached.booleanValue
-    val r = probeRdfUncached(path)
-    if (probeCache.size < 65536) probeCache.put(path, java.lang.Boolean.valueOf(r))
-    r
+    // RESULT row (triple-scale after a SERVICE join) — memoized per JVM
+    // (the UDF runs without a session) so each file version is read once
+    val f = new java.io.File(path).getAbsoluteFile
+    f.isFile && graft.Memo.jvm("rdf.probe:" + f, Seq(f.getPath))(
+      probeRdfUncached(f.getPath))
   }
-
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   private def probeRdfUncached(path: String): Boolean = {
     val f = new java.io.File(path)

@@ -24,35 +24,20 @@ import org.apache.spark.sql.expressions.Window
 object Transcripts {
 
   /** Cheap metadata-scale count of the dimension table (broadcast side),
-    * memoized per sfDir. Read straight from the parquet FOOTERS on the
-    * driver (row counts are file metadata) — zero Spark jobs, vs. the
-    * count() job this replaced.
+    * memoized per session and sfDir while its files stay the same. Read
+    * straight from the parquet FOOTERS on the driver (row counts are file
+    * metadata) — zero Spark jobs, vs. the count() job this replaced. The
+    * files are the ones Spark's scan reads ([[graft.Memo.leafFiles]]): a
+    * stray `_temporary/` part would otherwise change the join modulus.
     */
-  private val docCountCache = scala.collection.concurrent.TrieMap[String, Long]()
-  private def docCount(spark: SparkSession, sfDir: String): Long =
-    docCountCache.getOrElseUpdate(sfDir, {
-      import org.apache.hadoop.fs.Path
+  private def docCount(spark: SparkSession, sfDir: String): Long = {
+    val docs = s"$sfDir/documents.parquet"
+    graft.Memo(spark, s"transcripts.docCount:$sfDir", Seq(docs)) {
       val conf = spark.sessionState.newHadoopConf()
-      val root = new Path(s"$sfDir/documents.parquet")
       try {
-        val fs = root.getFileSystem(conf)
-        val files =
-          if (fs.getFileStatus(root).isDirectory) {
-            // FILES only, recursive (review-found: a flat listStatus
-            // opened partition SUBDIRECTORIES as parquet files and threw
-            // on layouts the replaced count() handled fine)
-            val it = fs.listFiles(root, true)
-            val buf = scala.collection.mutable.ArrayBuffer[Path]()
-            while (it.hasNext) {
-              val p = it.next().getPath
-              if (!p.getName.startsWith("_") && !p.getName.startsWith("."))
-                buf += p
-            }
-            buf.toSeq
-          } else Seq(root)
-        files.map { f =>
+        graft.Memo.leafFiles(conf, docs).map { f =>
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
           try r.getRecordCount finally r.close()
         }.sum
       } catch {
@@ -61,9 +46,10 @@ object Transcripts {
           // universal one-job count this probe replaced (same number)
           System.err.println(
             s"[transcripts] footer count fell back to count(): $e")
-          spark.read.parquet(s"$sfDir/documents.parquet").count()
+          spark.read.parquet(docs).count()
       }
-    })
+    }
+  }
 
   def apply(spark: SparkSession, sfDir: String): DataFrame = {
     val e = spark.read.parquet(s"$sfDir/events.parquet")

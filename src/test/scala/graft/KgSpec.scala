@@ -6,14 +6,6 @@ import graft.pipeline.Kg
 class KgSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("fused (literal-array) pipeline == join-based pipeline") {
-    val fused = Kg.canonicalTriplesFused(spark, TestSpark.sf0001)
-    val joined = Kg.canonicalTriples(spark, TestSpark.sf0001)
-    assert(fused.count() === joined.count())
-    assert(fused.exceptAll(joined).count() === 0)
-    assert(joined.exceptAll(fused).count() === 0)
-  }
-
   test("typed Dataset API: case-class views agree with the DataFrames") {
     import spark.implicits._
     val turns = Typed.turns(spark, TestSpark.sf0001)
@@ -94,18 +86,5 @@ class KgSpec extends AnyFunSuite {
     val out = Gazetteer.fuzzyMentions(t, emptyGaz)
     assert(out.columns.toSeq === Seq("conv_id", "turn_idx", "span", "surface", "alias_iri", "jaccard"))
     assert(out.count() === 0)
-  }
-
-  test("fused plan has exactly one transcript scan") {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    spark.catalog.clearCache() // other suites may have cached the source
-    val lp = Kg.canonicalTriplesFused(spark, TestSpark.sf0001)
-      .queryExecution.optimizedPlan
-    val eventScans = lp.collect {
-      case l: LogicalRelation => l.relation
-    }.collect {
-      case f: HadoopFsRelation => f.location.rootPaths.mkString(",")
-    }.count(_.contains("events.parquet"))
-    assert(eventScans === 1, s"expected 1 events scan, plan:\n$lp")
   }
 }

@@ -237,17 +237,29 @@ class RulesSpec extends AnyFunSuite {
 
   test("transcripts over a PARTITIONED documents layout (r10 regression: " +
       "the driver-side footer count must recurse into k=v subdirectories)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part_sf").toString
-    val src = TestSpark.sf0001
-    spark.read.parquet(s"$src/events.parquet")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    spark.read.parquet(s"$src/documents.parquet")
-      .withColumn("part", col("doc_id") % 3)
-      .write.mode("overwrite").partitionBy("part")
-      .parquet(s"$dir/documents.parquet")
-    val t = Transcripts(spark, dir)
-    val base = Transcripts(spark, src)
-    assert(t.exceptAll(base).count() === 0)
-    assert(base.exceptAll(t).count() === 0)
+    import java.nio.file.{Files, Paths}
+    val tmp = Files.createTempDirectory("graft_part_sf")
+    val dir = tmp.toString
+    try {
+      val src = TestSpark.sf0001
+      spark.read.parquet(s"$src/events.parquet")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      spark.read.parquet(s"$src/documents.parquet")
+        .withColumn("part", col("doc_id") % 3)
+        .write.mode("overwrite").partitionBy("part")
+        .parquet(s"$dir/documents.parquet")
+      // a failed writer's leftover attempt output: counted, it would
+      // change the event_id % n join modulus
+      val part = Files.list(Paths.get(s"$dir/documents.parquet/part=0"))
+        .filter(_.getFileName.toString.endsWith(".parquet")).findFirst.get
+      val stray = Paths.get(s"$dir/documents.parquet/_temporary/0/part-00000-stray.parquet")
+      Files.createDirectories(stray.getParent)
+      Files.copy(part, stray)
+      val t = Transcripts(spark, dir)
+      val base = Transcripts(spark, src)
+      assert(t.exceptAll(base).count() === 0)
+      assert(base.exceptAll(t).count() === 0)
+    } finally Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.delete(p))
   }
 }
