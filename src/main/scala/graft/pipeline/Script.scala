@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, lit}
 import graft.Checkpoints.TruncateOps
 
@@ -94,6 +95,15 @@ object Script {
         .toDF("graph", "subj", "pred", "obj"))
   }
 
+  /** Partition count of a checkpointed frame, read from its RDD without
+    * running a job; 0 for any other plan (or an empty checkpoint).
+    */
+  private def checkpointedPartitions(ds: DataFrame): Int =
+    ds.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.getNumPartitions
+      case _ => 0
+    }
+
   /** Execute ONE script statement against the current dataset state.
     * Returns the new state and, for query statements, the output frame —
     * the single execution step [[runSparql]] folds and the integrate CLI
@@ -130,7 +140,14 @@ object Script {
         (ckpt(ds.unionByName(
           g.fold(loaded)(gi => loaded.withColumn("graph", lit(gi))))), None)
       case InsertDataStmt(rows) =>
-        (ckpt(ds.unionByName(quadsDf(rows))), None)
+        // the constant rows are bounded by the statement text: merge them
+        // into the existing partitions (narrow, no shuffle) so a server
+        // taking many small inserts keeps its partition count, and with it
+        // the number of tasks every later query pays. LOAD / INSERT…WHERE /
+        // Modify add data-sized sides and keep the plain union.
+        val merged = ds.unionByName(quadsDf(rows))
+        val n = checkpointedPartitions(ds)
+        (ckpt(if (n > 0) merged.coalesce(n) else merged), None)
       case DeleteDataStmt(rows) =>
         (ckpt(anti(ds, quadsDf(rows))), None) // constant side: broadcast anti
       case InsertWhereStmt(q) =>

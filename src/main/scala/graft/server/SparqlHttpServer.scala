@@ -7,7 +7,7 @@ import java.util.concurrent.Executors
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.RdfTerms
@@ -44,11 +44,11 @@ import graft.sources.RdfIO
   * Spark-first scale shape: result SERIALIZATION is distributed — each
   * binding row becomes its SRJ/SRX/TSV fragment via codegen'd column
   * expressions (`to_json` handles all JSON escaping) on executors; the
-  * driver streams fragments to the socket via `toLocalIterator` (one
-  * partition pinned at a time, never a full collect). On a cluster the
+  * driver streams fragments to the socket through [[DriverStream]]
+  * (rows in partition order, never a full collect). On a cluster the
   * same frames would ship through any distributed sink unchanged; the
-  * single-socket hop is inherent to serving one HTTP response, exactly
-  * as in the reference.
+  * single-socket hop is inherent to serving one HTTP response, exactly as
+  * in the reference.
   */
 final class SparqlHttpServer private (
     spark: SparkSession,
@@ -128,13 +128,19 @@ final class SparqlHttpServer private (
           // tolerated: the reference parses both through one statement
           // parser too; a query sent as update= simply executes as such
         }
+        // the HTTP threads are pooled: the description is cleared in
+        // `finally` so it never tags the next request's jobs
+        val sc = spark.sparkContext
+        val kind = if (hasUpdate) "update" else "query"
+        sc.setJobDescription(
+          s"sparql $kind: ${text.trim.replaceAll("\\s+", " ").take(60)}")
         try {
           val accept = Option(ex.getRequestHeaders.getFirst("Accept"))
             .getOrElse("")
           if (hasUpdate) {
             // the lock covers ONLY statement application + the state
             // swap; the HTTP response streams AFTER release (frames are
-            // immutable snapshots) — holding it across toLocalIterator
+            // immutable snapshots) — holding it across the result stream
             // plus socket writes would let one slow client starve every
             // other update (review-found)
             val last = updateLock.synchronized {
@@ -169,7 +175,7 @@ final class SparqlHttpServer private (
         } catch { case e: Exception =>
           respond(ex, 500, "text/plain",
             s"execution error: ${e.getMessage}")
-        }
+        } finally sc.setJobDescription(null)
     }
   }
 
@@ -252,11 +258,11 @@ final class SparqlHttpServer private (
 
   private def streamBody(ex: HttpExchange, code: Int, mime: String)(
       body: BodyStream): Unit = {
-    // Force the FIRST partition before committing to 200/chunked: a
-    // planning error or a first-task failure answers a clean 500 instead
-    // of a truncated-but-valid-looking 200 (review-found). A failure in a
-    // LATER partition still truncates mid-stream — inherent to chunked
-    // HTTP once headers are out; the driver logs it either way.
+    // Force the FIRST wave before committing to 200/chunked: a planning
+    // error or a first-wave task failure answers a clean 500 instead of a
+    // truncated-but-valid-looking 200. A failure in a LATER wave still
+    // truncates mid-stream — inherent to chunked HTTP once headers are
+    // out; the driver logs it either way.
     body.lines.hasNext
     ex.getResponseHeaders.set("Content-Type", s"$mime; charset=utf-8")
     ex.sendResponseHeaders(code, 0) // 0 = chunked
@@ -273,22 +279,9 @@ final class SparqlHttpServer private (
     } finally { os.close(); ex.close() }
   }
 
-  /** One-string-column frame → driver-streamed line iterator. */
-  private def lineIterator(lines: DataFrame): Iterator[String] = {
-    val it = lines.toLocalIterator()
-    new Iterator[String] {
-      private var nextLine: String = advance()
-      private def advance(): String = {
-        while (it.hasNext) {
-          val r = it.next()
-          if (!r.isNullAt(0)) return r.getString(0)
-        }
-        null
-      }
-      def hasNext: Boolean = nextLine != null
-      def next(): String = { val l = nextLine; nextLine = advance(); l }
-    }
-  }
+  /** One-string-column frame → driver-streamed lines (nulls skipped). */
+  private def lineIterator(lines: DataFrame): Iterator[String] =
+    DriverStream.lines(lines.as(Encoders.STRING).rdd).filter(_ != null)
 
   private def srjBody(df: DataFrame): BodyStream = {
     val vars = df.columns.toSeq

@@ -174,4 +174,32 @@ class ScriptSpec extends AnyFunSuite {
       ("<http://qrowd-project.eu/resource/stop-TRENTO_NORD>",
         "Trento Nord")))
   }
+
+  test("INSERT DATA keeps a checkpointed dataset's partition count; " +
+      "alternating INSERT/DELETE DATA leave the expected quads") {
+    val D = "<urn:x-arq:DefaultGraph>"
+    val base = (1 to 6).map(i => (D, s"<urn:b$i>", "<urn:p>", s"\"$i\""))
+    val initial = base.toDF("graph", "subj", "pred", "obj")
+      .repartition(3).localCheckpoint()
+    // 20 statements: insert n_i, then delete n_i for even i only (odd i
+    // delete a quad that is not there)
+    val script = (0 until 10).flatMap { i =>
+      val q = s"<urn:n$i> <urn:p> \"v$i\" ."
+      val del = if (i % 2 == 0) q else "<urn:none> <urn:p> \"x\" ."
+      Seq(s"INSERT DATA { $q }", s"DELETE DATA { $del }")
+    }.mkString(" ;\n")
+    val ds = Script.runSparql(spark, script, Some(initial)).dataset
+    assert(ds.rdd.getNumPartitions === 3)
+    val expected = base ++ (1 until 10 by 2).map(i =>
+      (D, s"<urn:n$i>", "<urn:p>", s"\"v$i\""))
+    assert(ds.as[(String, String, String, String)].collect().sorted.toSeq ===
+      expected.sorted)
+  }
+
+  test("INSERT DATA into the empty (0-partition) dataset yields its rows") {
+    val ds = Script.runSparql(spark,
+      "INSERT DATA { <urn:a> <urn:p> \"1\" . <urn:b> <urn:p> \"2\" . }").dataset
+    assert(ds.select("subj").as[String].collect().sorted.toSeq ===
+      Seq("<urn:a>", "<urn:b>"))
+  }
 }

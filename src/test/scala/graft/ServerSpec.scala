@@ -3,7 +3,12 @@ package graft
 import java.net.URLEncoder
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.server.SparqlHttpServer
@@ -31,8 +36,9 @@ class ServerSpec extends AnyFunSuite {
   }
 
   private def withServer[A](readOnly: Boolean = false,
-      unsafe: Boolean = false)(body: (String, SparqlHttpServer) => A): A = {
-    val srv = SparqlHttpServer.start(spark, fixture(), port = 0,
+      unsafe: Boolean = false, data: => DataFrame = fixture())(
+      body: (String, SparqlHttpServer) => A): A = {
+    val srv = SparqlHttpServer.start(spark, data, port = 0,
       readOnly = readOnly, unsafe = unsafe)
     try body(s"http://127.0.0.1:${srv.port}", srv) finally srv.stop()
   }
@@ -246,5 +252,92 @@ class ServerSpec extends AnyFunSuite {
       assert(body.contains(""""s":{"type":"uri","value":"urn:a"}"""))
       assert(!body.contains("\"m\":"), body)
     } finally srv.stop()
+  }
+
+  /** Runs `body`; returns its result and the description of every Spark
+    * job started meanwhile ("null" for none).
+    */
+  private def jobsDuring[A](body: => A): (A, Seq[String]) = {
+    val sc = spark.sparkContext
+    val marker = s"marker-${System.nanoTime}"
+    val seen = new CountDownLatch(1)
+    val descs = new ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val d = Option(e.properties)
+          .map(_.getProperty("spark.job.description")).orNull
+        if (d == marker) seen.countDown() else descs.add(String.valueOf(d))
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      val a = body
+      // the bus delivers events in order: once the marker job's start
+      // arrives, every job `body` ran has been seen
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(60, TimeUnit.SECONDS))
+      (a, descs.asScala.toSeq)
+    } finally sc.removeSparkListener(l)
+  }
+
+  private def spread(df: DataFrame, parts: Int): DataFrame =
+    df.repartition(parts).localCheckpoint()
+
+  test("ORDER BY keeps its order across waves of partitions, as TSV and " +
+    "as SRJ") {
+    import spark.implicits._
+    val dp = spark.sparkContext.defaultParallelism
+    val ids = new scala.util.Random(7).shuffle((1 to 60).toList)
+    val data = ids.map(i => ("<urn:g>", f"<urn:s$i%03d>", "<urn:v>", "\"x\""))
+      .toDF("graph", "subj", "pred", "obj")
+    val expected = (60 to 1 by -1).map(i => f"urn:s$i%03d")
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    // keep the sorted result spread over 3 x defaultParallelism partitions
+    spark.conf.set(keys(0), (3 * dp).toString)
+    spark.conf.set(keys(1), "false")
+    try withServer(data = spread(data, 3 * dp)) { (base, _) =>
+      val q = enc("SELECT ?s WHERE { ?s <urn:v> ?o } ORDER BY DESC(?s)")
+      val (c1, tsv, _) = get(s"$base/sparql?query=$q",
+        accept = "text/tab-separated-values")
+      assert(c1 == 200)
+      assert(tsv.trim.split("\n").toSeq ===
+        ("?s" +: expected.map(s => s"<$s>")))
+      val (c2, srj, _) = get(s"$base/sparql?query=$q")
+      assert(c2 == 200)
+      assert(""""value":"(urn:s\d+)"""".r.findAllMatchIn(srj)
+        .map(_.group(1)).toSeq === expected)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("a point lookup runs one job per wave of defaultParallelism " +
+    "partitions, named after the request; the name does not leak") {
+    val dp = spark.sparkContext.defaultParallelism
+    val p = 3 * dp
+    withServer(data = spread(fixture(), p)) { (base, _) =>
+      val q = "SELECT ?p ?o WHERE { <urn:a> ?p ?o }"
+      // the server's first four requests run on four fresh pool threads
+      (1 to 4).foreach { _ =>
+        val ((code, body, _), descs) =
+          jobsDuring(get(s"$base/sparql?query=${enc(q)}",
+            accept = "text/tab-separated-values"))
+        assert(code == 200 && body.trim.split("\n").length == 3, body)
+        assert(descs.nonEmpty && descs.length <= (p + dp - 1) / dp, descs)
+        assert(descs.forall(_ == s"sparql query: $q"), descs)
+      }
+      // GraphQL requests reuse those threads; their jobs carry no
+      // leftover SPARQL description
+      val gq = "{ thing @pattern(of: \"?s <urn:p> ?o\", from: \"s\", " +
+        "to: \"s\") { id @bind(of: \"?s\") } }"
+      val (_, descs) = jobsDuring((1 to 4).foreach { _ =>
+        assert(post(s"$base/graphql", "application/graphql", gq)._1 == 200)
+      })
+      assert(descs.nonEmpty && !descs.exists(_.startsWith("sparql")), descs)
+    }
   }
 }
