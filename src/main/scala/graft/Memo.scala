@@ -4,6 +4,9 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 
 /** The engine's one memo for values derived from input files: dimension
@@ -86,6 +89,29 @@ object Memo {
       }.flatMap(walk)
     try walk(fs.getFileStatus(p))
     catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  /** Rows of the parquet table at `root`, summed on the driver from the
+    * footers of exactly the files Spark's scan reads ([[leafFiles]]): zero
+    * Spark jobs. Footers open with plain read options: with the
+    * conf-derived defaults of `ParquetFileReader.open(InputFile)`, 58
+    * footers took 0.55–0.63 s on a 4-core Xeon VM, against 27–35 ms.
+    * Any layout the footer probe can't handle falls back to the one-job
+    * `count()` (same number), noted on stderr.
+    */
+  def parquetRowCount(spark: SparkSession, root: String): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    val options = ParquetReadOptions.builder().build()
+    try {
+      leafFiles(conf, root).map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf), options)
+        try r.getRecordCount finally r.close()
+      }.sum
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[memo] footer count of $root fell back to count(): $e")
+        spark.read.parquet(root).count()
+    }
   }
 
   private def fingerprint(conf: Configuration, roots: Seq[String]): Fingerprint =

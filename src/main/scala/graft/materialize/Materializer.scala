@@ -2,6 +2,7 @@ package graft.materialize
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Paths}
 
 /** Graph materializer: deduplicated triples written as named-graph-bucketed
@@ -31,14 +32,28 @@ import java.nio.file.{Files, Paths}
   *    function of the input, so recomputed buckets are identical
   *    (determinism under retries — SURVEY.md §7.2.7). On object stores
   *    without atomic rename, swap phase 2 for a committer/Iceberg commit.
+  *  - layout: `bucketed` ends in a REBALANCE on the bucket, so AQE keeps
+  *    each bucket in one task and the partitioned write leaves one file
+  *    per bucket directory; only a bucket larger than the advisory
+  *    partition size is split, so write parallelism is not capped at
+  *    nBuckets.
   *  - lineage/metrics: a `_metrics` table with per-bucket triple counts +
-  *    distinct graphs, written after data, read back by `verifyCounts`.
+  *    distinct graphs, written after data. A commit never reads back the
+  *    store it just wrote: the metrics come from the bucketed frame phase 1
+  *    staged (persisted until they are written, already clustered by
+  *    bucket, so the groupBy adds no exchange). A recomputing resume takes
+  *    them from the FULL frame, not the unmarked subset it stages — this
+  *    relies on the deterministic recompute the resume protocol assumes.
+  *    Only a resume that skips phase 1 reads the committed store for them.
+  *    `verifyCounts` compares those totals with the rows in the committed
+  *    files' parquet footers — computed against committed, no Spark job.
   */
 object Materializer {
 
   def bucketed(triples: DataFrame, nBuckets: Int): DataFrame =
     triples.distinct()
       .withColumn("bucket", pmod(xxhash64(col("graph")), lit(nBuckets)).cast("int"))
+      .hint("rebalance", col("bucket"))
 
   private def manifestJson(nBuckets: Int): String = s"""{"nBuckets":$nBuckets}"""
 
@@ -73,38 +88,43 @@ object Materializer {
 
     // Phase 1 — stage every unmarked bucket (skipped entirely when a
     // previous run crashed after staging: the input is not recomputed).
-    if (done.size < nBuckets && !stagingComplete) {
-      val data = bucketed(triples, nBuckets)
-      val todo =
-        if (done.isEmpty) data
-        else data.filter(!col("bucket").isin(done.toSeq: _*))
-      // subject-clustered layout inside each bucket: parquet min/max
-      // stats on subj prune star-join scans (the reference's
-      // sorted-ntriples binary-search idea — SansaQueryRewrite.java:4-7)
-      todo.sortWithinPartitions(col("bucket"), col("subj"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("bucket").parquet(staging.toString)
-    }
-
-    // Phase 2 — per-bucket atomic rename + marker.
-    Files.createDirectories(root.resolve("triples"))
-    (0 until nBuckets).filterNot(done).foreach { b =>
-      val src = staging.resolve(s"bucket=$b")
-      val dst = root.resolve(s"triples/bucket=$b")
-      if (Files.exists(src)) {
-        deleteRec(dst) // stale partial from a pre-staging crash
-        Files.move(src, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    val staged =
+      if (done.size < nBuckets && !stagingComplete)
+        Some(bucketed(triples, nBuckets).persist(StorageLevel.MEMORY_AND_DISK))
+      else None
+    try {
+      staged.foreach { data =>
+        val todo =
+          if (done.isEmpty) data
+          else data.filter(!col("bucket").isin(done.toSeq: _*))
+        // subject-clustered layout inside each bucket: parquet min/max
+        // stats on subj prune star-join scans (the reference's
+        // sorted-ntriples binary-search idea — SansaQueryRewrite.java:4-7)
+        todo.sortWithinPartitions(col("bucket"), col("subj"))
+          .write.mode(SaveMode.Overwrite)
+          .partitionBy("bucket").parquet(staging.toString)
       }
-      // else: empty bucket, or moved by a run that crashed before its
-      // marker — dst (if present) is complete because moves are atomic
-      Files.write(root.resolve(s"_bucket_$b.done"), Array.emptyByteArray)
-    }
-    deleteRec(staging)
-    val metrics = spark.read.parquet(s"$outDir/triples")
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_triples"),
-        countDistinct(col("graph")).as("n_graphs"))
-    metrics.write.mode(SaveMode.Overwrite).parquet(s"$outDir/_metrics")
+
+      // Phase 2 — per-bucket atomic rename + marker.
+      Files.createDirectories(root.resolve("triples"))
+      (0 until nBuckets).filterNot(done).foreach { b =>
+        val src = staging.resolve(s"bucket=$b")
+        val dst = root.resolve(s"triples/bucket=$b")
+        if (Files.exists(src)) {
+          deleteRec(dst) // stale partial from a pre-staging crash
+          Files.move(src, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        }
+        // else: empty bucket, or moved by a run that crashed before its
+        // marker — dst (if present) is complete because moves are atomic
+        Files.write(root.resolve(s"_bucket_$b.done"), Array.emptyByteArray)
+      }
+      deleteRec(staging)
+      staged.getOrElse(spark.read.parquet(s"$outDir/triples"))
+        .groupBy(col("bucket"))
+        .agg(count(lit(1)).as("n_triples"),
+          countDistinct(col("graph")).as("n_graphs"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/_metrics")
+    } finally staged.foreach(_.unpersist())
   }
 
   /** Split output: one independent sink per rule group / provenance
@@ -143,12 +163,14 @@ object Materializer {
         col("graph") === graphIri)
   }
 
-  /** Lineage check: metrics table totals must equal the data itself. */
+  /** Lineage check: the metrics table's total (the rows the commit
+    * computed) must equal the rows committed, counted from the parquet
+    * footers of the files a scan of `triples/` reads — no Spark job there.
+    */
   def verifyCounts(spark: SparkSession, outDir: String): Boolean = {
-    val data = spark.read.parquet(s"$outDir/triples")
     val m = spark.read.parquet(s"$outDir/_metrics")
     val total = m.agg(sum("n_triples")).head.getLong(0)
-    total == data.count()
+    total == graft.Memo.parquetRowCount(spark, s"$outDir/triples")
   }
 
   /** Serialize a triple DF to N-Quads lines (quad sink equivalent). */

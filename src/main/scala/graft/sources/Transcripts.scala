@@ -25,29 +25,14 @@ object Transcripts {
 
   /** Cheap metadata-scale count of the dimension table (broadcast side),
     * memoized per session and sfDir while its files stay the same. Read
-    * straight from the parquet FOOTERS on the driver (row counts are file
-    * metadata) — zero Spark jobs, vs. the count() job this replaced. The
-    * files are the ones Spark's scan reads ([[graft.Memo.leafFiles]]): a
-    * stray `_temporary/` part would otherwise change the join modulus.
+    * from the parquet footers ([[graft.Memo.parquetRowCount]]) of the
+    * files Spark's scan reads: a stray `_temporary/` part would otherwise
+    * change the join modulus.
     */
   private def docCount(spark: SparkSession, sfDir: String): Long = {
     val docs = s"$sfDir/documents.parquet"
     graft.Memo(spark, s"transcripts.docCount:$sfDir", Seq(docs)) {
-      val conf = spark.sessionState.newHadoopConf()
-      try {
-        graft.Memo.leafFiles(conf, docs).map { f =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-          try r.getRecordCount finally r.close()
-        }.sum
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          // any layout the footer probe can't handle falls back to the
-          // universal one-job count this probe replaced (same number)
-          System.err.println(
-            s"[transcripts] footer count fell back to count(): $e")
-          spark.read.parquet(docs).count()
-      }
+      graft.Memo.parquetRowCount(spark, docs)
     }
   }
 

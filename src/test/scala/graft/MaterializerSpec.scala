@@ -1,10 +1,15 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import graft.materialize.Materializer
 import graft.pipeline.Kg
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 
 class MaterializerSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -12,6 +17,63 @@ class MaterializerSpec extends AnyFunSuite {
 
   private def tmp(): String =
     Files.createTempDirectory("graft-mat").toString
+
+  private def parquetFiles(dir: Path): Seq[Path] =
+    Files.list(dir).iterator.asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+
+  private def bucketDirs(out: String): Seq[Path] =
+    Files.list(Paths.get(s"$out/triples")).iterator.asScala
+      .filter(_.getFileName.toString.startsWith("bucket=")).toSeq
+
+  /** `_metrics` equals the per-bucket counts of the committed store, and
+    * every committed bucket is one parquet file.
+    */
+  private def assertCommitted(out: String): Unit = {
+    val m = spark.read.parquet(s"$out/_metrics")
+    val store = spark.read.parquet(s"$out/triples").groupBy(col("bucket"))
+      .agg(count(lit(1)).as("n_triples"),
+        countDistinct(col("graph")).as("n_graphs"))
+      .select(m.columns.map(col): _*)
+    assert(m.exceptAll(store).isEmpty && store.exceptAll(m).isEmpty)
+    val dirs = bucketDirs(out)
+    assert(dirs.nonEmpty)
+    dirs.foreach(d => assert(parquetFiles(d).size === 1, d))
+  }
+
+  /** Physical plans of the SQL executions `body` started. */
+  private def plansDuring(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val marker = s"marker-${System.nanoTime}"
+    val seen = new CountDownLatch(1)
+    val plans = new ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).map(_.getProperty("spark.job.description"))
+            .contains(marker)) seen.countDown()
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      // the bus delivers events in order: once the marker job's start
+      // arrives, every execution `body` started has been seen
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(60, TimeUnit.SECONDS))
+      plans.asScala.toSeq
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** A one-row input whose every column throws when evaluated. */
+  private def poisoned(msg: String) = {
+    val poison = raise_error(lit(msg)).cast("string")
+    spark.range(1).select(poison.as("subj"), poison.as("pred"),
+      poison.as("obj"), poison.as("graph"))
+  }
 
   test("write dedups, buckets cover all graphs, metrics match data") {
     val out = tmp()
@@ -22,6 +84,7 @@ class MaterializerSpec extends AnyFunSuite {
     assert(back.count() === triples.distinct().count())
     assert(back.select("bucket").distinct().count() <= 8)
     assert(Materializer.verifyCounts(spark, out))
+    assertCommitted(out)
     // deterministic under rewrite (retry-safety)
     val out2 = tmp()
     Materializer.write(triples, out2, nBuckets = 8)
@@ -48,6 +111,8 @@ class MaterializerSpec extends AnyFunSuite {
     Materializer.write(triples, out, nBuckets = 4, resume = true)
     assert(spark.read.parquet(s"$out/triples").count() === full)
     assert(Materializer.verifyCounts(spark, out))
+    // metrics cover every bucket, not only the recomputed one
+    assertCommitted(out)
   }
 
   test("crash-resume: staged buckets are moved, never recomputed; no dups") {
@@ -71,10 +136,8 @@ class MaterializerSpec extends AnyFunSuite {
 
     // resume with a POISONED input — evaluating any row throws, proving
     // phase 1 never recomputes once staging is complete
-    val poison = raise_error(lit("phase 1 must not recompute")).cast("string")
-    val poisoned = spark.range(1).select(poison.as("subj"), poison.as("pred"),
-      poison.as("obj"), poison.as("graph"))
-    Materializer.write(poisoned, out, nBuckets = 4, resume = true)
+    Materializer.write(poisoned("phase 1 must not recompute"), out,
+      nBuckets = 4, resume = true)
 
     val back = spark.read.parquet(s"$out/triples")
     assert(back.count() === expected.count())
@@ -82,6 +145,59 @@ class MaterializerSpec extends AnyFunSuite {
     assert(expected.exceptAll(back).count() === 0)
     assert((0 until 4).forall(b => Files.exists(Paths.get(s"$out/_bucket_$b.done"))))
     assert(Materializer.verifyCounts(spark, out))
+    assertCommitted(out)
+  }
+
+  test("a fresh or recomputing write and verifyCounts never scan the " +
+    "committed store") {
+    val out = tmp()
+    val triples = Kg.canonicalTriples(spark, TestSpark.sf0001).cache()
+    val store = s"$out/triples"
+    val fresh = plansDuring {
+      Materializer.write(triples, out, nBuckets = 4)
+      assert(Materializer.verifyCounts(spark, out))
+    }
+    assert(fresh.nonEmpty && !fresh.exists(_.contains(store)), fresh)
+    Files.delete(Paths.get(s"$out/_bucket_1.done"))
+    val resumed = plansDuring {
+      Materializer.write(triples, out, nBuckets = 4, resume = true)
+      assert(Materializer.verifyCounts(spark, out))
+    }
+    assert(resumed.nonEmpty && !resumed.exists(_.contains(store)), resumed)
+  }
+
+  test("verifyCounts fails on an appended row or a lost bucket file, and " +
+    "ignores a stray _temporary part") {
+    val triples = Kg.canonicalTriples(spark, TestSpark.sf0001).cache()
+    val out = tmp()
+    Materializer.write(triples, out, nBuckets = 4)
+    val bucket = bucketDirs(out).head
+    val stray = Paths.get(s"$out/triples/_temporary/0")
+    Files.createDirectories(stray)
+    Files.copy(parquetFiles(bucket).head, stray.resolve("part-00000-stray.parquet"))
+    assert(Materializer.verifyCounts(spark, out))
+    Seq(("<urn:x>", "<urn:x>", "<urn:x>", "<urn:x>"))
+      .toDF("graph", "subj", "pred", "obj")
+      .write.mode("append").parquet(bucket.toString)
+    assert(!Materializer.verifyCounts(spark, out))
+
+    val out2 = tmp()
+    Materializer.write(triples, out2, nBuckets = 4)
+    assert(Materializer.verifyCounts(spark, out2))
+    Files.delete(parquetFiles(bucketDirs(out2).head).head)
+    assert(!Materializer.verifyCounts(spark, out2))
+  }
+
+  test("write leaves no persisted frame behind, also when staging throws") {
+    val sc = spark.sparkContext
+    val triples = Kg.canonicalTriples(spark, TestSpark.sf0001)
+    val before = sc.getPersistentRDDs.size
+    Materializer.write(triples, tmp(), nBuckets = 4)
+    assert(sc.getPersistentRDDs.size === before)
+    intercept[Exception] {
+      Materializer.write(poisoned("staging fails"), tmp(), nBuckets = 4)
+    }
+    assert(sc.getPersistentRDDs.size === before)
   }
 
   test("resume with a different nBuckets fails loudly") {

@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Paired benchmark comparison of two checkouts.
 #
-# usage: tools/bench_pairs.sh PARENT_DIR CHANGE_DIR WORKLOAD N FIRST_SEED [SECONDS]
+# usage: tools/bench_pairs.sh PARENT_DIR CHANGE_DIR WORKLOAD N FIRST_SEED [SECONDS [TRACE_SEED]]
 #
 # Runs N pairs of `python3 perfbench/run.py --workload WORKLOAD --seed S
 # --seconds SECONDS --trace 0`, one in each checkout, with seeds FIRST_SEED,
@@ -17,11 +17,14 @@
 #   worse       median worse than the parent's by more than the bound
 #   unresolved  the parent's own IQR/median exceeds the bound, unless every
 #               change run reads better than every parent run
-# plus correct/attempted/failed per run. Run nothing else meanwhile.
+# plus correct/attempted/failed per run. With TRACE_SEED, it then runs one
+# `--trace 1` per side on that seed and prints every `*.jobs`, `*.busy_s`,
+# `*.shuffle_write_bytes` and `sink.bytes_written` side by side (lines also
+# appended to $BENCH_PAIRS_OUT). Run nothing else meanwhile.
 set -euo pipefail
 
 if [ $# -lt 5 ]; then
-  sed -n '2,20p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,23p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 parent=$(cd "$1" && pwd)
@@ -31,18 +34,20 @@ n=$4
 seed0=$5
 seconds=${6:-$(python3 -c 'import json,sys; print(json.load(open(sys.argv[1]))["run_seconds"])' \
   "$change/BENCHMARK.json")}
+trace_seed=${7:-}
 out=${BENCH_PAIRS_OUT:-$(mktemp "${TMPDIR:-/tmp}/bench_pairs.XXXXXX")}
 
-run_one() {  # side dir seed
-  local line
+run_one() {  # side dir seed [trace]
+  local line trace=${4:-0}
   line=$(cd "$2" && python3 perfbench/run.py --workload "$workload" --seed "$3" \
-    --seconds "$seconds" --trace 0 2>/dev/null | tail -n 1) || true
+    --seconds "$seconds" --trace "$trace" 2>/dev/null | tail -n 1) || true
   case $line in
     "{"*) ;;
     *) line='{"correct": false, "attempted": 0, "failed": 0, "metrics": {}}' ;;
   esac
-  printf '{"side": "%s", "seed": %s, "result": %s}\n' "$1" "$3" "$line" >> "$out"
-  echo "[bench_pairs] $workload seed $3 $1 done" >&2
+  printf '{"side": "%s", "seed": %s, "trace": %s, "result": %s}\n' \
+    "$1" "$3" "$trace" "$line" >> "$out"
+  echo "[bench_pairs] $workload seed $3 trace $trace $1 done" >&2
 }
 
 for ((i = 0; i < n; i++)); do
@@ -53,16 +58,23 @@ for ((i = 0; i < n; i++)); do
     run_one change "$change" "$s"; run_one parent "$parent" "$s"
   fi
 done
+if [ -n "$trace_seed" ]; then
+  run_one parent "$parent" "$trace_seed" 1; run_one change "$change" "$trace_seed" 1
+fi
 
-python3 - "$out" "$change/BENCHMARK.json" "$workload" <<'EOF'
+python3 - "$out" "$change/BENCHMARK.json" "$workload" "$trace_seed" <<'EOF'
 import json, statistics, sys
 
 rows = [json.loads(l) for l in open(sys.argv[1]) if l.strip()]
 spec = json.load(open(sys.argv[2]))
 workload = sys.argv[3]
 runs = {"parent": {}, "change": {}}
+traced = {}
 for r in rows:
-    runs[r["side"]][r["seed"]] = r["result"]
+    if r.get("trace", 0):
+        traced[r["side"]] = r["result"]
+    else:
+        runs[r["side"]][r["seed"]] = r["result"]
 seeds = sorted(set(runs["parent"]) | set(runs["change"]))
 if not seeds:
     sys.exit(f"workload {workload}: no runs recorded")
@@ -122,5 +134,19 @@ for m in spec["end_to_end"]:
                else "within bound")
     print(f"  change wins {wins}/{n} (loses {losses}); median gap {gap:+.6g} "
           f"({rel:+.1%}); parent IQR {p3 - p1:.6g} ({spread:.1%} of median) -> {verdict}")
+
+if traced:
+    print("\ntraced run (--trace 1), seed " + sys.argv[4] + ": parent -> change")
+    for side in ("parent", "change"):
+        r = traced.get(side, {"correct": False, "attempted": 0, "failed": 0})
+        print(f"  {side}: correct/attempted/failed {int(r['correct'])}/{r['attempted']}/{r['failed']}")
+    names = [m["name"] for m in spec["per_layer"]
+             if m["name"].endswith((".jobs", ".busy_s", ".shuffle_write_bytes"))
+             or m["name"] == "sink.bytes_written"]
+    fmt = lambda v: "-" if v is None else f"{v:.6g}"
+    for name in names:
+        p, c = (traced.get(side, {}).get("metrics", {}).get(name, {}).get("value")
+                for side in ("parent", "change"))
+        print(f"  {name:<28} {fmt(p):>12} -> {fmt(c)}")
 EOF
 echo "[bench_pairs] results: $out" >&2
