@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, lit}
 import graft.Checkpoints.TruncateOps
 
@@ -59,12 +58,15 @@ object Script {
     * mutate one quad dataset in statement order; CONSTRUCT/SELECT
     * statements query the state as of their position.
     *
-    * Spark-first: the dataset is a quad DataFrame; every update
+    * Spark-first: the dataset is a quad DataFrame. `INSERT DATA` and
+    * `DELETE DATA` fold into a bounded delta over the last checkpoint
+    * without running a job ([[QuadDelta]]); every other update
     * materializes eagerly (`localCheckpoint` — the reference applies
     * updates eagerly too, SparqlIntegrateCmdImpls.java:363-379; swap for
     * a reliable checkpoint / staged Iceberg table on a cluster so the
-    * state survives executor loss). DELETEs are anti-joins on the quad
-    * key, never row-at-a-time.
+    * state survives executor loss), and so does a DATA statement whose
+    * delta would pass its bound. DELETEs are anti-joins on the quad key,
+    * never row-at-a-time.
     */
   def runSparql(spark: SparkSession, text: String,
       initial: Option[DataFrame] = None): SparqlRun = {
@@ -95,15 +97,6 @@ object Script {
         .toDF("graph", "subj", "pred", "obj"))
   }
 
-  /** Partition count of a checkpointed frame, read from its RDD without
-    * running a job; 0 for any other plan (or an empty checkpoint).
-    */
-  private def checkpointedPartitions(ds: DataFrame): Int =
-    ds.queryExecution.logical match {
-      case r: LogicalRDD => r.rdd.getNumPartitions
-      case _ => 0
-    }
-
   /** Execute ONE script statement against the current dataset state.
     * Returns the new state and, for query statements, the output frame —
     * the single execution step [[runSparql]] folds and the integrate CLI
@@ -123,6 +116,17 @@ object Script {
     def ckpt(df: DataFrame): DataFrame = df.truncateLineage(true)
 
     val ds = dsIn
+    // DATA statements fold into a delta over the checkpointed dataset
+    // without a job; an uncheckpointed or 0-partition dataset, or a delta
+    // past its bound, takes the relational form and a checkpoint, which
+    // starts a fresh delta. Either way a quad the statement names is
+    // there at most once afterwards.
+    def data(rows: Seq[QuadDelta.Quad], insert: Boolean): DataFrame =
+      QuadDelta.fold(ds, rows, insert).getOrElse {
+        val named = quadsDf(rows.distinct) // constant side: broadcast anti
+        ckpt(if (insert) anti(ds, named).unionByName(named)
+          else anti(ds, named))
+      }
     // a query whose WHERE has no triple patterns evaluates over the UNIT
     // solution (SPARQL §18.2's Z = {μ0}; e.g. example.sparql's url:text +
     // json:unnest chain) — the quad table would wrongly multiply (or, if
@@ -139,17 +143,8 @@ object Script {
           graft.rules.ConstructParser.resolveFileIri(path))
         (ckpt(ds.unionByName(
           g.fold(loaded)(gi => loaded.withColumn("graph", lit(gi))))), None)
-      case InsertDataStmt(rows) =>
-        // the constant rows are bounded by the statement text: merge them
-        // into the existing partitions (narrow, no shuffle) so a server
-        // taking many small inserts keeps its partition count, and with it
-        // the number of tasks every later query pays. LOAD / INSERT…WHERE /
-        // Modify add data-sized sides and keep the plain union.
-        val merged = ds.unionByName(quadsDf(rows))
-        val n = checkpointedPartitions(ds)
-        (ckpt(if (n > 0) merged.coalesce(n) else merged), None)
-      case DeleteDataStmt(rows) =>
-        (ckpt(anti(ds, quadsDf(rows))), None) // constant side: broadcast anti
+      case InsertDataStmt(rows) => (data(rows, insert = true), None)
+      case DeleteDataStmt(rows) => (data(rows, insert = false), None)
       case InsertWhereStmt(q) =>
         (ckpt(ds.unionByName(
           q.run(seedC(q)).select(QuadCols.map(col): _*))), None)

@@ -7,7 +7,7 @@ import java.util.concurrent.Executors
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.RdfTerms
@@ -34,7 +34,9 @@ import graft.sources.RdfIO
   *  - content negotiation on `Accept`: bindings as SPARQL-results JSON
   *    (default) / XML / TSV; quads as N-Quads (default) / TriG
   *  - updates run the same [[Script.applyStmt]] statements the CLI runs
-  *    and respond 204; `--read-only` rejects them with 403 (the
+  *    and respond 204; they are accepted only by POST (`update=` or
+  *    `application/sparql-update`), an update sent as a query answers
+  *    400; `--read-only` rejects them with 403 (the
   *    reference wraps the connection query-only); `LOAD` from a server
   *    request additionally requires `--unsafe` (the reference gates
   *    file-reading features behind the same flag)
@@ -113,6 +115,14 @@ final class SparqlHttpServer private (
             return
           }
         val hasUpdate = stmts.exists(!isQueryStmt(_))
+        // SPARQL 1.1 Protocol §2.2: updates travel only by POST, as
+        // update= or application/sparql-update; a query sent as update=
+        // is tolerated and runs as a query
+        if (hasUpdate && !isUpdateIntent) {
+          respond(ex, 400, "text/plain", "update statements must be " +
+            "POSTed as update= or application/sparql-update")
+          return
+        }
         if (hasUpdate && readOnly) {
           respond(ex, 403, "text/plain",
             "server is read-only (--read-only); updates are disabled")
@@ -123,10 +133,6 @@ final class SparqlHttpServer private (
           respond(ex, 403, "text/plain",
             "LOAD over the protocol requires --unsafe (file access)")
           return
-        }
-        if (isUpdateIntent && !hasUpdate && stmts.nonEmpty) {
-          // tolerated: the reference parses both through one statement
-          // parser too; a query sent as update= simply executes as such
         }
         // the HTTP threads are pooled: the description is cleared in
         // `finally` so it never tags the next request's jobs
@@ -182,7 +188,10 @@ final class SparqlHttpServer private (
   private def writeOutput(ex: HttpExchange, out: Script.StmtOutput,
       accept: String): Unit = out match {
     case Script.TableOutput(df) if isAskFrame(df) =>
-      val b = df.head.getBoolean(0)
+      // read through the same stream as every body: `head` would be one
+      // more SQL action
+      val b = lineIterator(df.select(col("ask").cast("string")))
+        .contains("true")
       if (accept.contains("sparql-results+xml"))
         respond(ex, 200, "application/sparql-results+xml",
           "<?xml version=\"1.0\"?>\n<sparql xmlns=\"http://www.w3.org/2005/sparql-results#\">" +
@@ -279,9 +288,16 @@ final class SparqlHttpServer private (
     } finally { os.close(); ex.close() }
   }
 
-  /** One-string-column frame → driver-streamed lines (nulls skipped). */
+  /** One-string-column frame → driver-streamed lines (nulls skipped).
+    * Reads `queryExecution.toRdd`, not `Dataset.rdd`: the latter opens a
+    * SQL execution that covers planning only (the response's jobs run
+    * later, in [[DriverStream]], outside it) and pays for its explain
+    * string, plan info and UI events on every request.
+    */
   private def lineIterator(lines: DataFrame): Iterator[String] =
-    DriverStream.lines(lines.as(Encoders.STRING).rdd).filter(_ != null)
+    DriverStream.lines(lines.queryExecution.toRdd.map(r =>
+      if (r.isNullAt(0)) null else r.getUTF8String(0).toString))
+      .filter(_ != null)
 
   private def srjBody(df: DataFrame): BodyStream = {
     val vars = df.columns.toSeq

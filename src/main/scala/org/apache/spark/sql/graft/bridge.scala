@@ -1,8 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Column ↔ catalyst Expression bridge. Spark 4 made the conversion
   * utilities `private[sql]` (Column is now the Connect-agnostic API), so
@@ -12,6 +16,25 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A frame over `rel`'s columns whose rows come from `rdd` (same row
+    * layout, same partition count): a new `LogicalRDD` with fresh output
+    * attributes that carries `rel`'s statistics, so join and broadcast
+    * choices stay as they were. `keepLayout` keeps `rel`'s partitioning,
+    * ordering and constraints, which hold only when `rdd` yields a subset
+    * of `rel`'s rows in their places.
+    */
+  def relationOver(spark: SparkSession, rel: LogicalRDD,
+      rdd: RDD[InternalRow], keepLayout: Boolean): DataFrame = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val plan = LogicalRDD(rel.output, rdd,
+      if (keepLayout) rel.outputPartitioning
+      else UnknownPartitioning(rdd.getNumPartitions),
+      if (keepLayout) rel.outputOrdering else Nil, rel.isStreaming)(
+      session, Some(rel.computeStats()),
+      if (keepLayout) Some(rel.constraints) else None)
+    org.apache.spark.sql.classic.Dataset.ofRows(session, plan.newInstance())
+  }
 
   /** Names a DSL-built Column references. `expression` returns a LAZY
     * ColumnNodeExpression wrapper (no catalyst children to walk), so this

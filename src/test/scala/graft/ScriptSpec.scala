@@ -1,8 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import graft.pipeline.Script
+import graft.pipeline.{QuadDelta, QuadDeltaRDD, Script}
 import graft.pipeline.Script.{Query, Update}
 
 class ScriptSpec extends AnyFunSuite {
@@ -201,5 +204,113 @@ class ScriptSpec extends AnyFunSuite {
       "INSERT DATA { <urn:a> <urn:p> \"1\" . <urn:b> <urn:p> \"2\" . }").dataset
     assert(ds.select("subj").as[String].collect().sorted.toSeq ===
       Seq("<urn:a>", "<urn:b>"))
+  }
+
+  private val D = "<urn:x-arq:DefaultGraph>"
+
+  /** A checkpointed quad dataset over 3 partitions. */
+  private def checkpointed(quads: Seq[(String, String, String, String)]) =
+    quads.toDF("graph", "subj", "pred", "obj").repartition(3)
+      .localCheckpoint()
+
+  private def quads(ds: DataFrame) =
+    ds.as[(String, String, String, String)].collect().sorted.toSeq
+
+  private def rddOf(ds: DataFrame): RDD[_] = ds.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd
+    case other => fail(s"not a checkpointed relation: ${other.nodeName}")
+  }
+
+  /** RDDs on the longest dependency path, ending at a checkpointed one. */
+  private def lineageDepth(r: RDD[_]): Int =
+    1 + (if (r.isCheckpointed) 0
+         else r.dependencies.map(d => lineageDepth(d.rdd)).maxOption
+           .getOrElse(0))
+
+  test("a repeated INSERT DATA leaves one row, in the empty and in a " +
+      "checkpointed dataset") {
+    val ins = "INSERT DATA { <urn:a> <urn:p> \"1\" . <urn:a> <urn:p> \"1\" }"
+    val fresh = Script.runSparql(spark, Seq.fill(3)(ins).mkString(" ;\n"))
+    assert(quads(fresh.dataset) === Seq((D, "<urn:a>", "<urn:p>", "\"1\"")))
+    val base = Seq((D, "<urn:b>", "<urn:p>", "\"2\""))
+    val over = Script.runSparql(spark, Seq.fill(3)(ins).mkString(" ;\n"),
+      Some(checkpointed(base)))
+    assert(quads(over.dataset) ===
+      (base :+ ((D, "<urn:a>", "<urn:p>", "\"1\""))).sorted)
+  }
+
+  test("INSERT DATA of a quad present twice in a checkpointed base leaves " +
+      "one row") {
+    val q = (D, "<urn:a>", "<urn:p>", "\"1\"")
+    val other = (D, "<urn:b>", "<urn:p>", "\"2\"")
+    val ds = Script.runSparql(spark, "INSERT DATA { <urn:a> <urn:p> \"1\" }",
+      Some(checkpointed(Seq(q, q, other)))).dataset
+    assert(quads(ds) === Seq(q, other))
+  }
+
+  test("INSERT then DELETE DATA removes the quad; DELETE DATA of an absent " +
+      "quad changes nothing") {
+    val base = Seq((D, "<urn:b>", "<urn:p>", "\"2\""),
+      ("<urn:g>", "<urn:c>", "<urn:p>", "\"3\""))
+    val q = "GRAPH <urn:g> { <urn:a> <urn:p> \"1\" }"
+    val gone = Script.runSparql(spark,
+      s"INSERT DATA { $q } ;\nDELETE DATA { $q }",
+      Some(checkpointed(base))).dataset
+    assert(quads(gone) === base.sorted)
+    val same = Script.runSparql(spark,
+      "DELETE DATA { <urn:none> <urn:p> \"x\" }", Some(checkpointed(base)))
+      .dataset
+    assert(quads(same) === base.sorted)
+  }
+
+  test("DELETE DATA drops only its quad, not a base row of the same byte " +
+      "size") {
+    val q = ("<urn:g>", "<urn:a>", "<urn:p>", "\"1\"")
+    val sameSize = ("<urn:g>", "<urn:b>", "<urn:p>", "\"1\"")
+    val longer = ("<urn:g>", "<urn:a-longer>", "<urn:p>", "\"1\"")
+    val ds = Script.runSparql(spark,
+      "DELETE DATA { GRAPH <urn:g> { <urn:a> <urn:p> \"1\" } }",
+      Some(checkpointed(Seq(q, sameSize, longer)))).dataset
+    assert(rddOf(ds).isInstanceOf[QuadDeltaRDD])
+    assert(quads(ds) === Seq(sameSize, longer).sorted)
+  }
+
+  test("DATA statements over a checkpointed dataset start no Spark job") {
+    val initial = checkpointed(Seq((D, "<urn:b>", "<urn:p>", "\"2\"")))
+    val (run, jobs) = TestSpark.jobsDuring(Script.runSparql(spark,
+      "INSERT DATA { <urn:a> <urn:p> \"1\" } ;\n" +
+        "DELETE DATA { <urn:b> <urn:p> \"2\" } ;\n" +
+        "INSERT DATA { <urn:c> <urn:p> \"3\" }", Some(initial)))
+    assert(jobs.isEmpty, jobs)
+    assert(rddOf(run.dataset).isInstanceOf[QuadDeltaRDD])
+    assert(quads(run.dataset) === Seq((D, "<urn:a>", "<urn:p>", "\"1\""),
+      (D, "<urn:c>", "<urn:p>", "\"3\"")))
+  }
+
+  test("updates past the delta bound compact: the expected set, lineage " +
+      "depth <= 2") {
+    val base = (1 to 6).map(i => (D, s"<urn:b$i>", "<urn:p>", s"\"$i\""))
+    val initial = checkpointed(base)
+    // a quad row is at least 72 bytes (null bits, 4 offset words, 4 padded
+    // strings), and an inserted quad sits in `drop` and `add`
+    val n = (QuadDelta.MaxBytes / 64).toInt
+    val ins = (1 to n).map(i => (D, s"<urn:n$i>", "<urn:p>", s"\"v$i\""))
+    val del = ins.indices.collect { case i if i % 3 == 0 => ins(i) } :+
+      base.head
+    def text(qs: Seq[(String, String, String, String)]) =
+      qs.map(q => s"${q._2} ${q._3} ${q._4} .").mkString(" ")
+    val script = ins.grouped(16).map(g => s"INSERT DATA { ${text(g)} }") ++
+      del.grouped(16).map(g => s"DELETE DATA { ${text(g)} }")
+    val ds = Script.runSparql(spark, script.mkString(" ;\n"), Some(initial))
+      .dataset
+    assert(quads(ds) === (base ++ ins).filterNot(del.toSet).sorted)
+    val rdd = rddOf(ds)
+    assert(lineageDepth(rdd) <= 2, rdd.toDebugString)
+    rdd match {
+      case d: QuadDeltaRDD =>
+        assert(d.base ne rddOf(initial), "the delta never compacted")
+      case _ => ()
+    }
+    assert(rdd ne rddOf(initial))
   }
 }

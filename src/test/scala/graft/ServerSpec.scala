@@ -3,14 +3,12 @@ package graft
 import java.net.URLEncoder
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.SparkListenerJobStart
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.{eventsDuring, jobsDuring}
 import graft.server.SparqlHttpServer
 
 /** SPARQL 1.1 Protocol conformance of the `--server` endpoint
@@ -254,33 +252,6 @@ class ServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
-  /** Runs `body`; returns its result and the description of every Spark
-    * job started meanwhile ("null" for none).
-    */
-  private def jobsDuring[A](body: => A): (A, Seq[String]) = {
-    val sc = spark.sparkContext
-    val marker = s"marker-${System.nanoTime}"
-    val seen = new CountDownLatch(1)
-    val descs = new ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val d = Option(e.properties)
-          .map(_.getProperty("spark.job.description")).orNull
-        if (d == marker) seen.countDown() else descs.add(String.valueOf(d))
-      }
-    }
-    sc.addSparkListener(l)
-    try {
-      val a = body
-      // the bus delivers events in order: once the marker job's start
-      // arrives, every job `body` ran has been seen
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(seen.await(60, TimeUnit.SECONDS))
-      (a, descs.asScala.toSeq)
-    } finally sc.removeSparkListener(l)
-  }
-
   private def spread(df: DataFrame, parts: Int): DataFrame =
     df.repartition(parts).localCheckpoint()
 
@@ -338,6 +309,46 @@ class ServerSpec extends AnyFunSuite {
         assert(post(s"$base/graphql", "application/graphql", gq)._1 == 200)
       })
       assert(descs.nonEmpty && !descs.exists(_.startsWith("sparql")), descs)
+    }
+  }
+
+  test("an update sent as a query answers 400 and leaves the dataset " +
+    "alone; a query sent as update= still runs") {
+    withServer() { (base, _) =>
+      val ins = "INSERT DATA { <urn:get> <urn:p> \"z\" }"
+      val (c1, b1, _) = get(s"$base/sparql?query=${enc(ins)}")
+      assert(c1 == 400 && b1.contains("POST"), b1)
+      val (c2, _) = post(s"$base/sparql",
+        "application/x-www-form-urlencoded", s"query=${enc(ins)}")
+      assert(c2 == 400)
+      val (c3, _) = post(s"$base/sparql", "application/sparql-query", ins)
+      assert(c3 == 400)
+      val (_, ask, _) = get(
+        s"$base/sparql?query=${enc("ASK { <urn:get> <urn:p> \"z\" }")}")
+      assert(ask == """{"head":{},"boolean":false}""")
+      val (c4, b4) = post(s"$base/sparql",
+        "application/x-www-form-urlencoded",
+        s"update=${enc("SELECT ?s WHERE { ?s <urn:p> \"x\" }")}")
+      assert(c4 == 200 && b4.contains("urn:a"), b4)
+    }
+  }
+
+  test("an update request starts no Spark job; a query request opens no " +
+    "SQL execution and its jobs carry the request's description") {
+    withServer(data = spread(fixture(), 2)) { (base, _) =>
+      val ins = "INSERT DATA { <urn:new> <urn:p> \"z\" }"
+      val ((code, _), descs) = jobsDuring(post(s"$base/sparql",
+        "application/sparql-update", ins))
+      assert(code == 204 && descs.isEmpty, descs)
+      val q = "SELECT ?p ?o WHERE { <urn:new> ?p ?o }"
+      val ((c2, body, _), events) = eventsDuring(get(
+        s"$base/sparql?query=${enc(q)}", accept = "text/tab-separated-values"))
+      assert(c2 == 200 && body.contains("\"z\""), body)
+      assert(!events.exists(_.isInstanceOf[SparkListenerSQLExecutionStart]),
+        events)
+      val jobs = events.collect { case j: SparkListenerJobStart =>
+        j.properties.getProperty("spark.job.description") }
+      assert(jobs.nonEmpty && jobs.forall(_ == s"sparql query: $q"), jobs)
     }
   }
 }

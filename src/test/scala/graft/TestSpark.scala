@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (lazy, created on first use). */
@@ -17,4 +23,42 @@ object TestSpark {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `body`; returns its result and the job starts and other
+    * (SQL, AQE) listener events posted meanwhile, in bus order.
+    */
+  def eventsDuring[A](body: => A): (A, Seq[SparkListenerEvent]) = {
+    val sc = spark.sparkContext
+    val marker = s"marker-${System.nanoTime}"
+    val seen = new CountDownLatch(1)
+    val events = new ConcurrentLinkedQueue[SparkListenerEvent]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).map(_.getProperty("spark.job.description"))
+            .contains(marker)) seen.countDown()
+        else events.add(e)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = events.add(e)
+    }
+    sc.addSparkListener(l)
+    try {
+      val a = body
+      // the bus delivers events in order: once the marker job's start
+      // arrives, every event `body` caused has been seen
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(60, TimeUnit.SECONDS))
+      (a, events.asScala.toSeq)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Runs `body`; returns its result and the description of every Spark
+    * job started meanwhile ("null" for none).
+    */
+  def jobsDuring[A](body: => A): (A, Seq[String]) = {
+    val (a, events) = eventsDuring(body)
+    (a, events.collect { case e: SparkListenerJobStart =>
+      String.valueOf(Option(e.properties)
+        .map(_.getProperty("spark.job.description")).orNull)
+    })
+  }
 }

@@ -17,14 +17,16 @@
 #   worse       median worse than the parent's by more than the bound
 #   unresolved  the parent's own IQR/median exceeds the bound, unless every
 #               change run reads better than every parent run
-# plus correct/attempted/failed per run. With TRACE_SEED, it then runs one
+# plus correct/attempted/failed per run. For sparql_serve it also prints each
+# request class's p50 latency (median over the runs, parent IQR, wins, and
+# "gain" under the same pair rule). With TRACE_SEED, it then runs one
 # `--trace 1` per side on that seed and prints every `*.jobs`, `*.busy_s`,
 # `*.shuffle_write_bytes` and `sink.bytes_written` side by side (lines also
 # appended to $BENCH_PAIRS_OUT). Run nothing else meanwhile.
 set -euo pipefail
 
 if [ $# -lt 5 ]; then
-  sed -n '2,23p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,25p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 parent=$(cd "$1" && pwd)
@@ -38,15 +40,22 @@ trace_seed=${7:-}
 out=${BENCH_PAIRS_OUT:-$(mktemp "${TMPDIR:-/tmp}/bench_pairs.XXXXXX")}
 
 run_one() {  # side dir seed [trace]
-  local line trace=${4:-0}
-  line=$(cd "$2" && python3 perfbench/run.py --workload "$workload" --seed "$3" \
-    --seconds "$seconds" --trace "$trace" 2>/dev/null | tail -n 1) || true
+  local report line classes trace=${4:-0}
+  report=$(cd "$2" && python3 perfbench/run.py --workload "$workload" --seed "$3" \
+    --seconds "$seconds" --trace "$trace" 2>/dev/null) || true
+  line=$(printf '%s\n' "$report" | tail -n 1)
   case $line in
     "{"*) ;;
     *) line='{"correct": false, "attempted": 0, "failed": 0, "metrics": {}}' ;;
   esac
-  printf '{"side": "%s", "seed": %s, "trace": %s, "result": %s}\n' \
-    "$1" "$3" "$trace" "$line" >> "$out"
+  # sparql_serve's report line "... per-class p50 ms: {json}"
+  classes=$(printf '%s\n' "$report" | sed -n 's/.*per-class p50 ms: //p' | tail -n 1)
+  case $classes in
+    "{"*) ;;
+    *) classes='{}' ;;
+  esac
+  printf '{"side": "%s", "seed": %s, "trace": %s, "result": %s, "class_p50_ms": %s}\n' \
+    "$1" "$3" "$trace" "$line" "$classes" >> "$out"
   echo "[bench_pairs] $workload seed $3 trace $trace $1 done" >&2
 }
 
@@ -69,12 +78,14 @@ rows = [json.loads(l) for l in open(sys.argv[1]) if l.strip()]
 spec = json.load(open(sys.argv[2]))
 workload = sys.argv[3]
 runs = {"parent": {}, "change": {}}
+class_ms = {"parent": {}, "change": {}}
 traced = {}
 for r in rows:
     if r.get("trace", 0):
         traced[r["side"]] = r["result"]
     else:
         runs[r["side"]][r["seed"]] = r["result"]
+        class_ms[r["side"]][r["seed"]] = r.get("class_p50_ms", {})
 seeds = sorted(set(runs["parent"]) | set(runs["change"]))
 if not seeds:
     sys.exit(f"workload {workload}: no runs recorded")
@@ -134,6 +145,22 @@ for m in spec["end_to_end"]:
                else "within bound")
     print(f"  change wins {wins}/{n} (loses {losses}); median gap {gap:+.6g} "
           f"({rel:+.1%}); parent IQR {p3 - p1:.6g} ({spread:.1%} of median) -> {verdict}")
+
+classes = sorted({c for side in class_ms for v in class_ms[side].values() for c in v})
+if classes:
+    print("\nper-class p50 latency [ms, lower is better], median of the runs' p50s")
+for c in classes:
+    val = {side: [class_ms[side].get(s, {}).get(c) for s in seeds] for side in class_ms}
+    pairs = [(p, x) for p, x in zip(val["parent"], val["change"]) if p is not None and x is not None]
+    q = {side: quart([v for v in val[side] if v is not None]) for side in val}
+    wins = sum(1 for p, x in pairs if x < p)
+    p1, pmed, p3 = q["parent"]
+    gap = q["change"][1] - pmed
+    gain = (wins >= 0.9 * n and -gap > (p3 - p1) and all_correct
+            and failed["change"] <= failed["parent"])
+    print(f"  {c:<8} parent {pmed:9.2f} (IQR {p3 - p1:.2f}) -> change {q['change'][1]:9.2f}"
+          f"  ({gap / pmed if pmed else 0.0:+.1%}); change wins {wins}/{n}"
+          + ("  -> gain" if gain else ""))
 
 if traced:
     print("\ntraced run (--trace 1), seed " + sys.argv[4] + ": parent -> change")
