@@ -13,19 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object BenchExtra {
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-benchextra-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -52,7 +39,7 @@ object BenchExtra {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val mode = args.headOption.getOrElse("explain")
-    val spark = session(cpus)
+    val spark = LocalSession(s"graft-benchextra-$cpus", cpus.toString)
 
     mode match {
       case "explain" => explainAll(spark, sfDir, args.lift(1).getOrElse("before"))

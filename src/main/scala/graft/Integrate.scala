@@ -6,10 +6,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import graft.pipeline.Script
 import graft.rules.ConstructParser
+import graft.server.{DriverStream, SparqlHttpServer}
 import graft.sources.RdfIO
 
 /** The `integrate` CLI front door — the reference's primary UX
@@ -27,10 +27,13 @@ import graft.sources.RdfIO
   * a bindings-only script sends its TSV to the main sink instead.
   *
   * Spark-first scale notes:
-  *  - serialization (N-Quads/TriG line crafting) is a distributed
+  *  - serialization (N-Quads/TriG/TSV line crafting) is a distributed
   *    `select(concat_ws…)` — executors format, the driver only moves
-  *    bytes. stdout streams via `toLocalIterator` (one partition pinned
-  *    at a time, never a full `collect`).
+  *    bytes. The projections are the ones `/sparql` serves
+  *    ([[graft.sources.RdfIO.quadLines]],
+  *    [[graft.server.SparqlHttpServer.tsvLines]]), and stdout and TSV
+  *    stream through [[graft.server.DriverStream]] like its response
+  *    bodies (one job per wave of partitions, never a full `collect`).
   *  - `-o FILE` is single-file CLI semantics, so a merge to one file is
   *    inherent: parts are written distributed to a staging dir, then
   *    concatenated and ATOMICALLY moved into place (the reference writes
@@ -58,7 +61,7 @@ object Integrate {
       split: Option[String] = None,
       unionDefaultGraph: Boolean = false,
       server: Boolean = false,
-      serverPort: Int = graft.server.SparqlHttpServer.DefaultPort,
+      serverPort: Int = SparqlHttpServer.DefaultPort,
       readOnly: Boolean = false,
       unsafe: Boolean = false,
       args: Seq[String] = Nil)
@@ -255,33 +258,12 @@ object Integrate {
       Files.deleteIfExists(p)
     }
 
-  /** Quad frame → serialized text lines in the requested format. */
-  private def quadLines(quads: DataFrame, fmt: String): DataFrame = {
-    val q =
-      if (quads.columns.contains("graph")) quads
-      else quads.withColumn("graph",
-        org.apache.spark.sql.functions.lit("<urn:x-arq:DefaultGraph>"))
-    fmt match {
-      case "nq" => RdfIO.nquadLines(
-        q.select(col("graph"), col("subj"), col("pred"), col("obj")))
-      case "trig" => RdfIO.trigLines(
-        q.select(col("graph"), col("subj"), col("pred"), col("obj")))
-      case other => throw new IllegalArgumentException(
-        s"--out-format $other: supported formats are nq, trig")
-    }
-  }
-
-  /** SPARQL 1.1 Query Results TSV: `?var` header then term rows (terms
-    * are already N-Triples strings engine-wide; unbound = empty field).
-    * Streams via toLocalIterator — never a driver collect.
+  /** SPARQL 1.1 Query Results TSV, as `/sparql` serves it: `?var`
+    * header then term rows (unbound = empty field).
     */
   private def printTsv(df: DataFrame, to: PrintStream): Unit = {
-    to.println(df.columns.map("?" + _).mkString("\t"))
-    val n = df.columns.length
-    df.toLocalIterator().asScala.foreach { r =>
-      to.println((0 until n).map(k =>
-        if (r.isNullAt(k)) "" else String.valueOf(r.get(k))).mkString("\t"))
-    }
+    to.println(SparqlHttpServer.tsvHeader(df))
+    DriverStream.lines(SparqlHttpServer.tsvLines(df)).foreach(to.println)
   }
 
   /** Pick the quad output format: explicit `--of` wins, else the output
@@ -307,7 +289,7 @@ object Integrate {
   /** The server started by the last `--server` run (ephemeral-port tests
     * need the bound port; the CLI itself blocks in [[run]]).
     */
-  @volatile var lastServer: Option[graft.server.SparqlHttpServer] = None
+  @volatile var lastServer: Option[SparqlHttpServer] = None
 
   /** The testable whole-CLI path: parse argv, classify + execute the
     * workloads, route outputs. Returns the exit code.
@@ -362,7 +344,8 @@ object Integrate {
     }
 
     val fmt = pickFormat(cfg)
-    val ext = if (fmt == "trig") "trig" else "nq"
+    val trig = fmt == "trig"
+    val ext = if (trig) "trig" else "nq"
     val quads = outputs.collect { case (p, Script.QuadsOutput(df)) => (p, df) }
     val tables = outputs.collect { case (p, Script.TableOutput(df)) => (p, df) }
     val bindingsMode = quads.isEmpty && tables.nonEmpty
@@ -380,7 +363,7 @@ object Integrate {
             require(name.matches("[A-Za-z0-9_.-]+"),
               s"unsafe split name: $name")
             val union = group.map(_._2)
-              .map(df => quadLines(df, fmt)).reduce(_ unionByName _)
+              .map(df => RdfIO.quadLines(df, trig)).reduce(_ unionByName _)
             writeSingleFile(union, Paths.get(dir).resolve(s"$name.$ext"),
               gzip = false)
         }
@@ -390,9 +373,7 @@ object Integrate {
           case Some(f) =>
             writeSingleFile(lines, Paths.get(f),
               gzip = f.matches("(?i).*\\.gz$"), mkdirs = cfg.outMkDirs)
-          case None =>
-            lines.toLocalIterator().asScala
-              .foreach(r => out.println(r.getString(0)))
+          case None => DriverStream.lines(lines).foreach(out.println)
         }
         if (quads.nonEmpty) {
           if (fmt == "hdt") {
@@ -406,16 +387,16 @@ object Integrate {
             graft.sources.HdtIO.writeHdt(
               quads.map(_._2.selectExpr("subj", "pred", "obj"))
                 .reduce(_ unionByName _), f)
-          } else mainSink(quads.map { case (_, df) => quadLines(df, fmt) }
-            .reduce(_ unionByName _))
+          } else mainSink(quads.map { case (_, df) =>
+            RdfIO.quadLines(df, trig) }.reduce(_ unionByName _))
         }
         if (bindingsMode) {
           // bindings-only script: the TSV IS the main output
           cfg.outFile match {
             case Some(f) =>
-              // stream rows straight to the tmp file (toLocalIterator via
-              // printTsv) — buffering the whole TSV on the driver would
-              // break the no-driver-collect contract for large results
+              // stream rows straight to the tmp file — buffering the whole
+              // TSV on the driver would break the no-driver-collect
+              // contract for large results
               val p = Paths.get(f)
               ensureParentDir(p, cfg.outMkDirs)
               val tmp = p.resolveSibling("." + p.getFileName + ".tmp")
@@ -433,7 +414,7 @@ object Integrate {
       // serve the FINAL dataset state — the reference starts its server
       // over the same connection the workloads just mutated
       // (SparqlIntegrateCmdImpls.java:801-863)
-      val srv = graft.server.SparqlHttpServer.start(spark, ds,
+      val srv = SparqlHttpServer.start(spark, ds,
         port = cfg.serverPort, readOnly = cfg.readOnly, unsafe = cfg.unsafe)
       lastServer = Some(srv)
       err.println("[integrate] SPARQL service running at " +
@@ -448,14 +429,8 @@ object Integrate {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       String.valueOf(Runtime.getRuntime.availableProcessors()))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-integrate")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-integrate", cpus,
+      sys.env.get("SPARK_GRAFT_MASTER"))
     val code =
       try run(args, spark, System.out, System.err)
       catch {

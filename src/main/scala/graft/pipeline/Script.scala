@@ -9,32 +9,12 @@ import graft.Checkpoints.TruncateOps
   * mutable dataset (docs/integrate/index.md:17-60; LOAD→INSERT
   * materialization SparqlIntegrateCmdImpls.java:363-379).
   *
-  * Spark-first: the "mutable dataset" is the temp-view catalog. An
-  * [[Script.Update]] materializes its result eagerly (localCheckpoint —
-  * swap for a reliable checkpoint / staged Iceberg table on a cluster)
-  * and (re)binds a view, so later statements observe the state as of
-  * their position in the sequence; [[Script.Query]] evaluates against the
-  * current views. `run` returns the last Query's result (the reference
-  * streams each query's output to the sink as it executes).
+  * Spark-first: the mutable dataset is a quad DataFrame that each update
+  * statement replaces ([[applyStmt]]), so later statements observe the
+  * state as of their position in the sequence. The `integrate` CLI and
+  * the `--server` endpoint both run statements through [[applyStmt]].
   */
 object Script {
-
-  sealed trait Stmt
-  /** Materialize `f`'s result NOW and (re)bind it as view `name`. */
-  final case class Update(name: String, f: SparkSession => DataFrame) extends Stmt
-  /** Evaluate a query against the current view state. */
-  final case class Query(f: SparkSession => DataFrame) extends Stmt
-
-  def run(spark: SparkSession, stmts: Seq[Stmt]): Option[DataFrame] = {
-    var last: Option[DataFrame] = None
-    stmts.foreach {
-      case Update(name, f) =>
-        f(spark).truncateLineage(true).createOrReplaceTempView(name)
-      case Query(f) =>
-        last = Some(f(spark))
-    }
-    last
-  }
 
   /** Run a CONSTRUCT statement-sequence TEXT over one binding stream and
     * union the statements' outputs — the reference's `integrate` shape:

@@ -913,21 +913,11 @@ object ConstructParser {
         prefixLoop()
         skipWs()
         starts += i // each loop pass appends exactly one statement
+        // query forms rewind so their parser re-reads the keyword
         if (kw("CONSTRUCT")) {
-          skipWs()
-          val short = peek != '{'
-          val templates = if (short) Seq.empty else templateBlock()
-          skipWs()
-          if (!kw("WHERE")) { // keyword optional before a bare group
-            skipWs()
-            if (peek != '{') fail("expected WHERE or a group pattern")
-          }
-          skipWs()
-          val els = groupBlock(graphCtx = None)
-          out += QueryStmt(finishConstruct(
-            if (short) patternTemplates(els) else templates, els))
+          i -= "CONSTRUCT".length
+          out += QueryStmt(query(expectEnd = false))
         } else if (kw("SELECT")) {
-          // rewind so selectQuery re-reads the keyword
           i -= "SELECT".length
           out += SelectQueryStmt(selectQuery(expectEnd = false))
         } else if (kw("ASK")) {

@@ -3,11 +3,14 @@ package graft.server
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 
-/** Driver-side streaming of a distributed result into one driver stream,
-  * for the `/sparql` response bodies of [[SparqlHttpServer]].
+/** Driver-side streaming of a distributed result into one driver stream:
+  * the only way a result reaches the driver, for the `integrate` CLI's
+  * stdout and TSV sinks and the `/sparql` response bodies of
+  * [[SparqlHttpServer]].
   *
-  * `Dataset.toLocalIterator` runs one single-task job per partition, one
+  * Spark's own local iterator runs one single-task job per partition, one
   * after another, so a lookup over P partitions pays P job launches and
   * scans serially on one core. [[lines]] instead runs ONE job over each
   * consecutive window ("wave") of partitions and yields the wave's rows in
@@ -21,7 +24,7 @@ import org.apache.spark.rdd.RDD
   * only if it weighs at most budget / m, and otherwise stops early and
   * returns just the weight it saw. Such an overflowing partition is then
   * fetched alone, in its own job, when the stream reaches it — the bound
-  * `toLocalIterator` has for every partition. The next wave's width is
+  * the local iterator has for every partition. The next wave's width is
   * sized from the largest partition weight the previous wave measured
   * (an overflowing one by its full fetch), so a large result settles on
   * waves that fit instead of recomputing partitions. The driver holds at
@@ -33,8 +36,19 @@ object DriverStream {
   /** Upper bound on one wave's results. */
   private val WaveBytes = 64L << 20
 
+  /** A one-string-column frame's non-null values, streamed wave by wave.
+    * Reads `queryExecution.toRdd`, not `Dataset.rdd`: the latter opens a
+    * SQL execution that covers planning only (the jobs run later, here,
+    * outside it) and pays for its explain string, plan info and UI events
+    * on every call.
+    */
+  def lines(df: DataFrame): Iterator[String] =
+    lines(df.queryExecution.toRdd.map(r =>
+      if (r.isNullAt(0)) null else r.getUTF8String(0).toString))
+      .filter(_ != null)
+
   /** Streams `rdd` to the driver wave by wave (see the object doc). */
-  def lines(rdd: RDD[String]): Iterator[String] = {
+  private[graft] def lines(rdd: RDD[String]): Iterator[String] = {
     val maxResult = rdd.sparkContext.getConf
       .getSizeAsBytes("spark.driver.maxResultSize", "1g")
     lines(rdd, if (maxResult > 0) math.min(WaveBytes, maxResult / 4)

@@ -8,6 +8,7 @@ import java.util.concurrent.Executors
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.functions._
 
 import graft.functions.RdfTerms
@@ -190,7 +191,7 @@ final class SparqlHttpServer private (
     case Script.TableOutput(df) if isAskFrame(df) =>
       // read through the same stream as every body: `head` would be one
       // more SQL action
-      val b = lineIterator(df.select(col("ask").cast("string")))
+      val b = DriverStream.lines(df.select(col("ask").cast("string")))
         .contains("true")
       if (accept.contains("sparql-results+xml"))
         respond(ex, 200, "application/sparql-results+xml",
@@ -207,18 +208,9 @@ final class SparqlHttpServer private (
       else
         streamBody(ex, 200, "application/sparql-results+json")(srjBody(df))
     case Script.QuadsOutput(df) =>
-      val quads = if (df.columns.contains("graph")) df
-        else df.withColumn("graph", lit(DefaultGraph))
-      if (accept.contains("trig"))
-        streamBody(ex, 200, "application/trig")(quadBody(
-          RdfIO.trigLines(quads.select(col("graph"), col("subj"),
-            col("pred"), col("obj")))))
-      else
-        // N-Quads: default-graph quads emit as 3-term lines, per the
-        // grammar (nquadLines strips the sentinel itself)
-        streamBody(ex, 200, "application/n-quads")(quadBody(
-          RdfIO.nquadLines(quads.select(col("graph"), col("subj"),
-            col("pred"), col("obj")))))
+      val trig = accept.contains("trig")
+      streamBody(ex, 200, if (trig) "application/trig"
+        else "application/n-quads")(quadBody(RdfIO.quadLines(df, trig)))
   }
 
   private def handleGraphQl(ex: HttpExchange): Unit = {
@@ -288,23 +280,12 @@ final class SparqlHttpServer private (
     } finally { os.close(); ex.close() }
   }
 
-  /** One-string-column frame → driver-streamed lines (nulls skipped).
-    * Reads `queryExecution.toRdd`, not `Dataset.rdd`: the latter opens a
-    * SQL execution that covers planning only (the response's jobs run
-    * later, in [[DriverStream]], outside it) and pays for its explain
-    * string, plan info and UI events on every request.
-    */
-  private def lineIterator(lines: DataFrame): Iterator[String] =
-    DriverStream.lines(lines.queryExecution.toRdd.map(r =>
-      if (r.isNullAt(0)) null else r.getUTF8String(0).toString))
-      .filter(_ != null)
-
   private def srjBody(df: DataFrame): BodyStream = {
     val vars = df.columns.toSeq
     BodyStream(
       "{\"head\":{\"vars\":[" + vars.map(jsonString).mkString(",") +
         "]},\"results\":{\"bindings\":[\n",
-      lineIterator(bindingJsonLines(df, vars)), ",\n", "\n]}}")
+      DriverStream.lines(bindingJsonLines(df, vars)), ",\n", "\n]}}")
   }
 
   private def srxBody(df: DataFrame): BodyStream = {
@@ -313,18 +294,16 @@ final class SparqlHttpServer private (
       "<?xml version=\"1.0\"?>\n<sparql xmlns=\"http://www.w3.org/2005/sparql-results#\">" +
         "<head>" + vars.map(v => s"""<variable name="$v"/>""").mkString +
         "</head><results>\n",
-      lineIterator(resultXmlLines(df, vars)).map(_ + "\n"), "",
+      DriverStream.lines(resultXmlLines(df, vars)).map(_ + "\n"), "",
       "</results></sparql>")
   }
 
   private def tsvBody(df: DataFrame): BodyStream =
-    BodyStream(df.columns.map("?" + _).mkString("\t") + "\n",
-      lineIterator(df.select(concat_ws("\t",
-        df.columns.map(c => coalesce(col(c).cast("string"), lit(""))): _*)
-        .as("line"))).map(_ + "\n"), "", "")
+    BodyStream(tsvHeader(df) + "\n",
+      DriverStream.lines(tsvLines(df)).map(_ + "\n"), "", "")
 
   private def quadBody(lines: DataFrame): BodyStream =
-    BodyStream("", lineIterator(lines).map(_ + "\n"), "", "")
+    BodyStream("", DriverStream.lines(lines).map(_ + "\n"), "", "")
 
   private def serve(path: String)(h: HttpExchange => Unit): Unit =
     http.createContext(path, (ex: HttpExchange) =>
@@ -402,9 +381,27 @@ object SparqlHttpServer {
   private[server] def bindingJsonLines(df: DataFrame,
       vars: Seq[String]): DataFrame =
     df.select(to_json(
-      struct(vars.map(v => srjTermStruct(col(v).cast("string")).as(v)): _*),
+      struct(vars.map(v => srjTermStruct(term(v)).as(v)): _*),
       java.util.Collections.singletonMap("ignoreNullFields", "true"))
       .as("line"))
+
+  /** SPARQL 1.1 Results TSV: the `?var` header line. */
+  private[graft] def tsvHeader(df: DataFrame): String =
+    df.columns.map("?" + _).mkString("\t")
+
+  /** Distributed TSV formatting: one tab-joined line per row, an unbound
+    * cell empty.
+    */
+  private[graft] def tsvLines(df: DataFrame): DataFrame =
+    df.select(concat_ws("\t",
+      df.columns.map(v => coalesce(term(v), lit(""))): _*).as("line"))
+
+  /** A result column as a string, referenced by its quoted name: a
+    * projection may be named like `1.5`, which unquoted reads as a field
+    * of a struct column `1`.
+    */
+  private def term(v: String): Column =
+    col(QuotingUtils.quoteIdentifier(v)).cast("string")
 
   private def xmlEsc(c: Column): Column =
     Seq("&" -> "&amp;", "<" -> "&lt;", ">" -> "&gt;", "\"" -> "&quot;")
@@ -414,7 +411,7 @@ object SparqlHttpServer {
   private[server] def resultXmlLines(df: DataFrame,
       vars: Seq[String]): DataFrame = {
     val cells = vars.map { v =>
-      val t = col(v).cast("string")
+      val t = term(v)
       val lex = xmlEsc(RdfTerms.termLexical(t))
       val lang = regexp_extract(t, "@([A-Za-z0-9-]+)$", 1)
       val dt = xmlEsc(regexp_extract(t, "\\^\\^<([^>]*)>$", 1))

@@ -370,6 +370,17 @@ object RdfIO {
       when(col("graph") === "<urn:x-arq:DefaultGraph>", lit(null: String))
         .otherwise(col("graph")), lit(".")).as("value"))
 
+  /** A query's output quads as N-Quads or TriG lines — what `integrate`
+    * writes and `/sparql` serves. A frame without a `graph` column (a
+    * triple template) is in the default graph.
+    */
+  def quadLines(quads: DataFrame, trig: Boolean): DataFrame = {
+    val g = if (quads.columns.contains("graph")) col("graph")
+      else lit("<urn:x-arq:DefaultGraph>").as("graph")
+    val q = quads.select(g, col("subj"), col("pred"), col("obj"))
+    if (trig) trigLines(q) else nquadLines(q)
+  }
+
   /** Write N-Quads text (one part per partition, like any Spark sink);
     * `compression` = any Hadoop codec name (gzip/bzip2/…), like the
     * reference's codec-by-extension outputs.

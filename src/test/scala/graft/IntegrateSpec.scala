@@ -3,6 +3,7 @@ package graft
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The `graft.Integrate` CLI front door, end-to-end through its OWN
@@ -199,6 +200,53 @@ class IntegrateSpec extends AnyFunSuite {
       cli("SELECT ?x WHERE { <env:NOPE_UNSET_VAR> <urn:p> ?x }")
     }
     assert(ex.getMessage.contains("NOPE_UNSET_VAR"))
+  }
+
+  test("a sorted SELECT spread over more partitions than " +
+    "defaultParallelism prints the same TSV to stdout, stderr and -o, in " +
+    "order, one job per wave of partitions") {
+    val dp = spark.sparkContext.defaultParallelism
+    val p = 3 * dp
+    val dir = tmpDir()
+    val nt = dir.resolve("d.nt")
+    val ids = new scala.util.Random(7).shuffle((1 to 60).toList)
+    // odd subjects have no <urn:v> value: their ?o is unbound
+    Files.writeString(nt, ids.map(i =>
+      if (i % 2 == 0) f"<urn:s$i%03d> <urn:v> \"v$i\" .\n"
+      else f"<urn:s$i%03d> <urn:w> <urn:x> .\n").mkString)
+    val select = "SELECT ?s ?o WHERE { { ?s <urn:v> ?o } UNION " +
+      "{ ?s <urn:w> ?x } } ORDER BY DESC(?s)"
+    val expected = "?s\t?o" +: (60 to 1 by -1).map(i =>
+      if (i % 2 == 0) f"<urn:s$i%03d>\t\"v$i\"" else f"<urn:s$i%03d>\t")
+    def lines(text: String): Seq[String] = text.split("\n", -1).toSeq.init
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    // keep the sorted result spread over p partitions
+    spark.conf.set(keys(0), p.toString)
+    spark.conf.set(keys(1), "false")
+    try {
+      val ((c1, out, e1), events) = TestSpark.eventsDuring(
+        cli(nt.toString, select))
+      assert(c1 === 0, e1)
+      assert(lines(out) === expected)
+      // the jobs that read the sort's exchange: the rest scan the input
+      val reads = events.collect {
+        case j: SparkListenerJobStart if j.stageInfos.size > 1 => j }
+      assert(reads.nonEmpty && reads.length <= (p + dp - 1) / dp,
+        reads.map(_.stageInfos.map(_.name)))
+      val (c2, quads, err) = cli(nt.toString, select,
+        "CONSTRUCT { ?s <urn:q> ?o } WHERE { ?s <urn:v> ?o }")
+      assert(c2 === 0 && lines(quads).length === 30, err)
+      assert(lines(err) === expected)
+      val tsv = dir.resolve("out.tsv")
+      val (c3, _, e3) = cli(nt.toString, select, "-o", tsv.toString)
+      assert(c3 === 0, e3)
+      assert(lines(Files.readString(tsv)) === expected)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("-h/--help prints usage to stdout and exits 0") {

@@ -4,41 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions._
 import graft.pipeline.{QuadDelta, QuadDeltaRDD, Script}
-import graft.pipeline.Script.{Query, Update}
 
 class ScriptSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  test("statement sequence: updates mutate the shared view state in order") {
-    val result = Script.run(spark, Seq(
-      // LOAD-style: bind the base table
-      Update("acc", s => Seq((1, "a"), (2, "b")).toDF("k", "v")),
-      // query-over-state, then an update DERIVED FROM the previous state
-      Query(s => s.table("acc")),
-      Update("acc", s => s.table("acc")
-        .unionAll(s.table("acc").select($"k" + 10, upper($"v")))),
-      // DELETE-style update
-      Update("acc", s => s.table("acc").filter($"k" =!= 2)),
-      Query(s => s.table("acc").orderBy("k"))
-    )).get
-    assert(result.as[(Int, String)].collect().toSeq ===
-      Seq((1, "a"), (11, "A"), (12, "B")))
-  }
-
-  test("update materializes eagerly: later redefinition cannot change it") {
-    Script.run(spark, Seq(
-      Update("src", s => Seq(1).toDF("x")),
-      Update("snap", s => s.table("src").select($"x" + 1 as "x")),
-      Update("src", s => Seq(100).toDF("x")), // must NOT affect snap
-      Query(s => s.table("snap"))
-    )).get.as[Long].head match {
-      case 2 => ()
-      case other => fail(s"snapshot leaked through view rebind: $other")
-    }
-  }
 
   test("runSparql: LOAD INTO GRAPH, CLEAR GRAPH, SELECT statement, data ops") {
     val dir = java.nio.file.Files.createTempDirectory("graft-script")
@@ -69,6 +39,17 @@ class ScriptSpec extends AnyFunSuite {
     // variables are rejected in DATA blocks
     intercept[IllegalArgumentException](graft.rules.ConstructParser.parseScript(
       "INSERT DATA { <a> <b> ?v . }"))
+  }
+
+  test("a script CONSTRUCT reads only the graphs its FROM clause names") {
+    val ds = Seq(("<urn:g1>", "<urn:a>", "<urn:p>", "\"1\""),
+      ("<urn:g2>", "<urn:b>", "<urn:p>", "\"2\""))
+      .toDF("graph", "subj", "pred", "obj")
+    val out = Script.runSparql(spark,
+      "CONSTRUCT { ?s <urn:p> ?o } FROM <urn:g1> WHERE { ?s ?p ?o }",
+      Some(ds)).lastQuery.get
+    assert(out.select("subj", "pred", "obj").as[(String, String, String)]
+      .collect().toSeq === Seq(("<urn:a>", "<urn:p>", "\"1\"")))
   }
 
   test("graph management verbs + WITH/USING update scoping") {

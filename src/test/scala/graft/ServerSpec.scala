@@ -252,6 +252,23 @@ class ServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("a projection named after a decimal literal answers 200 as SRJ, " +
+    "SRX and TSV") {
+    withServer() { (base, _) =>
+      val q = enc("SELECT 1.5 (\"x\" AS ?y) { }")
+      val (c1, srj, _) = get(s"$base/sparql?query=$q")
+      assert(c1 == 200 &&
+        srj.contains(""""1.5":{"type":"literal","value":"1.5"}"""), srj)
+      val (c2, srx, _) = get(s"$base/sparql?query=$q",
+        accept = "application/sparql-results+xml")
+      assert(c2 == 200 && srx.contains(
+        """<binding name="1.5"><literal>1.5</literal></binding>"""), srx)
+      val (c3, tsv, _) = get(s"$base/sparql?query=$q",
+        accept = "text/tab-separated-values")
+      assert(c3 == 200 && tsv == "?1.5\t?y\n1.5\tx\n", tsv)
+    }
+  }
+
   private def spread(df: DataFrame, parts: Int): DataFrame =
     df.repartition(parts).localCheckpoint()
 

@@ -10,18 +10,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (lazy, created on first use). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = LocalSession("graft-test", "4")
   val sf0001 = "/root/testdata/sf0.001"
 
   /** Runs `body`; returns its result and the job starts and other
