@@ -98,7 +98,10 @@ object BenchExtra {
       Dedup.minhashPairs(docs, n = 3, threshold = 0.6).count())
   }
 
-  /** Write .explain("formatted") for every headline query to plans/r10/.
+  /** Write .explain("formatted") for every [[SparkEntry.queries]] entry
+    * (the headline ones included) to plans/r10/, so two checkouts' dumps
+    * can be compared with `tools/explain_diff.sh`. An entry that fails to
+    * build is reported and skipped.
     * `kg_canonical_triples`'s declared entry memoizes through a
     * localCheckpoint (its plan is just the checkpoint scan), so the
     * UNDERLYING pipeline plan is dumped as
@@ -117,8 +120,8 @@ object BenchExtra {
       } catch { case e: Throwable =>
         System.err.println(s"[extra] $name explain failed: ${e.getMessage}")
       }
-    Bench.headline.foreach(name =>
-      dump(name, SparkEntry.queries(name)(spark, sfDir)))
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, q) =>
+      dump(name, q(spark, sfDir)) }
     dump("kg_canonical_underlying",
       pipeline.Kg.canonicalTriples(spark, sfDir))
   }

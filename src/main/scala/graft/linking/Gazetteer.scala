@@ -317,12 +317,16 @@ object Gazetteer {
         lit("").as("alias_iri"), lit(0.0d).as("jaccard"))
     // the span explode is the dominant corpus-scale stage and feeds BOTH
     // the signature path (via spanKeys) and the final join — materialize
-    // it once (same pattern as minhashPairs; reliable checkpoint on a
-    // cluster) instead of recomputing the n-gram chain twice.
+    // it once (reliable checkpoint on a cluster) instead of recomputing
+    // the n-gram chain twice. EAGERLY: a lazy checkpoint is filled by the
+    // first job that reads it, and the adaptive query stages of one
+    // action read it concurrently, so two of them computed the same
+    // partitions (duplicate-block warnings, and metric updates for
+    // accumulators the lost first plan no longer held).
     // Span side deliberately uses ALL lengths 1..maxTok (no length-set
     // pruning like the exact path): fuzzy matches may differ in token
     // count from every gazetteer surface (typos add/drop separators).
-    val spans = ngramSpans(transcripts, maxTok).truncateLineage(false)
+    val spans = ngramSpans(transcripts, maxTok).truncateLineage(true)
     val spanKeys = spans.select(col("__ng")).distinct()
     val spanSh = spanKeys
       .select(col("__ng").as("doc_id"), explode(charShingles(col("__ng"), 3)).as("shingle"))

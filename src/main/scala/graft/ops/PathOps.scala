@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Checkpoints.TruncateOps
 
@@ -47,55 +47,74 @@ object PathOps {
 
   private def term(iri: String) = "<" + iri + ">"
 
-  /** Evaluate a path to its solution pairs: DataFrame(s, o). */
-  def eval(triples: DataFrame, p: PathExpr): DataFrame = p match {
-    case Link(iri) =>
-      triples.where(col("pred") === term(iri))
-        .select(col("subj").as("s"), col("obj").as("o"))
-    case Inv(q) =>
-      eval(triples, q).select(col("o").as("s"), col("s").as("o"))
-    case Sequence(parts) =>
-      parts.map(eval(triples, _)).reduceLeft { (a, b) =>
-        a.as("l").join(b.as("r"), col("l.o") === col("r.s"))
-          .select(col("l.s").as("s"), col("r.o").as("o"))
-      }
-    case Alt(parts) =>
-      parts.map(eval(triples, _)).reduceLeft(_ union _)
-    case ZeroOrOne(q) =>
-      eval(triples, q).union(identityPairs(triples)).distinct()
-    case OneOrMore(q) => closure(eval(triples, q))
-    case ZeroOrMore(q) =>
-      closure(eval(triples, q)).union(identityPairs(triples)).distinct()
-    case NegatedSet(fwd, inv) =>
-      val f = triples.where(!col("pred").isin(fwd.map(term): _*))
-        .select(col("subj").as("s"), col("obj").as("o"))
-      if (inv.isEmpty) f
-      else f.union(
-        triples.where(!col("pred").isin(inv.map(term): _*))
-          .select(col("obj").as("s"), col("subj").as("o")))
+  /** Evaluate a path to its solution pairs: DataFrame(s, o). With
+    * `perGraph` the path is evaluated WITHIN each named graph of a quad
+    * table: DataFrame(g, s, o), every join keyed on the graph as well — a
+    * `GRAPH ?g { ?s path ?o }` pattern walks each graph independently
+    * (and at scale the graph key co-partitions every round of the
+    * closure).
+    */
+  def eval(triples: DataFrame, p: PathExpr, perGraph: Boolean = false): DataFrame = {
+    def edges(df: DataFrame, s: String, o: String) =
+      df.select(keyed(perGraph, col("graph").as("g"),
+        col(s).as("s"), col(o).as("o")): _*)
+    p match {
+      case Link(iri) => edges(triples.where(col("pred") === term(iri)), "subj", "obj")
+      case Inv(q) =>
+        eval(triples, q, perGraph).select(keyed(perGraph, col("g"),
+          col("o").as("s"), col("s").as("o")): _*)
+      case Sequence(parts) =>
+        parts.map(eval(triples, _, perGraph)).reduceLeft(compose(_, _, perGraph))
+      case Alt(parts) =>
+        parts.map(eval(triples, _, perGraph)).reduceLeft(_ union _)
+      case ZeroOrOne(q) =>
+        eval(triples, q, perGraph).union(identityPairs(triples, perGraph)).distinct()
+      case OneOrMore(q) => closure(eval(triples, q, perGraph), perGraph)
+      case ZeroOrMore(q) =>
+        closure(eval(triples, q, perGraph), perGraph)
+          .union(identityPairs(triples, perGraph)).distinct()
+      case NegatedSet(fwd, inv) =>
+        val f = edges(triples.where(!col("pred").isin(fwd.map(term): _*)),
+          "subj", "obj")
+        if (inv.isEmpty) f
+        else f.union(edges(triples.where(!col("pred").isin(inv.map(term): _*)),
+          "obj", "subj"))
+    }
   }
+
+  /** `cols`, led by the graph key `g` when evaluating per graph. */
+  private def keyed(perGraph: Boolean, g: => Column, cols: Column*): Seq[Column] =
+    if (perGraph) g +: cols else cols
+
+  /** One path step after another: `a.o = b.s` (in the same graph). */
+  private def compose(a: DataFrame, b: DataFrame, perGraph: Boolean): DataFrame =
+    a.as("l").join(b.as("r"),
+      keyed(perGraph, col("l.g") === col("r.g"), col("l.o") === col("r.s"))
+        .reduce(_ && _))
+      .select(keyed(perGraph, col("l.g").as("g"),
+        col("l.s").as("s"), col("r.o").as("o")): _*)
 
   /** Zero-length path: every node of the graph relates to itself
     * (SPARQL 1.1 §9.3 — nodes are all terms in subject or object
     * position, literals included).
     */
-  private def identityPairs(triples: DataFrame): DataFrame =
-    triples.select(col("subj").as("s"))
-      .union(triples.select(col("obj").as("s")))
+  private def identityPairs(triples: DataFrame, perGraph: Boolean): DataFrame =
+    triples.select(keyed(perGraph, col("graph").as("g"), col("subj").as("s")): _*)
+      .union(triples.select(keyed(perGraph, col("graph"), col("obj").as("s")): _*))
       .distinct()
-      .select(col("s"), col("s").as("o"))
+      .select(keyed(perGraph, col("g"), col("s"), col("s").as("o")): _*)
 
   /** Transitive closure by doubling: pairs at length ≤ 2^k after k
     * rounds; fixpoint when the distinct pair count stops growing.
     */
-  private[graft] def closure(edges: DataFrame): DataFrame = {
-    var r = edges.select("s", "o").distinct().truncateLineage(true)
+  private[graft] def closure(edges: DataFrame,
+      perGraph: Boolean = false): DataFrame = {
+    var r = edges.select(keyed(perGraph, col("g"), col("s"), col("o")): _*)
+      .distinct().truncateLineage(true)
     var size = r.count()
     var round = 0
     while (round < MaxRounds) {
-      val doubled = r.as("l").join(r.as("r"), col("l.o") === col("r.s"))
-        .select(col("l.s").as("s"), col("r.o").as("o"))
-      val next = r.union(doubled).distinct().truncateLineage(true)
+      val next = r.union(compose(r, r, perGraph)).distinct().truncateLineage(true)
       val nsize = next.count()
       if (nsize == size) return r
       r = next
@@ -184,73 +203,14 @@ object PathOps {
     else reached
   }
 
-  // ------------------------------------------------- graph-scoped variant
-
-  /** Evaluate a path WITHIN each named graph: DataFrame(g, s, o), every
-    * join keyed on the graph as well — a `GRAPH ?g { ?s path ?o }`
-    * pattern walks each graph independently (and at scale the graph key
-    * co-partitions every round of the closure).
-    */
-  def evalG(quads: DataFrame, p: PathExpr): DataFrame = p match {
-    case Link(iri) =>
-      quads.where(col("pred") === term(iri))
-        .select(col("graph").as("g"), col("subj").as("s"), col("obj").as("o"))
-    case Inv(q) =>
-      evalG(quads, q).select(col("g"), col("o").as("s"), col("s").as("o"))
-    case Sequence(parts) =>
-      parts.map(evalG(quads, _)).reduceLeft { (a, b) =>
-        a.as("l").join(b.as("r"),
-          col("l.g") === col("r.g") && col("l.o") === col("r.s"))
-          .select(col("l.g").as("g"), col("l.s").as("s"), col("r.o").as("o"))
-      }
-    case Alt(parts) =>
-      parts.map(evalG(quads, _)).reduceLeft(_ union _)
-    case ZeroOrOne(q) =>
-      evalG(quads, q).union(identityPairsG(quads)).distinct()
-    case OneOrMore(q) => closureG(evalG(quads, q))
-    case ZeroOrMore(q) =>
-      closureG(evalG(quads, q)).union(identityPairsG(quads)).distinct()
-    case NegatedSet(fwd, inv) =>
-      val f = quads.where(!col("pred").isin(fwd.map(term): _*))
-        .select(col("graph").as("g"), col("subj").as("s"), col("obj").as("o"))
-      if (inv.isEmpty) f
-      else f.union(
-        quads.where(!col("pred").isin(inv.map(term): _*))
-          .select(col("graph").as("g"), col("obj").as("s"), col("subj").as("o")))
-  }
-
-  private def identityPairsG(quads: DataFrame): DataFrame =
-    quads.select(col("graph").as("g"), col("subj").as("s"))
-      .union(quads.select(col("graph"), col("obj")))
-      .distinct()
-      .select(col("g"), col("s"), col("s").as("o"))
-
-  private[graft] def closureG(edges: DataFrame): DataFrame = {
-    var r = edges.select("g", "s", "o").distinct().truncateLineage(true)
-    var size = r.count()
-    var round = 0
-    while (round < MaxRounds) {
-      val doubled = r.as("l").join(r.as("r"),
-        col("l.g") === col("r.g") && col("l.o") === col("r.s"))
-        .select(col("l.g").as("g"), col("l.s").as("s"), col("r.o").as("o"))
-      val next = r.union(doubled).distinct().truncateLineage(true)
-      val nsize = next.count()
-      if (nsize == size) return r
-      r = next
-      size = nsize
-      round += 1
-    }
-    throw new IllegalStateException(
-      s"graph-scoped path closure did not converge in $MaxRounds rounds")
-  }
-
   /** Graph-scoped path pattern: the graph position binds/filters like any
     * other (so `GRAPH ?g { <s> path ?o }` works with a variable graph).
     */
   def pathPatternG(quads: DataFrame, g: Either[String, String],
       s: Either[String, String], path: PathExpr,
       o: Either[String, String]): DataFrame =
-    Bgp.bindPositions(evalG(quads, path), Seq("g" -> g, "s" -> s, "o" -> o))
+    Bgp.bindPositions(eval(quads, path, perGraph = true),
+      Seq("g" -> g, "s" -> s, "o" -> o))
 
   /** A whole path triple pattern: constants filter (or seed a BFS for
     * closures), variables project, repeated variables enforce equality —

@@ -599,7 +599,6 @@ object ConstructParser {
     // like PREFIX does (SPARQL §4.1.1)
     private var baseIri: Option[String] = None
     private var binds = scala.collection.mutable.LinkedHashMap[String, E]()
-    private var filters = scala.collection.mutable.ArrayBuffer[Column]()
     // group-nesting depth + the (slot, source-offset) of every plain
     // FILTER awaiting its §17.2 re-parse at the outermost group close
     private var groupDepth = 0
@@ -618,10 +617,6 @@ object ConstructParser {
       * subquery's visible variables.
       */
     private var lastProjection: Seq[(String, Boolean)] = Nil
-    /** Projected plain vars of the most recent [[selectQuery]] parse that
-      * may be UNBOUND ([[staticNulls]] of its group).
-      */
-    private var lastProjectionNulls: Set[String] = Set.empty
     // object vars bound by property functions before BGP mode flips
     private val propFnVars = scala.collection.mutable.ArrayBuffer[String]()
     // the subset of propFnVars whose values are TERMS (csv:parse rows,
@@ -706,7 +701,6 @@ object ConstructParser {
 
     private def resetState(): Unit = {
       binds = scala.collection.mutable.LinkedHashMap[String, E]()
-      filters = scala.collection.mutable.ArrayBuffer[Column]()
       sawPattern = false
       bgpVarTerm.clear()
       intVars.clear()
@@ -765,49 +759,61 @@ object ConstructParser {
 
     /** Resolve templates + WHERE elements into a [[ParsedConstruct]]
       * (shared by CONSTRUCT queries and INSERT/DELETE … WHERE updates).
+      * In binding-stream mode the templates apply to the input directly,
+      * their BIND vars inline through [[binds]] and the FILTERs forming
+      * the rule's `where`; otherwise [[compileWhere]] binds the input
+      * first.
       */
     private def finishConstruct(templates: Seq[T], els: Seq[WhereEl],
         ds: DatasetClause = NoDataset): ParsedConstruct = {
       val mintsBnodes = templates.exists { case (a, b, c, g) =>
         Seq(a, b, c, g).exists(_.isInstanceOf[BnodeT])
       }
-      val pipeline = !sawPattern && containsPropFn(els)
-      if (pipeline) {
-        // property-function pipeline over the binding stream: the input
-        // frame is transformed (BIND→withColumn, json:unnest→explode)
-        // before the templates apply
-        val rules = Seq(Rule("construct", lit(true),
-          templates.map { case (st, pt, ot, gt) =>
-            TripleTemplate(termOf(st), termOf(pt), termOf(ot), termOf(gt))
-          }))
-        return ParsedConstruct(rules,
-          Some(input => compileGroup(els, input, NoDataset, seedWithInput = true)),
-          needsRowId = mintsBnodes, usesQuads = false)
-      }
-      if (!sawPattern) {
-        // binding-stream mode: WHERE may only hold BIND/FILTER
-        els.foreach {
-          case _: BindE => ()
-          case f: FilterE => filters += f.c
-          case other => fail(s"${elName(other)} requires triple patterns " +
-            "in WHERE (binding-stream mode allows only BIND and FILTER)")
-        }
-        val where = filters.reduceOption(_ && _).getOrElse(lit(true))
-        ParsedConstruct(Seq(Rule("construct", where,
-          templates.map { case (st, pt, ot, gt) =>
-            TripleTemplate(termOf(st), termOf(pt), termOf(ot), termOf(gt))
-          })), None, needsRowId = mintsBnodes, usesQuads = false)
-      } else {
-        // BGP mode: the where-compiler turns the input quad table into a
-        // binding frame; FILTERs live inside the group compilation
-        val rules = Seq(Rule("construct", lit(true),
-          templates.map { case (st, pt, ot, gt) =>
-            TripleTemplate(termOf(st), termOf(pt), termOf(ot), termOf(gt))
-          }))
-        ParsedConstruct(rules, Some(quads => compileGroup(els, quads, ds)),
-          needsRowId = mintsBnodes)
-      }
+      val stream = bindingStream(els)
+      val where =
+        if (stream) els.collect { case f: FilterE => f.c }
+          .reduceOption(_ && _).getOrElse(lit(true))
+        else lit(true)
+      val rules = Seq(Rule("construct", where,
+        templates.map { case (st, pt, ot, gt) =>
+          TripleTemplate(termOf(st), termOf(pt), termOf(ot), termOf(gt))
+        }))
+      ParsedConstruct(rules,
+        if (stream) None else Some(compileWhere(els, ds).andThen(_._1)),
+        needsRowId = mintsBnodes, usesQuads = sawPattern)
     }
+
+    /** Binding-stream mode: no triple pattern and no property function,
+      * so the WHERE may only hold BIND and FILTER over the input stream
+      * (checked here, at parse time).
+      */
+    private def bindingStream(els: Seq[WhereEl]): Boolean = {
+      val stream = !sawPattern && !containsPropFn(els)
+      if (stream) els.foreach {
+        case _: BindE | _: FilterE => ()
+        case other => fail(s"${elName(other)} requires triple patterns " +
+          "in WHERE (binding-stream mode allows only BIND and FILTER)")
+      }
+      stream
+    }
+
+    /** The one WHERE dispatch of CONSTRUCT, SELECT and ASK, chosen at
+      * parse time: BGP mode compiles the group against the quad table; a
+      * pattern-free group with a property function is a pipeline over the
+      * input stream; binding-stream mode folds its BINDs and FILTERs in
+      * order over the input. Yields the binding frame and its
+      * maybe-unbound vars ([[compileGroupN]]).
+      */
+    private def compileWhere(els: Seq[WhereEl],
+        ds: DatasetClause): DataFrame => (DataFrame, Set[String]) =
+      if (sawPattern) compileGroupN(els, _, ds)
+      else if (!bindingStream(els)) compileGroupN(els, _, ds, seedWithInput = true)
+      else input => els.foldLeft((input, Set.empty[String])) {
+        case ((df, mn), BindE(v, e)) =>
+          (df.withColumn(v, e.c), if (bindMaybeNull(e.c, mn)) mn + v else mn)
+        case ((df, mn), f: FilterE) => (df.filter(f.c), mn)
+        case (acc, _) => acc // rejected by bindingStream
+      }
 
     // --------------------------------------------------------- script
 
@@ -1012,20 +1018,9 @@ object ConstructParser {
       if (peek == ';') i += 1
       skipWs()
       if (expectEnd && i < n) fail("trailing input after ASK query")
-      val bgp = sawPattern
-      val pipeline = !bgp && containsPropFn(els)
-      ParsedSelect { input =>
-        val bindings =
-          if (bgp) compileGroup(els, input, ds)
-          else if (pipeline) compileGroup(els, input, ds, seedWithInput = true)
-          else els.foldLeft(input) {
-            case (df, BindE(v, e)) => df.withColumn(v, e.c)
-            case (df, f: FilterE) => df.filter(f.c)
-            case (_, other) => throw new IllegalArgumentException(
-              s"${elName(other)} requires triple patterns in WHERE")
-          }
-        bindings.agg((count(lit(1)) > 0).as("ask"))
-      }.copy(usesQuads = bgp)
+      val where = compileWhere(els, ds)
+      ParsedSelect(where(_)._1.agg((count(lit(1)) > 0).as("ask")),
+        usesQuads = sawPattern)
     }
 
     def graphAskQuery(): ParsedSelect = {
@@ -1044,7 +1039,7 @@ object ConstructParser {
       if (i < n) fail("trailing input after ASK query")
       require(sawPattern, "per-graph ASK needs at least one triple pattern")
       ParsedSelect { input =>
-        compileGroup(els, input).select(col("#g").as("graph")).distinct()
+        compileGroupN(els, input)._1.select(col("#g").as("graph")).distinct()
       }
     }
 
@@ -1120,7 +1115,7 @@ object ConstructParser {
         val varDf =
           if (vars.isEmpty) None
           else {
-            val bound = compileGroup(els, quads, ds)
+            val bound = compileGroupN(els, quads, ds)._1
             Some(vars.map(v => bound.select(col(v).as("#resource")))
               .reduce(_ union _))
           }
@@ -1174,17 +1169,24 @@ object ConstructParser {
       * through the projection (GRAPH ?v binds ?v at the outer level) and
       * joins any GROUP BY so aggregates compute per active graph.
       */
-    def selectQuery(expectEnd: Boolean = true): ParsedSelect =
-      selectQueryCtx(expectEnd, None)
+    def selectQuery(expectEnd: Boolean = true): ParsedSelect = {
+      val (run, usesQuads) = selectQueryCtx(expectEnd, None)
+      ParsedSelect(run(_)._1, usesQuads)
+    }
 
+    /** The compiled query — solutions plus the projected vars that may be
+      * UNBOUND in them (a subquery's enclosing group picks §8.3
+      * compatibility joins for those) — and whether its input is the
+      * quad table.
+      */
     private def selectQueryCtx(expectEnd: Boolean,
         subGraphCtx: Option[Tok],
-        lateralExpose: Set[String] = Set.empty): ParsedSelect = {
+        lateralExpose: Set[String] = Set.empty)
+        : (DataFrame => (DataFrame, Set[String]), Boolean) = {
       // NOTE: deliberately does NOT resetState() — a subquery parse must
       // keep the enclosing dsCtx; the per-query fields are reset here and
       // the enclosing group saves/restores its own state around the call
       binds = scala.collection.mutable.LinkedHashMap[String, E]()
-      filters = scala.collection.mutable.ArrayBuffer[Column]()
       sawPattern = false
       bgpVarTerm.clear()
       intVars.clear()
@@ -1413,8 +1415,8 @@ object ConstructParser {
       // evaluation yields a zero/empty aggregate row — the reference's
       // own lateral uses (shacl-targetClass) correlate on keys drawn
       // from the same data, where the two agree.
-      val lateralExposed = lateralExpose.filter(v =>
-        sawPattern && mentionsVar(els, v))
+      val lateralExposed =
+        if (sawPattern) lateralExpose.intersect(boundVars(els)) else Set.empty[String]
       if (lateralExpose.nonEmpty) {
         // an outer var referenced ONLY in expression / EXISTS / MINUS
         // position has no decorrelated form — loud reject, never silent
@@ -1448,23 +1450,12 @@ object ConstructParser {
       }
 
       val bgp = sawPattern
-      val pipeline = !bgp && containsPropFn(els)
+      val where = compileWhere(els, ds)
       // `SELECT *` inside a subquery: expand to this query's WHERE-bound
       // vars (SPARQL §18.2.4.4 — in BGP mode that's exactly bgpVarTerm,
       // in insertion order). Binding-stream mode has no static var list,
       // so '*' stays opaque there and subSelectEl keeps rejecting it.
       val starVars: Seq[(String, Boolean)] = if (bgp) bgpVarTerm.toSeq else Nil
-      lastProjectionNulls = {
-        val m = staticNulls(els)._2
-        items.toSeq.flatMap {
-          case PlainVar(v) if m.contains(v) => Seq(v)
-          // conservative: a derived value is maybe-null when any var it
-          // references is (covers renames and aggregates of nullables)
-          case Derived(v, c, _, _) if refNames(c).intersect(m).nonEmpty => Seq(v)
-          case Star => starVars.map(_._1).filter(m.contains)
-          case _ => Nil
-        }.toSet
-      }
       lastProjection = items.toSeq.flatMap {
         case PlainVar(v) => Seq((v, bgpVarTerm.getOrElse(v, true)))
         case Derived(v, _, _, k) => Seq((v, k == KTerm))
@@ -1475,16 +1466,18 @@ object ConstructParser {
         case Derived(v, _, _, k) if k == KInt => Seq(v)
         case _ => Nil
       }.toSet
-      ParsedSelect { input =>
-        val bindings =
-          if (bgp) compileGroup(els, input, ds)
-          else if (pipeline) compileGroup(els, input, ds, seedWithInput = true)
-          else els.foldLeft(input) {
-            case (df, BindE(v, e)) => df.withColumn(v, e.c)
-            case (df, f: FilterE) => df.filter(f.c)
-            case (_, other) => throw new IllegalArgumentException(
-              s"${elName(other)} requires triple patterns in WHERE")
-          }
+      val run = { (input: DataFrame) =>
+        val (bindings, mn) = where(input)
+        // projected vars that may be UNBOUND: a var the group may leave
+        // unbound or never binds at all (projected as NULL below), and —
+        // conservatively — a derived value over such a var (covers
+        // renames and aggregates of nullables)
+        val nulls = items.toSeq.flatMap {
+          case PlainVar(v) if mn(v) || !bindings.columns.contains(v) => Seq(v)
+          case Derived(v, c, _, _) if refNames(c).exists(mn) => Seq(v)
+          case Star => starVars.map(_._1).filter(mn)
+          case _ => Nil
+        }.toSet
         val hasAgg = groupBys.nonEmpty ||
           items.exists { case Derived(_, _, true, _) => true; case _ => false }
         require(havings.isEmpty || hasAgg,
@@ -1620,8 +1613,9 @@ object ConstructParser {
               .drop(orders.indices.map("#ord" + _).toSeq: _*)
           }
         val off = offsetN.map(ordered.offset).getOrElse(ordered)
-        limitN.map(off.limit).getOrElse(off)
-      }.copy(usesQuads = bgp)
+        (limitN.map(off.limit).getOrElse(off), nulls)
+      }
+      (run, bgp)
     }
 
     /** Possibly-aggregating projection expression: arithmetic (`+ - * /`)
@@ -2111,13 +2105,12 @@ object ConstructParser {
     private case class UrlTextE(src: Either[String, String], v: String)
         extends WhereEl
     /** `{ SELECT … }` — subquery (SPARQL 1.1 §12): only projected vars
-      * are visible, so the compiled frame joins like any pattern.
-      * `nulls` = projected vars that may be UNBOUND (computed statically
-      * from the subquery's element tree at parse time), so the enclosing
+      * are visible, so the compiled frame joins like any pattern. `q`
+      * also reports which projected vars may be UNBOUND, so the enclosing
       * group picks compatibility joins for them.
       */
-    private case class SubSelectE(q: ParsedSelect, vars: Set[String],
-        nulls: Set[String]) extends WhereEl
+    private case class SubSelectE(q: DataFrame => (DataFrame, Set[String]),
+        vars: Set[String]) extends WhereEl
     /** `?json json:unnest ?item` — property function (the reference's
       * magic-predicate extension mechanism, docs/sparql-extensions):
       * explodes a JSON-array value into one solution per element, the
@@ -2131,37 +2124,34 @@ object ConstructParser {
     private case class PropFnE(subj: Either[String, (String, Boolean)],
         objVar: String, pos: Option[Either[String, Int]] = None) extends WhereEl
 
-    /** Does `v` occur in a BINDING position of these elements? — pattern
-      * vars, BINDs, VALUES headers, and the binding-visible sub-groups
+    /** The vars in a BINDING position of these elements — pattern vars,
+      * BINDs, VALUES headers, and the binding-visible sub-groups
       * (GROUP/UNION/OPTIONAL/SERVICE); EXISTS/MINUS do not bind outward.
       */
-    private def mentionsVar(els: Seq[WhereEl], v: String): Boolean =
-      els.exists {
-        case TpE(g, a, b, c) => (Seq(a, b, c) ++ g.toSeq).exists {
-          case VarT(x) => x == v
-          case _ => false
-        }
-        case GroupE(in) => mentionsVar(in, v)
-        case UnionE(gs) => gs.exists(mentionsVar(_, v))
-        case OptionalE(in, _) => mentionsVar(in, v)
-        case ServiceE(_, in, _) => mentionsVar(in, v)
-        case ServiceVarE(x, in, _) => x == v || mentionsVar(in, v)
-        case BindE(x, _) => x == v
-        case MapComputeE(x, _, _, _) => x == v
-        case ValuesE(vars, _) => vars.contains(v)
-        case SubSelectE(_, vars, _) => vars.contains(v)
-        case FsFindE(_, x) => x == v
-        case CsvParseE(_, x, _) => x == v
-        case XmlUnnestE(src, _, x) => x == v || src.exists(_ == v)
-        case UrlTextE(src, x) => x == v || src.exists(_ == v)
-        case PropFnE(subj, objVar, pos) => objVar == v ||
-          subj.exists(_._1 == v) || pos.exists(_.swap.exists(_ == v))
-        case _ => false
-      }
+    private def boundVars(els: Seq[WhereEl]): Set[String] =
+      els.flatMap {
+        case TpE(g, a, b, c) => (Seq(a, b, c) ++ g).collect { case VarT(x) => x }
+        case GroupE(in) => boundVars(in)
+        case UnionE(gs) => gs.flatMap(boundVars)
+        case OptionalE(in, _) => boundVars(in)
+        case ServiceE(_, in, _) => boundVars(in)
+        case ServiceVarE(x, in, _) => boundVars(in) + x
+        case BindE(x, _) => Seq(x)
+        case MapComputeE(x, _, _, _) => Seq(x)
+        case ValuesE(vars, _) => vars
+        case SubSelectE(_, vars) => vars
+        case FsFindE(_, x) => Seq(x)
+        case CsvParseE(_, x, _) => Seq(x)
+        case XmlUnnestE(src, _, x) => src.toSeq :+ x
+        case UrlTextE(src, x) => src.toSeq :+ x
+        case PropFnE(subj, objVar, pos) =>
+          objVar +: (subj.toSeq.map(_._1) ++ pos.flatMap(_.swap.toOption))
+        case _ => Nil
+      }.toSet
 
     /** Does any EXPRESSION or non-outward-binding position inside `els`
       * reference `v`? The LATERAL decorrelation can only correlate on
-      * PATTERN-bound positions ([[mentionsVar]]); a correlated reference
+      * PATTERN-bound positions ([[boundVars]]); a correlated reference
       * in a FILTER/BIND expression or inside EXISTS/MINUS has no
       * decorrelated form here and must reject loudly rather than run
       * with join-not-lateral semantics (review-found).
@@ -2172,8 +2162,8 @@ object ConstructParser {
         case BindE(_, e) => refNames(e.c).contains(v)
         case MapComputeE(_, _, keyVar, body) =>
           keyVar == v || refNames(body.c).contains(v)
-        case ExistsE(in, _) => mentionsVar(in, v) || refsVarDeep(in, v)
-        case MinusE(in) => mentionsVar(in, v) || refsVarDeep(in, v)
+        case ExistsE(in, _) => boundVars(in)(v) || refsVarDeep(in, v)
+        case MinusE(in) => boundVars(in)(v) || refsVarDeep(in, v)
         case GroupE(in) => refsVarDeep(in, v)
         case UnionE(gs) => gs.exists(refsVarDeep(_, v))
         case OptionalE(in, _) => refsVarDeep(in, v)
@@ -2199,7 +2189,6 @@ object ConstructParser {
     private def subSelectEl(graphCtx: Option[Tok] = None,
         lateralExpose: Set[String] = Set.empty): WhereEl = {
       val savedBinds = binds
-      val savedFilters = filters
       val savedSaw = sawPattern
       val savedTerm = bgpVarTerm.toMap
       val savedInts = intVars.toSet
@@ -2208,16 +2197,14 @@ object ConstructParser {
       pendingFilters.clear()
       val savedDepth = groupDepth
       groupDepth = 0
-      val sub = selectQueryCtx(expectEnd = false, subGraphCtx = graphCtx,
+      val (sub, _) = selectQueryCtx(expectEnd = false, subGraphCtx = graphCtx,
         lateralExpose = lateralExpose)
       groupDepth = savedDepth
       pendingFilters.clear()
       pendingFilters ++= savedPending
       val proj = lastProjection
-      val projNulls = lastProjectionNulls
       val projInts = lastProjectionInts
       binds = savedBinds
-      filters = savedFilters
       sawPattern = savedSaw
       dsCtx = savedDs
       bgpVarTerm.clear()
@@ -2232,9 +2219,7 @@ object ConstructParser {
         binds.foreach { case (v, e) => bgpVarTerm(v) = e.term }
       }
       proj.foreach { case (v, t) => bgpVarTerm(v) = t }
-      SubSelectE(sub, proj.map(_._1).toSet, proj.collect {
-        case (v, _) if projNulls.contains(v) => v
-      }.toSet)
+      SubSelectE(sub, proj.map(_._1).toSet)
     }
 
     private def groupBlock(graphCtx: Option[Tok]): Seq[WhereEl] = {
@@ -2395,7 +2380,7 @@ object ConstructParser {
             g match { case VarT(v) => bgpVarTerm(v) = true; case _ => () }
             val inner = groupBlock(Some(VarT("#g")))
             g match {
-              case VarT(v) if mentionsVar(inner, v) =>
+              case VarT(v) if boundVars(inner)(v) =>
                 // ?v may be unbound in SOME solutions (a UNION branch /
                 // OPTIONAL that never mentions it): SPARQL's GRAPH ?v
                 // still binds those to the record graph, so coalesce
@@ -2624,86 +2609,6 @@ object ConstructParser {
       case _: MapComputeE => "map.computeIfAbsent"
     }
 
-    /** Static (parse-time) binding analysis of a group: (bound vars,
-      * maybe-unbound vars). Mirrors [[compileGroupN]]'s dynamic tracking
-      * — OPTIONAL-only vars, UNION branch asymmetry, UNDEF VALUES cells,
-      * nested subquery nulls — so a subquery's nullability is known
-      * BEFORE it compiles.
-      */
-    private def staticNulls(els: Seq[WhereEl]): (Set[String], Set[String]) = {
-      var bound = Set.empty[String]
-      var maybe = Set.empty[String]
-      def tokVar(t: Tok): Option[String] =
-        t match { case VarT(v) => Some(v); case _ => None }
-      def patVars(e: WhereEl): Set[String] = e match {
-        case TpE(g, a, b, c) =>
-          (Seq(a, b, c).flatMap(tokVar) ++ g.flatMap(tokVar)).toSet
-        case _ => Set.empty
-      }
-      els.foreach {
-        case tp: TpE => bound ++= patVars(tp)
-        case BindE(v, e) =>
-          // mirror of the dynamic tracking: maybe-null refs propagate AND
-          // statically-fallible expressions (error→NULL per §17.2) are
-          // maybe-unbound even over all-bound inputs
-          if (refNames(e.c).exists(maybe.contains) ||
-              org.apache.spark.sql.graft.bridge.fallibleToNull(e.c))
-            maybe += v
-          bound += v
-        case MapComputeE(v, _, keyVar, body) =>
-          if (maybe.contains(keyVar) ||
-              refNames(body.c).exists(maybe.contains) ||
-              org.apache.spark.sql.graft.bridge.fallibleToNull(body.c))
-            maybe += v
-          bound += v
-        case _: FilterE => ()
-        case GroupE(inner) =>
-          val (b, m) = staticNulls(inner); bound ++= b; maybe ++= m
-        case UnionE(gs) =>
-          val parts = gs.map(staticNulls)
-          val all = parts.map(_._1).reduce(_ union _)
-          val common = parts.map(_._1).reduce(_ intersect _)
-          bound ++= all
-          maybe ++= parts.flatMap(_._2).toSet ++ (all diff common)
-        case OptionalE(inner, _) =>
-          val (b, m) = staticNulls(inner)
-          maybe ++= m ++ (b diff bound)
-          bound ++= b
-        case _: MinusE | _: ExistsE => () // no new bindings
-        case ValuesE(vars, rows) =>
-          bound ++= vars
-          maybe ++= vars.zipWithIndex.collect {
-            case (v, k) if rows.exists(_(k).isEmpty) => v
-          }
-        case SubSelectE(_, vars, nulls) =>
-          bound ++= vars; maybe ++= nulls
-        case ServiceE(_, inner, silent) =>
-          val (b, m) = staticNulls(inner)
-          // SILENT: an unreachable endpoint binds nothing at all
-          if (silent) maybe ++= b ++ m
-          else { bound ++= b; maybe ++= m }
-        case ServiceVarE(_, inner, silent) =>
-          // even non-SILENT dispatch can bind the inner vars NULL (the
-          // endpoint var may itself be all-NULL ⇒ zero endpoints, inner
-          // columns materialized as NULL on surviving rows)
-          val (b, m) = staticNulls(inner)
-          maybe ++= b ++ m
-          if (!silent) bound ++= b
-        case FsFindE(_, v) => bound += v
-        case PropFnE(_, ov, pos) =>
-          bound += ov
-          pos.foreach { case Left(iv) => bound += iv; case _ => () }
-        case CsvParseE(_, v, _) => bound += v
-        case XmlUnnestE(_, _, v) => bound += v
-        case UrlTextE(Left(_), v) => bound += v
-        case UrlTextE(Right(_), v) =>
-          // variable subject: zero distinct endpoints (all-NULL subject)
-          // binds ?v as a NULL column on surviving rows
-          bound += v; maybe += v
-      }
-      (bound, maybe)
-    }
-
     /** Does the element tree contain a property-function pattern? */
     private def containsPropFn(els: Seq[WhereEl]): Boolean = els.exists {
       case _: PropFnE => true
@@ -2840,25 +2745,18 @@ object ConstructParser {
       * union-by-name with NULLs for disjoint vars, BIND = withColumn,
       * FILTER = post-group predicate (SPARQL §8: filters apply to the
       * whole group regardless of position).
-      */
-    private def compileGroup(els: Seq[WhereEl], quads: DataFrame,
-        ds: DatasetClause = NoDataset,
-        seedWithInput: Boolean = false): DataFrame =
-      compileGroupN(els, quads, ds, seedWithInput)._1
-
-    /** [[compileGroup]] plus the set of vars that may be UNBOUND (NULL)
-      * in the result — OPTIONAL-only vars, vars missing from a UNION
-      * branch, UNDEF VALUES cells. MINUS needs this to decide between the
-      * scale-fast equi anti-join and full §8.3 compatibility semantics.
       *
-      * Subquery-projected vars carry their own statically-computed null
-      * set ([[staticNulls]]), a BIND referencing a maybe-unbound var
+      * Also returns the set of vars that may be UNBOUND (NULL) in the
+      * result — OPTIONAL-only vars, vars missing from a UNION branch,
+      * UNDEF VALUES cells. This is the only place that decides it: joins,
+      * OPTIONAL and MINUS pick between the scale-fast equi-joins and full
+      * §8.3 compatibility semantics from it. A subquery reports its
+      * projected maybe-unbound vars when it compiles (a projected var its
+      * WHERE never binds counts), a BIND referencing a maybe-unbound var
       * propagates the flag, and a BIND whose expression can error to NULL
-      * on ALL-BOUND inputs (e.g. YEAR of a malformed literal) is detected
-      * statically ([[org.apache.spark.sql.graft.bridge.fallibleToNull]])
-      * and tracked too — closing the last documented §8.3 reduction. The
-      * equi path is kept for BINDs of total expressions (concat of bound
-      * vars, arithmetic guarded with full otherwise, plain renames).
+      * on ALL-BOUND inputs is tracked too ([[bindMaybeNull]]). The equi
+      * path is kept for BINDs of total expressions (concat of bound vars,
+      * arithmetic guarded with full otherwise, plain renames).
       */
     private def compileGroupN(els: Seq[WhereEl], quads: DataFrame,
         ds: DatasetClause = NoDataset,
@@ -3133,16 +3031,7 @@ object ConstructParser {
           // one empty mapping) — the io.sparql docs example's first
           // branch is exactly this shape
           if (acc == null) acc = ConstructParser.unitFrame(quads.sparkSession)
-          // a BIND over a maybe-unbound var is itself maybe-unbound
-          // (NULL propagates through expressions), and a BIND whose
-          // expression can ERROR to NULL on all-bound inputs (date
-          // accessor on a malformed literal, numeric coercion of a
-          // non-numeric term, try-casts — detected statically from the
-          // compiled catalyst tree) is maybe-unbound too, so later
-          // joins/MINUS on ?v route through §8.3 compatibility
-          if (refNames(e.c).exists(maybeNull.contains) ||
-              org.apache.spark.sql.graft.bridge.fallibleToNull(e.c))
-            maybeNull += v
+          if (bindMaybeNull(e.c, maybeNull)) maybeNull += v
           acc = acc.withColumn(v, e.c)
         case MapComputeE(v, mapId, keyVar, body) =>
           // execution-local map: lambda evaluated once per DISTINCT key
@@ -3170,9 +3059,7 @@ object ConstructParser {
           // the reference's map lookup of an unbound key
           acc = acc.join(memo, Seq(keyVar), "left")
             .withColumnRenamed("#map_value", v)
-          if (maybeNull.contains(keyVar) ||
-              refNames(body.c).exists(maybeNull.contains) ||
-              org.apache.spark.sql.graft.bridge.fallibleToNull(body.c))
+          if (maybeNull.contains(keyVar) || bindMaybeNull(body.c, maybeNull))
             maybeNull += v
         case f: FilterE => conds += f.c
         case ValuesE(vars, rows) =>
@@ -3196,7 +3083,9 @@ object ConstructParser {
             else Bgp.join(acc, inline) // tiny frame: AQE broadcasts it
             maybeNull ++= undefVars
           }
-        case SubSelectE(q, _, nulls) => joinIn(q.run(quads), nulls)
+        case SubSelectE(q, _) =>
+          val (df, mn) = q(quads)
+          joinIn(df, mn)
         case ServiceE(url, inner, silent) =>
           // local-file SERVICE: read the endpoint's dataset (auto-probed
           // N-Quads/TriG), evaluate the inner group AGAINST THAT FILE,
@@ -3386,7 +3275,7 @@ object ConstructParser {
           val spark = quads.sparkSession
           val eps = ConstructParser.collectEndpoints(filterGated(acc), v,
             s"SERVICE ?$v")
-          val (innerBound, innerMaybe) = staticNulls(inner)
+          val innerVars = boundVars(inner)
           if (eps.isEmpty) {
             // zero endpoints = every endpoint value NULL; the non-empty
             // path's join drops NULL-endpoint rows, so drop them here
@@ -3394,7 +3283,7 @@ object ConstructParser {
             // references resolve — registered maybe-unbound so later
             // joins stay compatible
             acc = acc.where(col(v).isNotNull)
-            val missing = (innerBound ++ innerMaybe -- acc.columns).toSeq.sorted
+            val missing = (innerVars -- acc.columns).toSeq.sorted
             missing.foreach { iv =>
               acc = acc.withColumn(iv, lit(null).cast("string")) }
             maybeNull ++= missing
@@ -3429,12 +3318,11 @@ object ConstructParser {
             // every endpoint SILENT-failed ⇒ only unit frames unioned:
             // the inner vars have no columns at all — materialize them
             // as NULL so projections/filters on them still resolve
-            val missing = (innerBound ++ innerMaybe -- union.columns)
-              .toSeq.sorted
+            val missing = (innerVars -- union.columns).toSeq.sorted
             missing.foreach { iv =>
               union = union.withColumn(iv, lit(null).cast("string")) }
             val nulls = frames.flatMap(_._2).toSet ++ missing ++
-              (if (sawFailure) innerBound ++ innerMaybe else innerMaybe)
+              (if (sawFailure) innerVars else Set.empty)
             joinIn(union, nulls)
           }
         case PropFnE(subj, ov, pos) =>
@@ -3490,6 +3378,17 @@ object ConstructParser {
     /** Column names a filter expression references (unresolved attrs). */
     private def refNames(c: Column): Set[String] =
       org.apache.spark.sql.graft.bridge.referencedNames(c)
+
+    /** Is a BIND of `c` maybe-unbound? It is over a maybe-unbound var
+      * (NULL propagates through expressions), and when the expression can
+      * ERROR to NULL on all-bound inputs (date accessor on a malformed
+      * literal, numeric coercion of a non-numeric term, try-casts —
+      * detected statically from the compiled catalyst tree), so later
+      * joins/MINUS on the var route through §8.3 compatibility.
+      */
+    private def bindMaybeNull(c: Column, maybeNull: String => Boolean): Boolean =
+      refNames(c).exists(maybeNull) ||
+        org.apache.spark.sql.graft.bridge.fallibleToNull(c)
 
     /** Pattern-position spec: variables project, constants filter (as
       * canonical term strings, matching the quad table's encoding).

@@ -229,10 +229,16 @@ class PathSpec extends AnyFunSuite {
          |  ?s ex:next ?o .
          |  { SELECT ?s (COUNT(*) AS ?n) WHERE { ?s ex:next ?x . } GROUP BY ?s }
          |}""".stripMargin
-    val got = ConstructParser.parseSelect(q).run(chain).collect()
+    val df = ConstructParser.parseSelect(q).run(chain)
+    val got = df.collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(got === Set((t("n1"), t("n2"), 1L), (t("n2"), t("n3"), 1L),
       (t("n3"), t("n4"), 1L)))
+    // every projected var of the subquery is bound, so it keeps the
+    // equi-join: no §8.3 compatibility (nested-loop/cartesian) join
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("NestedLoopJoin") && !plan.contains("CartesianProduct"),
+      s"subquery with all-bound projections left the equi-join:\n$plan")
     // inner-only variables must NOT leak: outside the subquery ?x is
     // simply UNBOUND (SPARQL §18.2.4.4 — projection of an out-of-scope
     // var is NULL for every solution, not an error)
@@ -526,15 +532,18 @@ class PathSpec extends AnyFunSuite {
   test("subquery-projected OPTIONAL-only vars merge compatibly (§8.3)") {
     // the subquery projects ?l, which its never-matching OPTIONAL leaves
     // unbound — joining against the outer ?l binding must MERGE (unbound
-    // compatible with anything), not equi-drop the NULL rows
-    val q = ConstructParser.parseSelect(
-      s"""PREFIX ex: <$EX>
-         |SELECT ?s ?l WHERE {
-         |  ?s ex:label ?l .
-         |  { SELECT ?s ?l WHERE {
-         |      ?s ex:next ?o . OPTIONAL { ?s ex:nothing ?l . } } }
-         |}""".stripMargin)
-    assert(pairs(q.run(chain)) === Set((t("n1"), t("a"))))
+    // compatible with anything), not equi-drop the NULL rows. A projected
+    // var the inner WHERE never binds at all is unbound the same way.
+    for (inner <- Seq("?s ex:next ?o . OPTIONAL { ?s ex:nothing ?l . }",
+        "?s ex:next ?o")) {
+      val q = ConstructParser.parseSelect(
+        s"""PREFIX ex: <$EX>
+           |SELECT ?s ?l WHERE {
+           |  ?s ex:label ?l .
+           |  { SELECT ?s ?l WHERE { $inner } }
+           |}""".stripMargin)
+      assert(pairs(q.run(chain)) === Set((t("n1"), t("a"))), inner)
+    }
   }
 
   test("ORDER BY a non-projected var sorts solutions before projection") {
