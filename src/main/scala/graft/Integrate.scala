@@ -332,16 +332,10 @@ object Integrate {
 
     // execute in order over one dataset; attribute query outputs to their
     // source argument (the --split provenance cluster)
-    import spark.implicits._
-    var ds = Seq.empty[(String, String, String, String)]
-      .toDF("graph", "subj", "pred", "obj")
-    val outputs = scala.collection.mutable.ArrayBuffer[
-      (Int, Script.StmtOutput)]()
-    parts.foreach { case (partIdx, stmt) =>
-      val (next, o) = Script.applyStmt(spark, ds, stmt)
-      ds = next
-      o.foreach(x => outputs += ((partIdx, x)))
-    }
+    val (ds, stmtOutputs) =
+      Script.fold(spark, Script.emptyQuads(spark), parts.map(_._2))
+    val partOf = parts.map(_._1).toIndexedSeq
+    val outputs = stmtOutputs.map { case (k, o) => (partOf(k), o) }
 
     val fmt = pickFormat(cfg)
     val trig = fmt == "trig"

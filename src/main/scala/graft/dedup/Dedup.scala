@@ -185,10 +185,14 @@ object Dedup {
     *      (bounded work at the price of a bounded recall loss; OFF by
     *      default = Long.MaxValue so small-scale results stay exact).
     *
-    * Shingles are localCheckpoint'ed (lazy): materialized once, reused by
-    * the signature/verify stages, and the blocks are released by the
+    * Shingles are localCheckpoint'ed eagerly: materialized once, reused
+    * by the signature/verify stages, and the blocks are released by the
     * ContextCleaner when the result goes out of scope — no cache leak
-    * across repeated calls.
+    * across repeated calls. A lazy checkpoint would be filled by the
+    * first job that reads it, and the adaptive query stages of one
+    * action read it concurrently, so two of them would compute the same
+    * partitions (duplicate-block warnings, and metric updates for
+    * accumulators the lost first plan no longer holds).
     */
   def minhashPairs(docs: DataFrame, n: Int, threshold: Double,
       numHashes: Int = 32, rowsPerBand: Int = 4,
@@ -198,10 +202,10 @@ object Dedup {
     // without the lineage cut the md5+window+scan pipeline re-executes
     // for each of them (the r10 before-plan shows 4 copies of the
     // exact() subtree). Metadata-scale rows (3 narrow cols per doc).
-    val ex = exact(docs).truncateLineage(false)
+    val ex = exact(docs).truncateLineage(true)
     val reps = docs.join(
       ex.filter(col("doc_id") === col("rep_id")).select("doc_id"), "doc_id")
-    val sh = hashedShingles(reps, n).truncateLineage(false)
+    val sh = hashedShingles(reps, n).truncateLineage(true)
     val sig = minhashSignatures(sh, numHashes)
     val buckets0 = lshBuckets(sig, numHashes, rowsPerBand)
     val buckets = capBuckets(buckets0,

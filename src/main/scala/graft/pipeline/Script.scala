@@ -12,7 +12,7 @@ import graft.Checkpoints.TruncateOps
   * Spark-first: the mutable dataset is a quad DataFrame that each update
   * statement replaces ([[applyStmt]]), so later statements observe the
   * state as of their position in the sequence. The `integrate` CLI and
-  * the `--server` endpoint both run statements through [[applyStmt]].
+  * the `--server` endpoint both run statements through [[fold]].
   */
 object Script {
 
@@ -50,15 +50,23 @@ object Script {
     */
   def runSparql(spark: SparkSession, text: String,
       initial: Option[DataFrame] = None): SparqlRun = {
-    var ds = emptyQuads(spark, initial)
-    var last: Option[DataFrame] = None
-    graft.rules.ConstructParser.parseScript(text).foreach { stmt =>
-      val (next, out) = applyStmt(spark, ds, stmt)
-      ds = next
-      out.foreach(o => last = Some(o.df))
-    }
-    SparqlRun(ds, last)
+    val (ds, outs) = fold(spark, initial.getOrElse(emptyQuads(spark)),
+      graft.rules.ConstructParser.parseScript(text))
+    SparqlRun(ds, outs.lastOption.map(_._2.df))
   }
+
+  /** Apply statements in order, each to the dataset the previous one left
+    * ([[applyStmt]]): the final dataset, and each query statement's
+    * output with that statement's index in `stmts`.
+    */
+  private[graft] def fold(spark: SparkSession, initial: DataFrame,
+      stmts: Seq[graft.rules.ConstructParser.ScriptStmt])
+      : (DataFrame, Seq[(Int, StmtOutput)]) =
+    stmts.zipWithIndex.foldLeft((initial, Vector.empty[(Int, StmtOutput)])) {
+      case ((ds, outs), (stmt, k)) =>
+        val (next, o) = applyStmt(spark, ds, stmt)
+        (next, outs ++ o.map(k -> _))
+    }
 
   /** A query statement's output: quads (CONSTRUCT/DESCRIBE — route to the
     * RDF sink) vs a binding table (SELECT/ASK — route to the result-set
@@ -69,19 +77,18 @@ object Script {
   final case class QuadsOutput(df: DataFrame) extends StmtOutput
   final case class TableOutput(df: DataFrame) extends StmtOutput
 
-  private def emptyQuads(spark: SparkSession,
-      initial: Option[DataFrame]): DataFrame = {
+  /** The empty quad dataset a script starts from. */
+  private[graft] def emptyQuads(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    initial.getOrElse(
-      Seq.empty[(String, String, String, String)]
-        .toDF("graph", "subj", "pred", "obj"))
+    Seq.empty[(String, String, String, String)]
+      .toDF("graph", "subj", "pred", "obj")
   }
 
   /** Execute ONE script statement against the current dataset state.
     * Returns the new state and, for query statements, the output frame —
-    * the single execution step [[runSparql]] folds and the integrate CLI
-    * streams per statement (SparqlIntegrateCmdImpls.java:865-884 streams
-    * each statement's result to the sink as it executes).
+    * the single execution step [[fold]] applies for [[runSparql]], the
+    * integrate CLI and the server (SparqlIntegrateCmdImpls.java:865-884
+    * streams each statement's result to the sink as it executes).
     */
   def applyStmt(spark: SparkSession, dsIn: DataFrame,
       stmt: graft.rules.ConstructParser.ScriptStmt)

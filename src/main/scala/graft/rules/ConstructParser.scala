@@ -72,12 +72,13 @@ object ConstructParser {
       rules: Seq[Rule],
       where: Option[DataFrame => DataFrame],
       needsRowId: Boolean = false,
-      /** Does `run`'s input frame act as the QUAD DATASET (BGP mode)?
-        * False = binding-stream/pipeline mode: the input is a solution
-        * stream, so a DATASET context (Script/integrate) must seed with
-        * the unit solution — SPARQL §18.2's Z = {μ0} for a pattern-less
-        * group — not the quad table (one row per quad would multiply a
-        * BIND-only template; an empty dataset would wrongly kill it).
+      /** Does `run`'s input frame act as the QUAD DATASET?
+        * False = the WHERE reads no quads (`P.readsQuads`: binding-
+        * stream/pipeline mode, or only pattern-free subqueries), so a
+        * DATASET context (Script/integrate) must seed with the unit
+        * solution — SPARQL §18.2's Z = {μ0} for a pattern-less group —
+        * not the quad table (one row per quad would multiply a BIND-only
+        * template; an empty dataset would wrongly kill it).
         */
       usesQuads: Boolean = true) {
     def run(input: DataFrame): DataFrame =
@@ -429,7 +430,11 @@ object ConstructParser {
     * `graph`) — callers semi-join the quad stream against it
     * ([[graft.ops.NgsOps.askFilterSparql]]).
     */
-  def parseGraphAsk(text: String): ParsedSelect = new P(text).graphAskQuery()
+  def parseGraphAsk(text: String): ParsedSelect = {
+    val p = new P(text)
+    p.newStatement(perRecordGraph = true)
+    p.askQuery()
+  }
 
   /** Per-graph CONSTRUCT (the reference's `ngs map --sparql 'CONSTRUCT
     * …'`, NgsCmdImpls.java:191-216): the query runs against EACH named
@@ -445,8 +450,11 @@ object ConstructParser {
     * (`GRAPH ?v { ?s ?p ?o BIND(STR(?v) AS ?w) }`) is unsupported and
     * fails loudly at compile (UNRESOLVED_COLUMN), never silently.
     */
-  def parseGraphConstruct(text: String): ParsedConstruct =
-    new P(text).graphConstructQuery()
+  def parseGraphConstruct(text: String): ParsedConstruct = {
+    val p = new P(text)
+    p.newStatement(perRecordGraph = true)
+    p.query()
+  }
 
   /** SPARQL DESCRIBE text (the 4th query form): `DESCRIBE <iri>… [WHERE
     * {…}]` / `DESCRIBE ?v… WHERE {…}`. Emits the Concise Bounded
@@ -496,7 +504,7 @@ object ConstructParser {
   def parseConstructSequence(text: String): Seq[ParsedConstruct] = {
     val p = new P(text)
     val out = scala.collection.mutable.ArrayBuffer[ParsedConstruct]()
-    while (p.hasMore) out += p.query(expectEnd = false)
+    while (p.hasMore) { p.newStatement(); out += p.query(expectEnd = false) }
     require(out.nonEmpty, "empty statement sequence")
     out.toSeq
   }
@@ -572,6 +580,138 @@ object ConstructParser {
     }
   }
 
+  /** SPARQL dataset clause (§13.2): `FROM` graphs form the default
+    * graph that un-GRAPHed patterns match; `FROM NAMED` graphs are the
+    * only ones GRAPH patterns see. With no clause, both views pass the
+    * whole quad table through (this engine's default: patterns span
+    * the dataset).
+    */
+  private final case class DatasetClause(from: Seq[String], fromNamed: Seq[String]) {
+    private val hasClause = from.nonEmpty || fromNamed.nonEmpty
+    /** A FROM IRI names a LOCAL FILE (loaded as a document, the
+      * reference's Jena dataset-description behavior —
+      * docs/examples/test.sparql:2 `FROM <dcat.ttl>`) iff it is a
+      * `file:` IRI or a relative IRI that resolves to an existing
+      * regular file under the script base; every other IRI keeps the
+      * session-graph-scoping semantics. The split is decided per entry
+      * so the two styles mix.
+      */
+    // per-query memos: default()/named() run once per PATTERN in the
+    // WHERE clause, and without these every call would re-check the
+    // filesystem and re-build a file scan (readRdfAuto's probe runs an
+    // eager take(200) Spark job each time)
+    private val backedMemo =
+      scala.collection.mutable.HashMap[String, Boolean]()
+    private val loadMemo =
+      scala.collection.mutable.HashMap[String, DataFrame]()
+    private def isFileBacked(bracketed: String): Boolean =
+      backedMemo.getOrElseUpdate(bracketed, isFileBacked0(bracketed))
+    private def isFileBacked0(bracketed: String): Boolean = {
+      val iri = ConstructParser.stripAngles(bracketed)
+      if (iri.startsWith("file:")) true
+      else if (iri.matches("^[a-zA-Z][a-zA-Z0-9+.-]*:.*")) false
+      else {
+        val exists = java.nio.file.Files.isRegularFile(
+          java.nio.file.Paths.get(ConstructParser.resolveFileIri(iri)))
+        // a relative IRI that NAMES an RDF file (by extension) but does
+        // not resolve to one is almost certainly a typo'd path — fail
+        // loudly instead of silently matching no session graph; bare
+        // names (`FROM <g1>`) keep graph-name semantics
+        require(exists || !iri.matches(
+          "(?i).*\\.(ttl|nt|nq|trig|rdf|jsonld)(\\.(gz|bz2))?$"),
+          s"FROM <$iri>: looks like a file reference but no such file " +
+            s"exists under ${ConstructParser.fileBase}")
+        exists
+      }
+    }
+    private def scope(quads: DataFrame, graphs: Seq[String],
+        fileGraph: String => Column): DataFrame =
+      if (!hasClause) quads
+      else {
+        val (files, names) = graphs.partition(isFileBacked)
+        val base =
+          if (names.nonEmpty) {
+            require(quads.columns.contains("graph"),
+              "FROM/FROM NAMED need a quad table with a graph column")
+            quads.where(col("graph").isin(names: _*))
+          } else null
+        // SPARQL datasets are built from graphs = triple SETS (RDF
+        // merge): duplicate FROM entries and triples shared across
+        // files collapse; the session part keeps its own multiplicity
+        val loaded = files.distinct.map { f =>
+          loadMemo.getOrElseUpdate(f, {
+            // RDF merge (SPARQL §13.2 builds the dataset from graph
+            // MERGES, not unions): blank nodes are document-scoped, so
+            // `_:b0` in two FROM files must stay two nodes — relabel
+            // apart with a per-file tag before the union (Jena
+            // relabels per document the same way)
+            val tag = "m" + java.lang.Integer.toHexString(
+              scala.util.hashing.MurmurHash3.stringHash(f)) + "."
+            def relabel(c: Column): Column =
+              when(c.startsWith("_:"),
+                concat(lit("_:" + tag), c.substr(lit(3), length(c))))
+                .otherwise(c)
+            val df = graft.sources.RdfIO.readRdfAuto(quads.sparkSession,
+              ConstructParser.resolveFileIri(ConstructParser.stripAngles(f)))
+            df.withColumn("subj", relabel(col("subj")))
+              .withColumn("obj", relabel(col("obj")))
+          }).withColumn("graph", fileGraph(f))
+        }
+        val loadedSet =
+          if (loaded.isEmpty) None
+          else Some(loaded.reduce(_.unionByName(_))
+            .dropDuplicates(Seq("graph", "subj", "pred", "obj")))
+        val parts = Option(base).toSeq ++ loadedSet.toSeq
+        if (parts.isEmpty) {
+          // graphs empty for this view: zero rows, but keep the quad
+          // schema so patterns still compile
+          if (quads.columns.contains("graph")) quads.where(lit(false))
+          else quads.where(lit(false))
+            .withColumn("graph", lit("<urn:x-arq:DefaultGraph>"))
+        } else parts.reduce(_.unionByName(_))
+      }
+    // FROM files merge into the DEFAULT graph; FROM NAMED files become
+    // a named graph whose name is the IRI as WRITTEN (deterministic
+    // regardless of cwd — Jena resolves to an absolute IRI instead,
+    // a documented divergence)
+    def default(quads: DataFrame): DataFrame =
+      scope(quads, from, _ => lit("<urn:x-arq:DefaultGraph>"))
+    def named(quads: DataFrame): DataFrame =
+      scope(quads, fromNamed, f => lit(f))
+  }
+
+  /** The variable scope of one query or subquery (SPARQL 1.1 §12: a
+    * subquery sees only the variables it projects). Every query and
+    * subquery parses under a fresh one; a subquery inherits only its
+    * parent's dataset clause `ds`, and a lambda body compiles under its
+    * call site's scope.
+    */
+  private final class Scope(var ds: DatasetClause = DatasetClause(Nil, Nil)) {
+    // BIND targets and their expressions, read in binding-stream mode
+    val binds = scala.collection.mutable.LinkedHashMap[String, E]()
+    // pattern mode: flips when the first triple pattern, VALUES block
+    // or subquery is parsed; bgpVarTerm then maps every WHERE-bound
+    // variable to "holds a term?"
+    var sawPattern = false
+    val bgpVarTerm = scala.collection.mutable.LinkedHashMap[String, Boolean]()
+    // vars known to hold xsd:integer VALUES (subselect COUNT
+    // projections) — templates serialize them as typed literals
+    val intVars = scala.collection.mutable.HashSet[String]()
+    // object vars bound by property functions before pattern mode
+    // flips, and the subset whose values are TERMS (csv:parse rows,
+    // xml:unnest matches), not raw strings like json:unnest elements
+    val propFnVars = scala.collection.mutable.ArrayBuffer[String]()
+    val propFnTermVars = scala.collection.mutable.HashSet[String]()
+    // statically traceable lambdas: BIND target var → the full lambda
+    // literal term (see the BIND parse)
+    val lambdaBinds = scala.collection.mutable.HashMap[String, String]()
+    // group-nesting depth + the (slot, source-offset) of every plain
+    // FILTER awaiting its §17.2 re-parse at the outermost group close
+    var groupDepth = 0
+    val pendingFilters =
+      scala.collection.mutable.ArrayBuffer[(Array[Column], Int)]()
+  }
+
   private[rules] final class P(s: String, ctx: EvalCtx = EvalCtx(),
       termInputVars: Boolean = false) {
     private var i = 0
@@ -598,41 +738,42 @@ object ConstructParser {
     // BASE <iri> from the prologue; carries across a statement sequence
     // like PREFIX does (SPARQL §4.1.1)
     private var baseIri: Option[String] = None
-    private var binds = scala.collection.mutable.LinkedHashMap[String, E]()
-    // group-nesting depth + the (slot, source-offset) of every plain
-    // FILTER awaiting its §17.2 re-parse at the outermost group close
-    private var groupDepth = 0
-    // per-record query forms (graphAskQuery / graphConstructQuery): the
-    // dataset of each record holds exactly one named graph, so explicit
-    // GRAPH operands resolve against the record's graph (#g)
-    private var perRecordGraph = false
-    private val pendingFilters =
-      scala.collection.mutable.ArrayBuffer[(Array[Column], Int)]()
-    // BGP mode state: flips when the first triple pattern is parsed;
-    // bgpVarTerm maps every WHERE-bound variable to "holds a term?"
-    private var sawPattern = false
-    private val bgpVarTerm = scala.collection.mutable.LinkedHashMap[String, Boolean]()
-    /** Projection of the most recent [[selectQuery]] parse:
-      * (var, holds-a-term?) — lets an enclosing group register a
-      * subquery's visible variables.
+
+    /** The state of one statement, shared by its subqueries.
+      * `perRecordGraph`: the per-record query forms ([[parseGraphAsk]],
+      * [[parseGraphConstruct]]) — each record's dataset holds exactly one
+      * named graph, so un-GRAPHed patterns and explicit GRAPH operands
+      * resolve against the record's graph (#g).
       */
-    private var lastProjection: Seq[(String, Boolean)] = Nil
-    // object vars bound by property functions before BGP mode flips
-    private val propFnVars = scala.collection.mutable.ArrayBuffer[String]()
-    // the subset of propFnVars whose values are TERMS (csv:parse rows,
-    // xml:unnest matches), not raw strings like json:unnest elements
-    private val propFnTermVars = scala.collection.mutable.HashSet[String]()
+    private final class Stmt(val perRecordGraph: Boolean = false) {
+      // `WITH <g>` update scoping: un-GRAPHed template AND pattern triples
+      // target/match this graph instead of the default (SPARQL Update
+      // §3.1.3)
+      var withCtx: Option[String] = None
+      /** Execution-local maps (norse:map.*): mapId → memo frame with
+        * columns (key, value). Statement-scoped: every value is a
+        * deterministic function of its key (key-only row fingerprint), so
+        * re-running the parsed statement reproduces identical maps — the
+        * replayable-by-content design RAND()/UUID() already follow.
+        */
+      val mapMemos = scala.collection.mutable.HashMap[String, DataFrame]()
+    }
+
+    private var scope = new Scope()
+    private var stmt = new Stmt()
+
+    /** Start the next statement: fresh statement state and scope. */
+    private[rules] def newStatement(perRecordGraph: Boolean = false): Unit = {
+      stmt = new Stmt(perRecordGraph)
+      scope = new Scope()
+    }
+
     // fresh labels for `[]` anonymous pattern nodes
     private var anonCounter = 0
     // expression-kind constants + the kind of the most recent aggExpr()
     // parse (single-threaded parser: read immediately after the call)
     private val KOther = 0; private val KTerm = 1; private val KInt = 2
     private var lastExprKind: Int = KOther
-    // WHERE-scoped vars known to hold xsd:integer VALUES (subselect
-    // COUNT projections) — templates serialize them as typed literals
-    private val intVars = scala.collection.mutable.HashSet[String]()
-    /** Int-valued vars projected by the most recent [[selectQuery]]. */
-    private var lastProjectionInts: Set[String] = Set.empty
     /** Set by the expression compiler when it parses a
       * `norse:map.computeIfAbsent(mapId, ?key, fn)` call: (mapId text,
       * key var, compiled lambda body over the key column). Consumed by
@@ -640,14 +781,6 @@ object ConstructParser {
       * consumer fails loudly.
       */
     private var pendingMapCompute: Option[(String, String, E, E)] = None
-    /** Execution-local maps (norse:map.*): mapId → memo frame with
-      * columns (key, value). Query-instance-scoped: every value is a
-      * deterministic function of its key (key-only row fingerprint), so
-      * re-running the parsed query reproduces identical maps — the
-      * replayable-by-content design RAND()/UUID() already follow.
-      */
-    private val mapMemos =
-      scala.collection.mutable.HashMap[String, DataFrame]()
     // triples generated by `[ p o ; … ]` property lists while a
     // statement is being tokenized — drained by tripleLines into the
     // surrounding template/pattern block (SPARQL §19.6 / Turtle §2.7)
@@ -674,20 +807,13 @@ object ConstructParser {
       */
     private def registerPfVar(v: String, isTerm: Boolean,
         rebind: Boolean = true): Unit = {
-      propFnVars += v
-      if (isTerm) propFnTermVars += v
+      scope.propFnVars += v
+      if (isTerm) scope.propFnTermVars += v
       // rebind = the PF OVERWRITES the var's value (its term-ness must
       // follow); zip-capable index vars join instead, keeping theirs
-      if (sawPattern && (rebind || !bgpVarTerm.contains(v)))
-        bgpVarTerm(v) = isTerm
+      if (scope.sawPattern && (rebind || !scope.bgpVarTerm.contains(v)))
+        scope.bgpVarTerm(v) = isTerm
     }
-    // the enclosing query's dataset clause: subqueries inherit it when
-    // they declare no FROM of their own (SPARQL subqueries share the
-    // outer dataset)
-    private var dsCtx: DatasetClause = DatasetClause(Nil, Nil)
-    // `WITH <g>` update scoping: un-GRAPHed template AND pattern triples
-    // target/match this graph instead of the default (SPARQL Update §3.1.3)
-    private var withCtx: Option[String] = None
 
     /** Lookahead: does the `{` at the cursor open a `{ SELECT … }` subquery? */
     private def subselectAhead: Boolean = {
@@ -698,18 +824,6 @@ object ConstructParser {
     }
 
     def hasMore: Boolean = { skipWs(); i < n }
-
-    private def resetState(): Unit = {
-      binds = scala.collection.mutable.LinkedHashMap[String, E]()
-      sawPattern = false
-      bgpVarTerm.clear()
-      intVars.clear()
-      dsCtx = DatasetClause(Nil, Nil)
-      withCtx = None
-      propFnVars.clear()
-      propFnTermVars.clear()
-      perRecordGraph = false
-    }
 
     private def prefixLoop(): Unit = {
       skipWs()
@@ -734,7 +848,6 @@ object ConstructParser {
     }
 
     def query(expectEnd: Boolean = true): ParsedConstruct = {
-      resetState()
       prefixLoop()
       if (!kw("CONSTRUCT")) fail("expected CONSTRUCT")
       skipWs()
@@ -742,25 +855,49 @@ object ConstructParser {
       // pattern doubles as the template (plain triple patterns only)
       val short = peek != '{'
       val templates = if (short) Seq.empty else templateBlock()
-      val ds = datasetClause()
-      dsCtx = ds
+      val els = whereClause(expectEnd, "CONSTRUCT")
+      val tpl = if (short) patternTemplates(els) else templates
+      // per record (README-NGS.md's Rules): default-graph templates emit
+      // into the record's graph; a shorthand's pattern templates already
+      // carry the #g scope
+      finishConstruct(if (!stmt.perRecordGraph) tpl else tpl.map {
+        case (a, b, c, g) if g == defaultGraphTok => (a, b, c, VarT("#g"): Tok)
+        case t => t
+      }, els, scope.ds)
+    }
+
+    /** The dataset clause and WHERE group of a CONSTRUCT or ASK, through
+      * the statement's end. A per-record statement has no dataset clause,
+      * and its un-GRAPHed patterns match the record's graph (#g).
+      */
+    private def whereClause(expectEnd: Boolean, form: String): Seq[WhereEl] = {
+      val perRecord = stmt.perRecordGraph
+      if (perRecord) { skipWs(); scope.bgpVarTerm("#g") = true }
+      else scope.ds = datasetClause()
       if (!kw("WHERE")) { // keyword is optional before a bare group
         skipWs()
         if (peek != '{') fail("expected WHERE or a group pattern")
       }
       skipWs()
-      val els = groupBlock(graphCtx = None)
+      val els = groupBlock(if (perRecord) Some(VarT("#g")) else None)
+      statementEnd(expectEnd, form)
+      require(!perRecord || scope.sawPattern,
+        s"per-graph $form needs at least one triple pattern")
+      els
+    }
+
+    /** An optional `;` separator, then (with `expectEnd`) the input end. */
+    private def statementEnd(expectEnd: Boolean, form: String): Unit = {
       skipWs()
-      if (peek == ';') i += 1 // optional statement separator
+      if (peek == ';') i += 1
       skipWs()
-      if (expectEnd && i < n) fail("trailing input")
-      finishConstruct(if (short) patternTemplates(els) else templates, els, ds)
+      if (expectEnd && i < n) fail(s"trailing input after $form query")
     }
 
     /** Resolve templates + WHERE elements into a [[ParsedConstruct]]
       * (shared by CONSTRUCT queries and INSERT/DELETE … WHERE updates).
       * In binding-stream mode the templates apply to the input directly,
-      * their BIND vars inline through [[binds]] and the FILTERs forming
+      * their BIND vars inline through `scope.binds` and the FILTERs forming
       * the rule's `where`; otherwise [[compileWhere]] binds the input
       * first.
       */
@@ -780,7 +917,7 @@ object ConstructParser {
         }))
       ParsedConstruct(rules,
         if (stream) None else Some(compileWhere(els, ds).andThen(_._1)),
-        needsRowId = mintsBnodes, usesQuads = sawPattern)
+        needsRowId = mintsBnodes, usesQuads = readsQuads(els))
     }
 
     /** Binding-stream mode: no triple pattern and no property function,
@@ -788,7 +925,7 @@ object ConstructParser {
       * (checked here, at parse time).
       */
     private def bindingStream(els: Seq[WhereEl]): Boolean = {
-      val stream = !sawPattern && !containsPropFn(els)
+      val stream = !scope.sawPattern && !containsPropFn(els)
       if (stream) els.foreach {
         case _: BindE | _: FilterE => ()
         case other => fail(s"${elName(other)} requires triple patterns " +
@@ -806,7 +943,7 @@ object ConstructParser {
       */
     private def compileWhere(els: Seq[WhereEl],
         ds: DatasetClause): DataFrame => (DataFrame, Set[String]) =
-      if (sawPattern) compileGroupN(els, _, ds)
+      if (scope.sawPattern) compileGroupN(els, _, ds)
       else if (!bindingStream(els)) compileGroupN(els, _, ds, seedWithInput = true)
       else input => els.foldLeft((input, Set.empty[String])) {
         case ((df, mn), BindE(v, e)) =>
@@ -846,12 +983,12 @@ object ConstructParser {
       // WHERE graph context: USING (when present) overrides WITH
       def whereCtx(ds: DatasetClause): Option[Tok] =
         if (ds.from.nonEmpty || ds.fromNamed.nonEmpty) None
-        else withCtx.map(IriT)
+        else stmt.withCtx.map(IriT)
 
       def insertTail(): ScriptStmt = {
         skipWs()
         if (kw("DATA")) {
-          require(withCtx.isEmpty, "WITH is not allowed before INSERT DATA")
+          require(stmt.withCtx.isEmpty, "WITH is not allowed before INSERT DATA")
           skipWs()
           InsertDataStmt(constQuads(templateBlock()))
         } else {
@@ -867,7 +1004,7 @@ object ConstructParser {
       def deleteTail(): ScriptStmt = {
         skipWs()
         if (kw("DATA")) {
-          require(withCtx.isEmpty, "WITH is not allowed before DELETE DATA")
+          require(stmt.withCtx.isEmpty, "WITH is not allowed before DELETE DATA")
           skipWs()
           DeleteDataStmt(constQuads(templateBlock()))
         } else if (kw("WHERE")) {
@@ -875,7 +1012,7 @@ object ConstructParser {
           // §3.1.3.3); un-GRAPHed patterns delete from the default (or
           // WITH) graph
           skipWs()
-          val els = groupBlock(withCtx.map(IriT))
+          val els = groupBlock(stmt.withCtx.map(IriT))
           DeleteWhereStmt(finishConstruct(patternTemplates(els), els))
         } else {
           val templates = templateBlock()
@@ -915,7 +1052,7 @@ object ConstructParser {
       }
 
       while (hasMore) {
-        resetState()
+        newStatement()
         prefixLoop()
         skipWs()
         starts += i // each loop pass appends exactly one statement
@@ -940,7 +1077,7 @@ object ConstructParser {
           // WITH <g> DELETE/INSERT …: un-GRAPHed templates AND patterns
           // scope to <g> (USING, if present, overrides for patterns)
           skipWs()
-          withCtx = Some(iriRef())
+          stmt.withCtx = Some(iriRef())
           skipWs()
           if (kw("INSERT")) out += insertTail()
           else if (kw("DELETE")) out += deleteTail()
@@ -1006,77 +1143,19 @@ object ConstructParser {
     // ----------------------------------------------------------------- ask
 
     def askQuery(expectEnd: Boolean = true): ParsedSelect = {
-      resetState()
       prefixLoop()
       if (!kw("ASK")) fail("expected ASK")
-      val ds = datasetClause()
-      dsCtx = ds
-      kw("WHERE") // optional keyword
-      skipWs()
-      val els = groupBlock(graphCtx = None)
-      skipWs()
-      if (peek == ';') i += 1
-      skipWs()
-      if (expectEnd && i < n) fail("trailing input after ASK query")
-      val where = compileWhere(els, ds)
-      ParsedSelect(where(_)._1.agg((count(lit(1)) > 0).as("ask")),
-        usesQuads = sawPattern)
-    }
-
-    def graphAskQuery(): ParsedSelect = {
-      resetState()
-      prefixLoop()
-      if (!kw("ASK")) fail("expected ASK")
-      skipWs()
-      kw("WHERE") // optional keyword
-      skipWs()
-      bgpVarTerm("#g") = true
-      perRecordGraph = true
-      val els = groupBlock(graphCtx = Some(VarT("#g")))
-      skipWs()
-      if (peek == ';') i += 1
-      skipWs()
-      if (i < n) fail("trailing input after ASK query")
-      require(sawPattern, "per-graph ASK needs at least one triple pattern")
-      ParsedSelect { input =>
-        compileGroupN(els, input)._1.select(col("#g").as("graph")).distinct()
-      }
-    }
-
-    def graphConstructQuery(): ParsedConstruct = {
-      resetState()
-      prefixLoop()
-      if (!kw("CONSTRUCT")) fail("expected CONSTRUCT")
-      skipWs()
-      // `CONSTRUCT WHERE { bgp }` shorthand works here too — its pattern
-      // templates inherit the #g graph scope, which is exactly the
-      // record-graph wrap the Rules prescribe
-      val short = peek != '{'
-      val templates = if (short) Seq.empty else templateBlock()
-      skipWs()
-      if (!kw("WHERE")) {
-        skipWs()
-        if (peek != '{') fail("expected WHERE or a group pattern")
-      }
-      skipWs()
-      bgpVarTerm("#g") = true
-      perRecordGraph = true
-      val els = groupBlock(graphCtx = Some(VarT("#g")))
-      skipWs()
-      if (peek == ';') i += 1
-      skipWs()
-      if (i < n) fail("trailing input after per-graph CONSTRUCT")
-      require(sawPattern, "per-graph CONSTRUCT needs at least one triple pattern")
-      val dg = defaultGraphTok
-      val tpl = (if (short) patternTemplates(els) else templates).map {
-        case (a, b, c, g) if g == dg => (a, b, c, VarT("#g"): Tok)
-        case t => t
-      }
-      finishConstruct(tpl, els)
+      val els = whereClause(expectEnd, "ASK")
+      val where = compileWhere(els, scope.ds)
+      ParsedSelect(
+        // per record: the DISTINCT names of the passing record graphs
+        if (stmt.perRecordGraph)
+          where(_)._1.select(col("#g").as("graph")).distinct()
+        else where(_)._1.agg((count(lit(1)) > 0).as("ask")),
+        usesQuads = readsQuads(els))
     }
 
     def describeQuery(expectEnd: Boolean = true): ParsedSelect = {
-      resetState()
       prefixLoop()
       if (!kw("DESCRIBE")) fail("expected DESCRIBE")
       val vars = scala.collection.mutable.ArrayBuffer[String]()
@@ -1094,17 +1173,14 @@ object ConstructParser {
       }
       require(vars.nonEmpty || consts.nonEmpty, "empty DESCRIBE")
       val ds = datasetClause()
-      dsCtx = ds
+      scope.ds = ds
       val els =
         if (kw("WHERE")) { skipWs(); groupBlock(graphCtx = None) }
         else if (peek == '{') groupBlock(graphCtx = None)
         else Seq.empty
       require(vars.isEmpty || els.nonEmpty,
         "DESCRIBE with variables needs a WHERE pattern")
-      skipWs()
-      if (peek == ';') i += 1
-      skipWs()
-      if (expectEnd && i < n) fail("trailing input after DESCRIBE query")
+      statementEnd(expectEnd, "DESCRIBE")
       ParsedSelect { quads =>
         val spark = quads.sparkSession
         val constDf =
@@ -1170,26 +1246,29 @@ object ConstructParser {
       * joins any GROUP BY so aggregates compute per active graph.
       */
     def selectQuery(expectEnd: Boolean = true): ParsedSelect = {
-      val (run, usesQuads) = selectQueryCtx(expectEnd, None)
-      ParsedSelect(run(_)._1, usesQuads)
+      val q = selectQueryCtx(expectEnd, None)
+      ParsedSelect(q.run(_)._1, q.usesQuads)
     }
 
-    /** The compiled query — solutions plus the projected vars that may be
-      * UNBOUND in them (a subquery's enclosing group picks §8.3
-      * compatibility joins for those) — and whether its input is the
-      * quad table.
+    /** One projected variable of a SELECT: does it hold a term, is it
+      * xsd:integer-valued (a COUNT)?
+      */
+    private case class ProjVar(v: String, term: Boolean, int: Boolean)
+
+    /** A compiled SELECT: its solutions plus the projected vars that may
+      * be UNBOUND in them (a subquery's enclosing group picks §8.3
+      * compatibility joins for those), its projection, and whether its
+      * WHERE reads the quad table ([[readsQuads]]).
+      */
+    private case class SelectQ(run: DataFrame => (DataFrame, Set[String]),
+        proj: Seq[ProjVar], usesQuads: Boolean)
+
+    /** Parse a SELECT under the current scope (a subquery's is fresh,
+      * [[subSelectEl]]).
       */
     private def selectQueryCtx(expectEnd: Boolean,
         subGraphCtx: Option[Tok],
-        lateralExpose: Set[String] = Set.empty)
-        : (DataFrame => (DataFrame, Set[String]), Boolean) = {
-      // NOTE: deliberately does NOT resetState() — a subquery parse must
-      // keep the enclosing dsCtx; the per-query fields are reset here and
-      // the enclosing group saves/restores its own state around the call
-      binds = scala.collection.mutable.LinkedHashMap[String, E]()
-      sawPattern = false
-      bgpVarTerm.clear()
-      intVars.clear()
+        lateralExpose: Set[String] = Set.empty): SelectQ = {
       prefixLoop()
       if (!kw("SELECT")) fail("expected SELECT")
       skipWs()
@@ -1229,8 +1308,8 @@ object ConstructParser {
       var items = parseItems()
       if (items.isEmpty) fail("empty SELECT projection")
       val own = datasetClause()
-      val ds = if (own.from.isEmpty && own.fromNamed.isEmpty) dsCtx else own
-      dsCtx = ds // nested subqueries inherit
+      val ds = if (own.from.isEmpty && own.fromNamed.isEmpty) scope.ds else own
+      scope.ds = ds // nested subqueries inherit
       kw("WHERE") // optional keyword
       skipWs()
       val els = groupBlock(graphCtx = subGraphCtx)
@@ -1240,7 +1319,7 @@ object ConstructParser {
       // raw) — re-parse the projection span now that bgpVarTerm is final,
       // so SUM(?v)/MIN(?v) over pattern-bound TERM vars compile with
       // term-aware numeric/ordering semantics
-      if (sawPattern) {
+      if (scope.sawPattern) {
         val save = i
         i = projStart
         items = parseItems()
@@ -1263,7 +1342,8 @@ object ConstructParser {
               skipWs()
               val v = varName()
               skipWs(); expect(')')
-              if (sawPattern) bgpVarTerm(v) = e.term else binds(v) = e
+              if (scope.sawPattern) scope.bgpVarTerm(v) = e.term
+              else scope.binds(v) = e
               groupBys += ((v, Some(e.c)))
             } else {
               expect(')')
@@ -1331,7 +1411,8 @@ object ConstructParser {
           // (before other terms, which sort lexically) — consistent with
           // MIN/MAX and SPARQL §15.1's numeric ordering
           def varKey(v: String): Column =
-            if (sawPattern && bgpVarTerm.getOrElse(v, false)) termOrdKey(col(v))
+            if (scope.sawPattern && scope.bgpVarTerm.getOrElse(v, false))
+              termOrdKey(col(v))
             else col(v)
           if (desc || ascKw) {
             skipWs(); expect('(')
@@ -1386,7 +1467,7 @@ object ConstructParser {
           // is in it (it was bound in the OUTER scope, so the subselect's
           // own var map doesn't have it yet). Appending PlainVar instead
           // would make the projection an illegal Star/named mix.
-          if (!bgpVarTerm.contains(v)) bgpVarTerm(v) = true
+          if (!scope.bgpVarTerm.contains(v)) scope.bgpVarTerm(v) = true
         } else if (!items.exists {
           case PlainVar(x) => x == v
           case Derived(x, _, _, _) => x == v
@@ -1400,7 +1481,7 @@ object ConstructParser {
           groupBys += ((v, None))
       }
       subGraphCtx match {
-        case Some(VarT(gv)) if sawPattern => exposeVar(gv)
+        case Some(VarT(gv)) if scope.sawPattern => exposeVar(gv)
         case _ => ()
       }
 
@@ -1416,7 +1497,8 @@ object ConstructParser {
       // own lateral uses (shacl-targetClass) correlate on keys drawn
       // from the same data, where the two agree.
       val lateralExposed =
-        if (sawPattern) lateralExpose.intersect(boundVars(els)) else Set.empty[String]
+        if (scope.sawPattern) lateralExpose.intersect(boundVars(els))
+        else Set.empty[String]
       if (lateralExpose.nonEmpty) {
         // an outer var referenced ONLY in expression / EXISTS / MINUS
         // position has no decorrelated form — loud reject, never silent
@@ -1449,23 +1531,22 @@ object ConstructParser {
         lateralExposed.toSeq.sorted.foreach(exposeVar)
       }
 
-      val bgp = sawPattern
+      val bgp = scope.sawPattern
       val where = compileWhere(els, ds)
       // `SELECT *` inside a subquery: expand to this query's WHERE-bound
       // vars (SPARQL §18.2.4.4 — in BGP mode that's exactly bgpVarTerm,
       // in insertion order). Binding-stream mode has no static var list,
       // so '*' stays opaque there and subSelectEl keeps rejecting it.
-      val starVars: Seq[(String, Boolean)] = if (bgp) bgpVarTerm.toSeq else Nil
-      lastProjection = items.toSeq.flatMap {
-        case PlainVar(v) => Seq((v, bgpVarTerm.getOrElse(v, true)))
-        case Derived(v, _, _, k) => Seq((v, k == KTerm))
-        case Star => if (bgp) starVars else Seq(("*", false))
+      val starVars: Seq[(String, Boolean)] =
+        if (bgp) scope.bgpVarTerm.toSeq else Nil
+      val proj = items.toSeq.flatMap {
+        case PlainVar(v) => Seq(ProjVar(v,
+          scope.bgpVarTerm.getOrElse(v, true), scope.intVars(v)))
+        case Derived(v, _, _, k) => Seq(ProjVar(v, k == KTerm, k == KInt))
+        case Star =>
+          if (bgp) starVars.map { case (v, t) => ProjVar(v, t, int = false) }
+          else Seq(ProjVar("*", term = false, int = false))
       }
-      lastProjectionInts = items.toSeq.flatMap {
-        case PlainVar(v) if intVars(v) => Seq(v)
-        case Derived(v, _, _, k) if k == KInt => Seq(v)
-        case _ => Nil
-      }.toSet
       val run = { (input: DataFrame) =>
         val (bindings, mn) = where(input)
         // projected vars that may be UNBOUND: a var the group may leave
@@ -1615,7 +1696,7 @@ object ConstructParser {
         val off = offsetN.map(ordered.offset).getOrElse(ordered)
         (limitN.map(off.limit).getOrElse(off), nulls)
       }
-      (run, bgp)
+      SelectQ(run, proj, readsQuads(els))
     }
 
     /** Possibly-aggregating projection expression: arithmetic (`+ - * /`)
@@ -1772,7 +1853,7 @@ object ConstructParser {
 
     /** Un-GRAPHed triples target the WITH graph when one is set. */
     private def defaultGraphTok: IriT =
-      IriT(withCtx.getOrElse("urn:x-arq:DefaultGraph"))
+      IriT(stmt.withCtx.getOrElse("urn:x-arq:DefaultGraph"))
 
     private def templateBlock(): Seq[T] = {
       expect('{')
@@ -1989,10 +2070,10 @@ object ConstructParser {
       case NumT(lex) =>
         lit("\"" + lex + "\"^^<http://www.w3.org/2001/XMLSchema#integer>")
       case VarT(v) =>
-        if (sawPattern) bgpVarTerm.get(v) match {
+        if (scope.sawPattern) scope.bgpVarTerm.get(v) match {
           case Some(true) => col(v) // pattern var: already a term
           case Some(false) =>
-            if (intVars(v))
+            if (scope.intVars(v))
               // subselect COUNT projection: typed literal, as the
               // SPARQL value semantics (and Jena's serializer) demand
               concat(lit("\""), col(v).cast("string"),
@@ -2009,8 +2090,8 @@ object ConstructParser {
               "(SPARQL CONSTRUCT semantics)")
             lit(null).cast("string")
         }
-        else if (propFnTermVars(v)) col(v) // pf output: already a term
-        else binds.get(v) match {
+        else if (scope.propFnTermVars(v)) col(v) // pf output: already a term
+        else scope.binds.get(v) match {
           case Some(E(c, true, _)) => c
           case Some(E(c, false, _)) => RdfTerms.strLit(c.cast("string"))
           case None => RdfTerms.strLit(col(v).cast("string"))
@@ -2051,11 +2132,13 @@ object ConstructParser {
     private case class BindE(v: String, e: E) extends WhereEl
     /** `BIND(norse:map.computeIfAbsent(mapId, ?keyVar, fn) AS ?v)` — the
       * lambda `body` is compiled over the key column; the group compiler
-      * evaluates it once per DISTINCT key (into the execution-local memo
-      * for `mapId`) and joins the memo back.
+      * evaluates it once per DISTINCT key (into the statement's memo
+      * `memos(mapId)`) and joins the memo back.
       */
     private case class MapComputeE(v: String, mapId: String,
-        keyVar: String, body: E) extends WhereEl
+        keyVar: String, body: E,
+        memos: scala.collection.mutable.HashMap[String, DataFrame])
+        extends WhereEl
     /** Plain FILTER. The condition lives in a MUTABLE one-slot array so
       * the OUTERMOST group close can re-parse it in place once every var
       * of the whole WHERE clause is registered (SPARQL §17.2: a filter
@@ -2109,8 +2192,7 @@ object ConstructParser {
       * also reports which projected vars may be UNBOUND, so the enclosing
       * group picks compatibility joins for them.
       */
-    private case class SubSelectE(q: DataFrame => (DataFrame, Set[String]),
-        vars: Set[String]) extends WhereEl
+    private case class SubSelectE(q: SelectQ) extends WhereEl
     /** `?json json:unnest ?item` — property function (the reference's
       * magic-predicate extension mechanism, docs/sparql-extensions):
       * explodes a JSON-array value into one solution per element, the
@@ -2137,9 +2219,9 @@ object ConstructParser {
         case ServiceE(_, in, _) => boundVars(in)
         case ServiceVarE(x, in, _) => boundVars(in) + x
         case BindE(x, _) => Seq(x)
-        case MapComputeE(x, _, _, _) => Seq(x)
+        case MapComputeE(x, _, _, _, _) => Seq(x)
         case ValuesE(vars, _) => vars
-        case SubSelectE(_, vars) => vars
+        case SubSelectE(q) => q.proj.map(_.v)
         case FsFindE(_, x) => Seq(x)
         case CsvParseE(_, x, _) => Seq(x)
         case XmlUnnestE(src, _, x) => src.toSeq :+ x
@@ -2160,7 +2242,7 @@ object ConstructParser {
       els.exists {
         case f: FilterE => refNames(f.c).contains(v)
         case BindE(_, e) => refNames(e.c).contains(v)
-        case MapComputeE(_, _, keyVar, body) =>
+        case MapComputeE(_, _, keyVar, body, _) =>
           keyVar == v || refNames(body.c).contains(v)
         case ExistsE(in, _) => boundVars(in)(v) || refsVarDeep(in, v)
         case MinusE(in) => boundVars(in)(v) || refsVarDeep(in, v)
@@ -2181,50 +2263,38 @@ object ConstructParser {
         (i + 6 >= n || !Character.isLetterOrDigit(s.charAt(i + 6)))
 
     /** Parse a SubSelect at the cursor (after any enclosing '{' has been
-      * consumed). selectQuery resets parser state — saved and restored
-      * around it. The pending-filter pass is scoped per (sub)query: the
-      * subselect's own WHERE close (depth 0) re-parses ITS filters with
-      * ITS registrations, then the outer list resumes.
+      * consumed) under a fresh scope that inherits only the dataset
+      * clause: its own WHERE close re-parses ITS pending filters, and
+      * only its projected vars surface in the enclosing group.
       */
     private def subSelectEl(graphCtx: Option[Tok] = None,
         lateralExpose: Set[String] = Set.empty): WhereEl = {
-      val savedBinds = binds
-      val savedSaw = sawPattern
-      val savedTerm = bgpVarTerm.toMap
-      val savedInts = intVars.toSet
-      val savedDs = dsCtx
-      val savedPending = pendingFilters.toList
-      pendingFilters.clear()
-      val savedDepth = groupDepth
-      groupDepth = 0
-      val (sub, _) = selectQueryCtx(expectEnd = false, subGraphCtx = graphCtx,
-        lateralExpose = lateralExpose)
-      groupDepth = savedDepth
-      pendingFilters.clear()
-      pendingFilters ++= savedPending
-      val proj = lastProjection
-      val projInts = lastProjectionInts
-      binds = savedBinds
-      sawPattern = savedSaw
-      dsCtx = savedDs
-      bgpVarTerm.clear()
-      savedTerm.foreach { case (k, v) => bgpVarTerm(k) = v }
-      intVars.clear()
-      intVars ++= savedInts
-      intVars ++= projInts // int-valued projections surface in this scope
-      require(!proj.exists(_._1 == "*"),
+      val outer = scope
+      scope = new Scope(outer.ds)
+      val q = try selectQueryCtx(expectEnd = false, subGraphCtx = graphCtx,
+        lateralExpose = lateralExpose) finally scope = outer
+      require(!q.proj.exists(_.v == "*"),
         "SELECT * subqueries are not supported: project explicit variables")
-      if (!sawPattern) {
-        sawPattern = true
-        binds.foreach { case (v, e) => bgpVarTerm(v) = e.term }
+      enterPatternMode()
+      q.proj.foreach { p =>
+        scope.bgpVarTerm(p.v) = p.term
+        if (p.int) scope.intVars += p.v
       }
-      proj.foreach { case (v, t) => bgpVarTerm(v) = t }
-      SubSelectE(sub, proj.map(_._1).toSet)
+      SubSelectE(q)
     }
+
+    /** Flip the scope into pattern mode; BINDs parsed before the flip
+      * become pattern vars.
+      */
+    private def enterPatternMode(): Unit =
+      if (!scope.sawPattern) {
+        scope.sawPattern = true
+        scope.binds.foreach { case (v, e) => scope.bgpVarTerm(v) = e.term }
+      }
 
     private def groupBlock(graphCtx: Option[Tok]): Seq[WhereEl] = {
       expect('{')
-      groupDepth += 1
+      scope.groupDepth += 1
       val out = scala.collection.mutable.ArrayBuffer[WhereEl]()
       skipWs()
       while (peek != '}') {
@@ -2242,17 +2312,18 @@ object ConstructParser {
               if (!(e eq placeholder)) fail(
                 "map.computeIfAbsent must be the ENTIRE BIND expression " +
                   "(wrap or post-process its result in a second BIND)")
-              out += MapComputeE(v, mapId, keyVar, body)
+              out += MapComputeE(v, mapId, keyVar, body, stmt.mapMemos)
             case None => out += BindE(v, e)
           }
-          if (sawPattern) bgpVarTerm(v) = e.term else binds(v) = e
+          if (scope.sawPattern) scope.bgpVarTerm(v) = e.term
+          else scope.binds(v) = e
           // a BIND of a constant lambda literal is statically traceable
           // in BOTH modes — fn.call resolves the var through this map
           org.apache.spark.sql.graft.bridge.staticStringLiteral(e.c)
             .foreach { t =>
               if (t.endsWith("\"^^<" + ConstructParser.NorseNs + "lambda>") ||
                   t.endsWith("\"^^<" + ConstructParser.NorseNs + "sparql.fn>"))
-                lambdaBinds(v) = t
+                scope.lambdaBinds(v) = t
             }
         } else if (kw("FILTER")) {
           skipWs()
@@ -2267,7 +2338,7 @@ object ConstructParser {
           } else {
             expect('(')
             val slot = new Array[Column](1)
-            pendingFilters += ((slot, i))
+            scope.pendingFilters += ((slot, i))
             slot(0) = expr().c
             if (pendingMapCompute.isDefined) fail(
               "map.computeIfAbsent is only supported as a BIND expression")
@@ -2304,11 +2375,8 @@ object ConstructParser {
             while (peek != '}') { rows += Seq(cell()); skipWs() }
             expect('}')
           }
-          if (!sawPattern) {
-            sawPattern = true
-            binds.foreach { case (v, e) => bgpVarTerm(v) = e.term }
-          }
-          vars.foreach(v => bgpVarTerm(v) = true)
+          enterPatternMode()
+          vars.foreach(v => scope.bgpVarTerm(v) = true)
           out += ValuesE(vars.toSeq, rows.toSeq)
         } else if (kw("OPTIONAL")) {
           skipWs()
@@ -2316,7 +2384,7 @@ object ConstructParser {
           // re-registers its target var (term-ness of the EXPR), which
           // must not mask the LEFT binding's term-ness
           out += {
-            val termSnap = bgpVarTerm.toMap
+            val termSnap = scope.bgpVarTerm.toMap
             OptionalE(groupBlock(graphCtx), termSnap)
           }
         } else if (kw("LATERAL")) {
@@ -2338,7 +2406,7 @@ object ConstructParser {
           skipWs()
           if (selectAhead) {
             out += subSelectEl(graphCtx,
-              lateralExpose = bgpVarTerm.keySet.toSet)
+              lateralExpose = scope.bgpVarTerm.keySet.toSet)
             skipWs(); expect('}')
           } else {
             i = save
@@ -2363,7 +2431,7 @@ object ConstructParser {
           skipWs()
           val g = tok()
           skipWs()
-          if (perRecordGraph) {
+          if (stmt.perRecordGraph) {
             // per-record dataset (`ngs map/filter --sparql`,
             // NgsCmdImpls.java:88-104/191-216): each record's dataset
             // holds exactly ONE named graph, so an explicit GRAPH ?v
@@ -2377,7 +2445,7 @@ object ConstructParser {
             // BIND it to the record graph and let the enclosing
             // compat join key on it if the var appears elsewhere
             // (VALUES, other patterns, a second GRAPH ?v group).
-            g match { case VarT(v) => bgpVarTerm(v) = true; case _ => () }
+            g match { case VarT(v) => scope.bgpVarTerm(v) = true; case _ => () }
             val inner = groupBlock(Some(VarT("#g")))
             g match {
               case VarT(v) if boundVars(inner)(v) =>
@@ -2398,7 +2466,7 @@ object ConstructParser {
                 fail(s"GRAPH operand must be a variable or IRI, got $other")
             }
           } else {
-            g match { case VarT(v) => bgpVarTerm(v) = true; case _ => () }
+            g match { case VarT(v) => scope.bgpVarTerm(v) = true; case _ => () }
             out += GroupE(groupBlock(Some(g)))
           }
         } else if (kw("SERVICE")) {
@@ -2526,8 +2594,8 @@ object ConstructParser {
               val subj = subjTok match {
                 case VarT(sv) =>
                   val sTerm =
-                    if (sawPattern) bgpVarTerm.getOrElse(sv, true)
-                    else binds.get(sv).exists(_.term)
+                    if (scope.sawPattern) scope.bgpVarTerm.getOrElse(sv, true)
+                    else scope.binds.get(sv).exists(_.term)
                   Right((sv, sTerm))
                 case StrT(t) => Left(t)
                 case TypedStrT(t, _) => Left(t)
@@ -2547,16 +2615,16 @@ object ConstructParser {
                 "json:unnest)")
             case (a, b, c) =>
               // a real triple pattern flips the statement into BGP mode
-              if (!sawPattern) {
-                sawPattern = true
-                // BINDs and property-function vars parsed before the
-                // first pattern migrate to BGP vars
-                binds.foreach { case (v, e) => bgpVarTerm(v) = e.term }
-                propFnVars.foreach(v => bgpVarTerm(v) = propFnTermVars(v))
+              if (!scope.sawPattern) {
+                enterPatternMode()
+                // so do property-function vars parsed before the first
+                // triple pattern
+                scope.propFnVars.foreach(v =>
+                  scope.bgpVarTerm(v) = scope.propFnTermVars(v))
               }
               out += TpE(graphCtx, a, b, c)
               Seq(a, b, c).foreach {
-                case VarT(v) => bgpVarTerm(v) = true
+                case VarT(v) => scope.bgpVarTerm(v) = true
                 case _ => ()
               }
           }
@@ -2565,7 +2633,7 @@ object ConstructParser {
         if (peek == '.') { i += 1; skipWs() }
       }
       expect('}')
-      groupDepth -= 1
+      scope.groupDepth -= 1
       // SPARQL §17.2: a FILTER applies to its group wherever it is
       // written — workloads.sparql puts `FILTER(STRENDS(STR(?file), …))`
       // BEFORE the fs:find that binds ?file, and a filter inside an
@@ -2574,14 +2642,14 @@ object ConstructParser {
       // of the parse position, so when the OUTERMOST group closes (every
       // var of the whole WHERE clause registered), re-parse each plain
       // filter into its mutable slot. Subselects scope their own pass
-      // (state is saved/reset around them).
-      if (groupDepth == 0 && pendingFilters.nonEmpty) {
+      // (each parses under its own scope).
+      if (scope.groupDepth == 0 && scope.pendingFilters.nonEmpty) {
         val endPos = i
-        pendingFilters.foreach { case (slot, start) =>
+        scope.pendingFilters.foreach { case (slot, start) =>
           i = start
           slot(0) = expr().c
         }
-        pendingFilters.clear()
+        scope.pendingFilters.clear()
         i = endPos
       }
       out.toSeq
@@ -2609,6 +2677,25 @@ object ConstructParser {
       case _: MapComputeE => "map.computeIfAbsent"
     }
 
+    /** Does a query with this WHERE tree take the quad table as input?
+      * Its triple patterns and VALUES blocks do — at any depth, SERVICE
+      * groups included, as they put the query into pattern mode — and a
+      * subquery does if its own WHERE does. Otherwise the query evaluates
+      * over the unit solution ([[ParsedConstruct.usesQuads]]).
+      */
+    private def readsQuads(els: Seq[WhereEl]): Boolean = els.exists {
+      case _: TpE | _: ValuesE => true
+      case SubSelectE(q) => q.usesQuads
+      case GroupE(in) => readsQuads(in)
+      case UnionE(gs) => gs.exists(readsQuads)
+      case OptionalE(in, _) => readsQuads(in)
+      case MinusE(in) => readsQuads(in)
+      case ExistsE(in, _) => readsQuads(in)
+      case ServiceE(_, in, _) => readsQuads(in)
+      case ServiceVarE(_, in, _) => readsQuads(in)
+      case _ => false
+    }
+
     /** Does the element tree contain a property-function pattern? */
     private def containsPropFn(els: Seq[WhereEl]): Boolean = els.exists {
       case _: PropFnE => true
@@ -2624,105 +2711,6 @@ object ConstructParser {
       case _ => false
     }
 
-    /** SPARQL dataset clause (§13.2): `FROM` graphs form the default
-      * graph that un-GRAPHed patterns match; `FROM NAMED` graphs are the
-      * only ones GRAPH patterns see. With no clause, both views pass the
-      * whole quad table through (this engine's default: patterns span
-      * the dataset).
-      */
-    private case class DatasetClause(from: Seq[String], fromNamed: Seq[String]) {
-      private val hasClause = from.nonEmpty || fromNamed.nonEmpty
-      /** A FROM IRI names a LOCAL FILE (loaded as a document, the
-        * reference's Jena dataset-description behavior —
-        * docs/examples/test.sparql:2 `FROM <dcat.ttl>`) iff it is a
-        * `file:` IRI or a relative IRI that resolves to an existing
-        * regular file under the script base; every other IRI keeps the
-        * session-graph-scoping semantics. The split is decided per entry
-        * so the two styles mix.
-        */
-      // per-query memos: default()/named() run once per PATTERN in the
-      // WHERE clause, and without these every call would re-check the
-      // filesystem and re-build a file scan (readRdfAuto's probe runs an
-      // eager take(200) Spark job each time)
-      private val backedMemo =
-        scala.collection.mutable.HashMap[String, Boolean]()
-      private val loadMemo =
-        scala.collection.mutable.HashMap[String, DataFrame]()
-      private def isFileBacked(bracketed: String): Boolean =
-        backedMemo.getOrElseUpdate(bracketed, isFileBacked0(bracketed))
-      private def isFileBacked0(bracketed: String): Boolean = {
-        val iri = ConstructParser.stripAngles(bracketed)
-        if (iri.startsWith("file:")) true
-        else if (iri.matches("^[a-zA-Z][a-zA-Z0-9+.-]*:.*")) false
-        else {
-          val exists = java.nio.file.Files.isRegularFile(
-            java.nio.file.Paths.get(ConstructParser.resolveFileIri(iri)))
-          // a relative IRI that NAMES an RDF file (by extension) but does
-          // not resolve to one is almost certainly a typo'd path — fail
-          // loudly instead of silently matching no session graph; bare
-          // names (`FROM <g1>`) keep graph-name semantics
-          require(exists || !iri.matches(
-            "(?i).*\\.(ttl|nt|nq|trig|rdf|jsonld)(\\.(gz|bz2))?$"),
-            s"FROM <$iri>: looks like a file reference but no such file " +
-              s"exists under ${ConstructParser.fileBase}")
-          exists
-        }
-      }
-      private def scope(quads: DataFrame, graphs: Seq[String],
-          fileGraph: String => Column): DataFrame =
-        if (!hasClause) quads
-        else {
-          val (files, names) = graphs.partition(isFileBacked)
-          val base =
-            if (names.nonEmpty) {
-              require(quads.columns.contains("graph"),
-                "FROM/FROM NAMED need a quad table with a graph column")
-              quads.where(col("graph").isin(names: _*))
-            } else null
-          // SPARQL datasets are built from graphs = triple SETS (RDF
-          // merge): duplicate FROM entries and triples shared across
-          // files collapse; the session part keeps its own multiplicity
-          val loaded = files.distinct.map { f =>
-            loadMemo.getOrElseUpdate(f, {
-              // RDF merge (SPARQL §13.2 builds the dataset from graph
-              // MERGES, not unions): blank nodes are document-scoped, so
-              // `_:b0` in two FROM files must stay two nodes — relabel
-              // apart with a per-file tag before the union (Jena
-              // relabels per document the same way)
-              val tag = "m" + java.lang.Integer.toHexString(
-                scala.util.hashing.MurmurHash3.stringHash(f)) + "."
-              def relabel(c: Column): Column =
-                when(c.startsWith("_:"),
-                  concat(lit("_:" + tag), c.substr(lit(3), length(c))))
-                  .otherwise(c)
-              val df = graft.sources.RdfIO.readRdfAuto(quads.sparkSession,
-                ConstructParser.resolveFileIri(ConstructParser.stripAngles(f)))
-              df.withColumn("subj", relabel(col("subj")))
-                .withColumn("obj", relabel(col("obj")))
-            }).withColumn("graph", fileGraph(f))
-          }
-          val loadedSet =
-            if (loaded.isEmpty) None
-            else Some(loaded.reduce(_.unionByName(_))
-              .dropDuplicates(Seq("graph", "subj", "pred", "obj")))
-          val parts = Option(base).toSeq ++ loadedSet.toSeq
-          if (parts.isEmpty) {
-            // graphs empty for this view: zero rows, but keep the quad
-            // schema so patterns still compile
-            if (quads.columns.contains("graph")) quads.where(lit(false))
-            else quads.where(lit(false))
-              .withColumn("graph", lit("<urn:x-arq:DefaultGraph>"))
-          } else parts.reduce(_.unionByName(_))
-        }
-      // FROM files merge into the DEFAULT graph; FROM NAMED files become
-      // a named graph whose name is the IRI as WRITTEN (deterministic
-      // regardless of cwd — Jena resolves to an absolute IRI instead,
-      // a documented divergence)
-      def default(quads: DataFrame): DataFrame =
-        scope(quads, from, _ => lit("<urn:x-arq:DefaultGraph>"))
-      def named(quads: DataFrame): DataFrame =
-        scope(quads, fromNamed, f => lit(f))
-    }
     private val NoDataset = DatasetClause(Nil, Nil)
 
     /** `FROM <g>` / `FROM NAMED <g>` list between projection and WHERE. */
@@ -3033,7 +3021,7 @@ object ConstructParser {
           if (acc == null) acc = ConstructParser.unitFrame(quads.sparkSession)
           if (bindMaybeNull(e.c, maybeNull)) maybeNull += v
           acc = acc.withColumn(v, e.c)
-        case MapComputeE(v, mapId, keyVar, body) =>
+        case MapComputeE(v, mapId, keyVar, body, mapMemos) =>
           // execution-local map: lambda evaluated once per DISTINCT key
           // (computeIfAbsent — keys already in this mapId's memo keep
           // their value, incl. from earlier calls with other lambdas),
@@ -3083,8 +3071,11 @@ object ConstructParser {
             else Bgp.join(acc, inline) // tiny frame: AQE broadcasts it
             maybeNull ++= undefVars
           }
-        case SubSelectE(q, _) =>
-          val (df, mn) = q(quads)
+        case SubSelectE(q) =>
+          // a pattern-free subquery evaluates over the unit solution, as
+          // a pattern-free query does ([[ParsedConstruct.usesQuads]])
+          val (df, mn) = q.run(if (q.usesQuads) quads
+            else ConstructParser.unitFrame(quads.sparkSession))
           joinIn(df, mn)
         case ServiceE(url, inner, silent) =>
           // local-file SERVICE: read the endpoint's dataset (auto-probed
@@ -3661,15 +3652,15 @@ object ConstructParser {
           // macro-body expansion: parameters substitute the CALLER's
           // argument expressions (term flags included)
           if (macroParams.contains(v)) macroParams(v)
-          else if (sawPattern)
-            bgpVarTerm.get(v).map(t => E(col(v), t))
+          else if (scope.sawPattern)
+            scope.bgpVarTerm.get(v).map(t => E(col(v), t))
               .getOrElse(E(col(v), term = false))
           // binding-stream mode: property-function outputs that carry
           // TERMS (csv:parse rows, xml:unnest matches, url:text bodies)
           // must resolve as terms or json:path would see the raw
           // escaped term text
-          else if (propFnTermVars(v)) E(col(v), term = true)
-          else binds.getOrElse(v, E(col(v), term = termInputVars))
+          else if (scope.propFnTermVars(v)) E(col(v), term = true)
+          else scope.binds.getOrElse(v, E(col(v), term = termInputVars))
         case '"' | '\'' =>
           val body = stringLit()
           // typed-literal constants in expression position — the docs'
@@ -4023,7 +4014,7 @@ object ConstructParser {
             val lamLit = org.apache.spark.sql.graft.bridge
               .staticStringLiteral(args.head.c)
               .orElse(refNames(args.head.c).toSeq match {
-                case Seq(v1) => lambdaBinds.get(v1)
+                case Seq(v1) => scope.lambdaBinds.get(v1)
                 case _ => None
               })
               .getOrElse(fail(
@@ -4034,10 +4025,7 @@ object ConstructParser {
             if (plist.size != args.size - 1) fail(
               s"fn.call: lambda takes ${plist.size} argument(s), " +
                 s"got ${args.size - 1}")
-            val child = new P(body, ctx) // inherit seed/clock (RAND in lambdas)
-            child.copyResolutionFrom(this)
-            child.setMacroParams(plist.zip(args.tail).toMap)
-            child.exprOnly()
+            lambdaBody(body, plist.zip(args.tail).toMap)
           } else if (iri == NorseNs + "map.computeIfAbsent") {
             // execution-local map (docs/examples/README.md:552-575):
             // computeIfAbsent(mapId, key, lambda) binds ONE value per
@@ -4062,14 +4050,13 @@ object ConstructParser {
                 s"'$keyVar'")
             val fnSpan = spans(2).trim
             val lamLit =
-              if (fnSpan.startsWith("?")) lambdaBinds.getOrElse(
+              if (fnSpan.startsWith("?")) scope.lambdaBinds.getOrElse(
                 fnSpan.stripPrefix("?"),
                 fail("map.computeIfAbsent: the lambda must be a " +
                   "BIND-bound fn.of value or an inline fn.of call"))
               else {
-                val sub = new P(fnSpan, ctx); sub.copyResolutionFrom(this)
                 org.apache.spark.sql.graft.bridge.staticStringLiteral(
-                  sub.exprOnly().c).getOrElse(fail(
+                  lambdaBody(fnSpan, Map.empty).c).getOrElse(fail(
                   "map.computeIfAbsent: the lambda must compile to a " +
                     "constant at plan-build time"))
               }
@@ -4078,11 +4065,8 @@ object ConstructParser {
               s"map.computeIfAbsent: the lambda takes one key argument, " +
                 s"got ${plist.size}")
             val kv = keyVar.stripPrefix("?")
-            val child = new P(body, ctx) // inherit seed/clock (RAND in lambdas)
-            child.copyResolutionFrom(this)
-            child.setMacroParams(Map(plist.head ->
-              E(col(kv), term = bgpVarTerm.getOrElse(kv, true))))
-            val bodyE = child.exprOnly()
+            val bodyE = lambdaBody(body, Map(plist.head ->
+              E(col(kv), term = scope.bgpVarTerm.getOrElse(kv, true))))
             val placeholder = E(bodyE.c, bodyE.term, bodyE.num)
             pendingMapCompute = Some((spans(0).trim, kv, bodyE, placeholder))
             placeholder // BIND rewrites; any other consumer fails
@@ -4119,26 +4103,21 @@ object ConstructParser {
 
     // ------------------------------------------------- macro expansion
 
-    /** Copy var-resolution state into a CHILD parser compiling a lambda
-      * body at its call site ("any non-input variable mentioned in expr
-      * is substituted with the current binding's value" —
-      * docs/examples/README.md:526): free vars in the body resolve
-      * exactly like vars written at the call position.
+    /** Compile a lambda body (or an inline fn.of) at its call site, with
+      * `params` bound to the call's argument expressions. The body parses
+      * under THIS scope ("any non-input variable mentioned in expr is
+      * substituted with the current binding's value" —
+      * docs/examples/README.md:526): free vars resolve exactly like vars
+      * written at the call position. The seed and clock carry over (RAND
+      * in lambdas).
       */
-    private[ConstructParser] def copyResolutionFrom(o: P): Unit = {
-      prefixes ++= o.prefixes
-      sawPattern = o.sawPattern
-      o.bgpVarTerm.foreach { case (k, v) => bgpVarTerm(k) = v }
-      binds ++= o.binds
-      propFnTermVars ++= o.propFnTermVars
-      lambdaBinds ++= o.lambdaBinds
+    private def lambdaBody(body: String, params: Map[String, E]): E = {
+      val child = new P(body, ctx)
+      child.prefixes ++= prefixes
+      child.scope = scope
+      child.macroParams = params
+      child.exprOnly()
     }
-
-    /** Statically-traceable lambda literals: BIND target var → the full
-      * lambda literal term (see the BIND parse).
-      */
-    private[ConstructParser] val lambdaBinds =
-      scala.collection.mutable.HashMap[String, String]()
 
     /** `norse:fn.of(?v1, …, expr)` — raw top-level-comma argument spans
       * (the LAST span is the lambda body, kept as TEXT for lazy

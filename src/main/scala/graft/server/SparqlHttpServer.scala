@@ -34,7 +34,7 @@ import graft.sources.RdfIO
   *    `application/sparql-update` bodies
   *  - content negotiation on `Accept`: bindings as SPARQL-results JSON
   *    (default) / XML / TSV; quads as N-Quads (default) / TriG
-  *  - updates run the same [[Script.applyStmt]] statements the CLI runs
+  *  - updates run through the same [[Script.fold]] the CLI runs
   *    and respond 204; they are accepted only by POST (`update=` or
   *    `application/sparql-update`), an update sent as a query answers
   *    400; `--read-only` rejects them with 403 (the
@@ -151,15 +151,9 @@ final class SparqlHttpServer private (
             // plus socket writes would let one slow client starve every
             // other update (review-found)
             val last = updateLock.synchronized {
-              var ds = dataset
-              var l: Option[Script.StmtOutput] = None
-              stmts.foreach { st =>
-                val (next, o) = Script.applyStmt(spark, ds, st)
-                ds = next
-                o.foreach(x => l = Some(x))
-              }
+              val (ds, outs) = Script.fold(spark, dataset, stmts)
               dataset = ds
-              l
+              outs.lastOption.map(_._2)
             }
             last match {
               case Some(out) => writeOutput(ex, out, accept)
@@ -167,13 +161,7 @@ final class SparqlHttpServer private (
             }
           } else {
             // pure query: evaluate against the current snapshot — no lock
-            val ds = dataset
-            var last: Option[Script.StmtOutput] = None
-            stmts.foreach { st =>
-              val (_, o) = Script.applyStmt(spark, ds, st)
-              o.foreach(x => last = Some(x))
-            }
-            last match {
+            Script.fold(spark, dataset, stmts)._2.lastOption.map(_._2) match {
               case Some(out) => writeOutput(ex, out, accept)
               case None => respond(ex, 400, "text/plain",
                 "request contained no query statement")

@@ -353,12 +353,6 @@ object RdfIO {
         .as("value"))
   }
 
-  def writeTrig(quads: DataFrame, path: String,
-      compression: Option[String] = None): Unit = {
-    val w = trigLines(quads).write.mode("overwrite")
-    compression.fold(w)(c => w.option("compression", c)).text(path)
-  }
-
   /** Serialize (graph, subj, pred, obj) to N-Quads text lines.
     * Default-graph quads serialize as 3-term lines per the N-Quads
     * grammar — the internal `<urn:x-arq:DefaultGraph>` sentinel must

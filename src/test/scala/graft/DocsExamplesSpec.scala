@@ -238,6 +238,19 @@ class DocsExamplesSpec extends AnyFunSuite {
       """PREFIX norse: <https://w3id.org/aksw/norse#>
         |SELECT ?r { ?s eg:fn ?f BIND(norse:fn.call(?f, "a") AS ?r) }""".stripMargin))
     assert(e2.getMessage.contains("plan-build"), s"got: ${e2.getMessage}")
+    // a lambda is visible only in the query that binds it: not in the
+    // next statement of a script, nor outside the subquery binding it
+    val define = "BIND(norse:fn.of(?x, ?x + 1) AS ?f)"
+    val e2s = intercept[Exception](graft.pipeline.Script.runSparql(spark,
+      s"""PREFIX norse: <https://w3id.org/aksw/norse#>
+        |SELECT ?r WHERE { $define BIND(norse:fn.call(?f, 1) AS ?r) } ;
+        |SELECT ?r WHERE { BIND(norse:fn.call(?f, 41) AS ?r) }""".stripMargin))
+    assert(e2s.getMessage.contains("plan-build"), s"got: ${e2s.getMessage}")
+    val e2q = intercept[Exception](ConstructParser.parseSelect(
+      s"""PREFIX norse: <https://w3id.org/aksw/norse#>
+        |SELECT ?r WHERE { { SELECT ?y WHERE { $define BIND(1 AS ?y) } }
+        |  BIND(norse:fn.call(?f, ?y) AS ?r) }""".stripMargin))
+    assert(e2q.getMessage.contains("plan-build"), s"got: ${e2q.getMessage}")
     // other norse:map.* functions stay loud rejects
     val e3 = intercept[Exception](ConstructParser.parseSelect(
       """PREFIX norse: <https://w3id.org/aksw/norse#>
@@ -284,6 +297,14 @@ class DocsExamplesSpec extends AnyFunSuite {
         |  BIND(CONCAT(norse:map.computeIfAbsent('m', ?k, ?fn), "!") AS ?r) }"""
         .stripMargin))
     assert(eN.getMessage.contains("ENTIRE BIND"), s"got: ${eN.getMessage}")
+    // the memo lives as long as its statement: a second statement's
+    // lambda fills its own map
+    def fill(v: String) = "SELECT ?v WHERE { VALUES ?k { 1 } BIND(norse:map." +
+      s"""computeIfAbsent('m', ?k, norse:fn.of(?x, "$v")) AS ?v) }"""
+    val second = graft.pipeline.Script.runSparql(spark,
+      "PREFIX norse: <https://w3id.org/aksw/norse#>\n" + fill("A") + " ;\n" +
+        fill("B")).lastQuery.get.collect().map(_.getString(0)).toSeq
+    assert(second === Seq("B"))
   }
 
   test("canned rename.rq: FROM/TO env parameterization via sys:getenv " +

@@ -52,6 +52,23 @@ class ScriptSpec extends AnyFunSuite {
       .collect().toSeq === Seq(("<urn:a>", "<urn:p>", "\"1\"")))
   }
 
+  test("a pattern-free subquery evaluates over the unit solution, not " +
+      "one row per quad") {
+    val sel = "SELECT ?y WHERE { { SELECT ?y WHERE { BIND(1 AS ?y) } } }"
+    val three = Seq(("<urn:g>", "<urn:a>", "<urn:p>", "\"1\""),
+      ("<urn:g>", "<urn:b>", "<urn:p>", "\"2\""),
+      ("<urn:g>", "<urn:c>", "<urn:p>", "\"3\""))
+      .toDF("graph", "subj", "pred", "obj")
+    for (initial <- Seq(None, Some(three))) {
+      val rows = Script.runSparql(spark, sel, initial).lastQuery.get.collect()
+      assert(rows.map(_.get(0).toString.toDouble).toSeq === Seq(1.0),
+        s"over ${initial.fold(0L)(_.count())} quads")
+    }
+    val ask = Script.runSparql(spark,
+      "ASK { { SELECT ?y WHERE { BIND(1 AS ?y) } } }").lastQuery.get
+    assert(ask.collect().map(_.getBoolean(0)).toSeq === Seq(true))
+  }
+
   test("graph management verbs + WITH/USING update scoping") {
     val script =
       """PREFIX ex: <http://ex.org/>
