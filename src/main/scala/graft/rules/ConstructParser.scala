@@ -2283,13 +2283,15 @@ object ConstructParser {
       SubSelectE(q)
     }
 
-    /** Flip the scope into pattern mode; BINDs parsed before the flip
-      * become pattern vars.
+    /** Flip the scope into pattern mode; BINDs and property-function vars
+      * parsed before the flip become pattern vars.
       */
     private def enterPatternMode(): Unit =
       if (!scope.sawPattern) {
         scope.sawPattern = true
         scope.binds.foreach { case (v, e) => scope.bgpVarTerm(v) = e.term }
+        scope.propFnVars.foreach(v =>
+          scope.bgpVarTerm(v) = scope.propFnTermVars(v))
       }
 
     private def groupBlock(graphCtx: Option[Tok]): Seq[WhereEl] = {
@@ -2615,13 +2617,7 @@ object ConstructParser {
                 "json:unnest)")
             case (a, b, c) =>
               // a real triple pattern flips the statement into BGP mode
-              if (!scope.sawPattern) {
-                enterPatternMode()
-                // so do property-function vars parsed before the first
-                // triple pattern
-                scope.propFnVars.foreach(v =>
-                  scope.bgpVarTerm(v) = scope.propFnTermVars(v))
-              }
+              enterPatternMode()
               out += TpE(graphCtx, a, b, c)
               Seq(a, b, c).foreach {
                 case VarT(v) => scope.bgpVarTerm(v) = true

@@ -228,6 +228,101 @@ class MaterializerSpec extends AnyFunSuite {
     assert(scannedBuckets.size === 1, scannedBuckets)
   }
 
+  test("verifyCounts starts no Spark job") {
+    val out = tmp()
+    Materializer.write(Kg.canonicalTriples(spark, TestSpark.sf0001), out,
+      nBuckets = 4)
+    val (ok, jobs) = TestSpark.jobsDuring(Materializer.verifyCounts(spark, out))
+    assert(ok)
+    assert(jobs.isEmpty, jobs)
+  }
+
+  test("a fresh write leaves no dot-tmp or .crc file in the store") {
+    val out = tmp()
+    val triples = Kg.canonicalTriples(spark, TestSpark.sf0001)
+      .localCheckpoint(eager = true)
+    Materializer.write(triples, out, nBuckets = 4)
+    for (d <- Seq("triples", "_metrics")) {
+      val s = Files.walk(Paths.get(s"$out/$d"))
+      val names = try s.iterator.asScala.map(_.getFileName.toString).toList
+        finally s.close()
+      assert(names.nonEmpty)
+      assert(!names.exists(n => n.startsWith(".") || n.endsWith(".crc")), names)
+    }
+    assert(!Files.exists(Paths.get(s"$out/_staging")))
+    assertCommitted(out)
+  }
+
+  test("a restage drops stale staged parts of a killed run") {
+    val out = tmp()
+    val triples = Kg.canonicalTriples(spark, TestSpark.sf0001).cache()
+    Materializer.write(triples, out, nBuckets = 4)
+    // a run killed mid-staging: bucket 0 lost its marker and data, and
+    // `_staging/` (no `_SUCCESS`) holds a stale part and an attempt's tmp
+    val stale = parquetFiles(bucketDirs(out).maxBy(_.getFileName.toString)).head
+    Files.delete(Paths.get(s"$out/_bucket_0.done"))
+    val dir = Paths.get(s"$out/triples/bucket=0")
+    Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.delete(p))
+    val staged = Files.createDirectories(Paths.get(s"$out/_staging/bucket=0"))
+    Files.copy(stale, staged.resolve("part-00099.parquet"))
+    Files.copy(stale, staged.resolve(".part-00000-7.tmp"))
+    Materializer.write(triples, out, nBuckets = 4, resume = true)
+    assert(spark.read.parquet(s"$out/triples").count() ===
+      triples.distinct().count())
+    assertCommitted(out)
+    assert(Materializer.verifyCounts(spark, out))
+  }
+
+  test("triples/ and _metrics/ keep the schemas Spark's writer gave them") {
+    val out = tmp()
+    Materializer.write(Kg.canonicalTriples(spark, TestSpark.sf0001), out,
+      nBuckets = 4)
+    import org.apache.spark.sql.types._
+    def nullable(cols: (String, DataType)*) =
+      StructType(cols.map { case (n, t) => StructField(n, t, nullable = true) })
+    assert(spark.read.parquet(s"$out/triples").schema === nullable(
+      "subj" -> StringType, "pred" -> StringType, "obj" -> StringType,
+      "graph" -> StringType, "bucket" -> IntegerType))
+    assert(spark.read.parquet(s"$out/_metrics").schema === nullable(
+      "bucket" -> IntegerType, "n_triples" -> LongType, "n_graphs" -> LongType))
+    // the parquet schemas in the footers, repetition included
+    def footer(dir: String): String = {
+      import org.apache.parquet.hadoop.ParquetFileReader
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      val conf = spark.sessionState.newHadoopConf()
+      val f = Memo.leafFiles(conf, dir).head
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try r.getFooter.getFileMetaData.getSchema.toString.replaceAll("\\s+", " ")
+      finally r.close()
+    }
+    assert(footer(s"$out/triples") === "message spark_schema { " +
+      "optional binary subj (STRING); optional binary pred (STRING); " +
+      "optional binary obj (STRING); optional binary graph (STRING); } ")
+    assert(footer(s"$out/_metrics") === "message spark_schema { " +
+      "optional int32 bucket; required int64 n_triples; " +
+      "required int64 n_graphs; } ")
+  }
+
+  test("staged files hold the bytes of Spark's partitioned parquet write") {
+    val triples = Kg.canonicalTriples(spark, TestSpark.sf0001)
+      .localCheckpoint(eager = true)
+    val out = tmp()
+    Materializer.write(triples, out, nBuckets = 4)
+    val viaSpark = tmp()
+    Materializer.bucketed(triples, 4)
+      .sortWithinPartitions(col("bucket"), col("subj"))
+      .write.mode("overwrite").partitionBy("bucket").parquet(viaSpark)
+    val dirs = bucketDirs(out)
+    assert(dirs.size === 4)
+    dirs.foreach { d =>
+      val theirs = parquetFiles(Paths.get(s"$viaSpark/${d.getFileName}"))
+      assert(theirs.size === 1, d)
+      assert(java.util.Arrays.equals(Files.readAllBytes(parquetFiles(d).head),
+        Files.readAllBytes(theirs.head)), d)
+    }
+  }
+
   test("nquads serialization shape") {
     val df = Seq(("<s>", "<p>", "\"o\"", "<g>")).toDF("subj", "pred", "obj", "graph")
     assert(Materializer.toNQuads(df).as[String].head ===

@@ -52,6 +52,17 @@ class ScriptSpec extends AnyFunSuite {
       .collect().toSeq === Seq(("<urn:a>", "<urn:p>", "\"1\"")))
   }
 
+  test("property-function vars parsed before a VALUES block or a " +
+      "subquery bind the CONSTRUCT template") {
+    for (after <- Seq("VALUES ?k { 1 }", "{ SELECT ?k WHERE { BIND(1 AS ?k) } }")) {
+      val q = "CONSTRUCT { <urn:s> <urn:p> ?row } WHERE { " +
+        "\"a\\n1\" csv:parse (?row \"excel -h\") " + after + " }"
+      val out = Script.runSparql(spark, q).lastQuery.get
+      assert(out.select("subj", "pred").as[(String, String)].collect().toSeq ===
+        Seq(("<urn:s>", "<urn:p>")), after)
+    }
+  }
+
   test("a pattern-free subquery evaluates over the unit solution, not " +
       "one row per quad") {
     val sel = "SELECT ?y WHERE { { SELECT ?y WHERE { BIND(1 AS ?y) } } }"
