@@ -365,9 +365,4 @@ object Materializer {
     }.sum
     total == graft.Memo.parquetRowCount(spark, s"$outDir/triples")
   }
-
-  /** Serialize a triple DF to N-Quads lines (quad sink equivalent). */
-  def toNQuads(triples: DataFrame): DataFrame =
-    triples.select(concat_ws(" ", col("subj"), col("pred"), col("obj"),
-      col("graph"), lit(".")).as("line"))
 }

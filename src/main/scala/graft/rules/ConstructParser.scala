@@ -57,8 +57,13 @@ object ConstructParser {
     * if used in a template position. `num=true` marks numeric-valued
     * expressions (number literals, arithmetic, STRLEN…) so ordering
     * comparisons pick numeric rather than lexicographic semantics.
+    * `int=true` marks an xsd:integer value (COUNT), which a CONSTRUCT
+    * template serializes as a typed literal through a subquery boundary
+    * (the sportal batteries project `(COUNT(…) AS ?x)` into templates).
+    * Combinators build a fresh E, so they drop `int`.
     */
-  private final case class E(c: Column, term: Boolean, num: Boolean = false)
+  private final case class E(c: Column, term: Boolean, num: Boolean = false,
+      int: Boolean = false)
 
   /** One parsed CONSTRUCT statement. `where` is Some(compiler) in BGP
     * mode (input = a triple/quad DataFrame with columns subj/pred/obj
@@ -391,10 +396,15 @@ object ConstructParser {
   /** SPARQL SELECT text — the reference's `sbs map -s 'SELECT … GROUP BY
     * …'` short form (SbsCmdImpls.java:210-217, README-SBS.md) and plain
     * SELECT queries. Supports: `?var` and `(expr AS ?var)` projections,
-    * `*`, aggregates COUNT(*)/COUNT([DISTINCT] e)/SUM/AVG/MIN/MAX
-    * ([DISTINCT])/SAMPLE/GROUP_CONCAT(e; SEPARATOR="s"), ROUND(e, d),
-    * the same WHERE grammar as CONSTRUCT (both modes), GROUP BY, ORDER BY
-    * [ASC|DESC](?v), LIMIT, OFFSET. Determinism notes: SAMPLE compiles to
+    * `*`, the same WHERE grammar as CONSTRUCT (both modes), GROUP BY
+    * (with or without aggregates), HAVING (expr)…, ORDER BY
+    * [ASC|DESC](expr), LIMIT, OFFSET. The aggregates COUNT(*)/COUNT
+    * ([DISTINCT] e)/SUM/AVG/MIN/MAX([DISTINCT] e)/SAMPLE/GROUP_CONCAT
+    * (e; SEPARATOR="s") are expression primaries, so they compose with
+    * any expression in projections, HAVING and ORDER BY
+    * (`IF(COUNT(*) > 1, …)`, `HAVING (SUM(?o) > 2 * COUNT(*))`); FILTER,
+    * BIND, GROUP BY keys and aggregate arguments reject them at parse
+    * time. Determinism notes: SAMPLE compiles to
     * min() and GROUP_CONCAT sorts its elements — SPARQL leaves both
     * unspecified; a deterministic choice makes results reproducible and
     * oracle-checkable.
@@ -770,10 +780,11 @@ object ConstructParser {
 
     // fresh labels for `[]` anonymous pattern nodes
     private var anonCounter = 0
-    // expression-kind constants + the kind of the most recent aggExpr()
-    // parse (single-threaded parser: read immediately after the call)
-    private val KOther = 0; private val KTerm = 1; private val KInt = 2
-    private var lastExprKind: Int = KOther
+    /** Names of the aggregate primaries parsed so far, in the order they
+      * closed: whether an expression aggregates is whether parsing it
+      * grew this ([[aggregating]], [[noAggregate]]).
+      */
+    private val aggsParsed = scala.collection.mutable.ArrayBuffer[String]()
     /** Set by the expression compiler when it parses a
       * `norse:map.computeIfAbsent(mapId, ?key, fn)` call: (mapId text,
       * key var, compiled lambda body over the key column). Consumed by
@@ -1227,15 +1238,8 @@ object ConstructParser {
 
     private sealed trait SelItem
     private case class PlainVar(v: String) extends SelItem
-    /** kind: what the derived value IS — [[KOther]] a plain value,
-      * [[KTerm]] an N-Triples term string (IRI()/STRDT()/pattern var…),
-      * [[KInt]] an xsd:integer value (COUNT). Drives template
-      * serialization through subquery boundaries (the sportal batteries
-      * project both `(IRI(…) AS ?k)` and `(COUNT(…) AS ?x)` into
-      * CONSTRUCT templates).
-      */
-    private case class Derived(v: String, c: Column, agg: Boolean,
-        kind: Int = KOther) extends SelItem
+    /** `(e AS ?v)`; `agg` = `e` contains an aggregate. */
+    private case class Derived(v: String, e: E, agg: Boolean) extends SelItem
     private case object Star extends SelItem
 
     /** `subGraphCtx`: the enclosing `GRAPH term` when this is a SubSelect
@@ -1284,8 +1288,7 @@ object ConstructParser {
           else if (peek == '?') items += PlainVar(varName())
           else if (peek == '(') {
             i += 1
-            val (c, isAgg) = aggExpr()
-            val kind = lastExprKind
+            val (e, isAgg) = aggregating(expr())
             skipWs()
             if (!kw("AS")) fail("expected AS in (expr AS ?v)")
             skipWs()
@@ -1293,12 +1296,13 @@ object ConstructParser {
             skipWs(); expect(')')
             if (pendingMapCompute.isDefined) fail(
               "map.computeIfAbsent is only supported as a BIND expression")
-            items += Derived(v, c, isAgg, kind)
+            items += Derived(v, e, isAgg)
           } else if (peek.isDigit || peek == '-') {
             // bare constant projection (`SELECT 1 { }`, the reference's
             // hashbang smoke script) — column named after the literal
             val lex = exprNumber()
-            items += Derived(lex, lit(lex).cast("double"), agg = false)
+            items += Derived(lex, E(lit(lex).cast("double"), term = false),
+              agg = false)
           } else more = false
         }
         items.toSeq
@@ -1336,7 +1340,7 @@ object ConstructParser {
           if (peek == '?') groupBys += ((varName(), None))
           else {
             i += 1
-            val e = expr()
+            val e = noAggregate("GROUP BY")(expr())
             skipWs()
             if (kw("AS")) {
               skipWs()
@@ -1355,37 +1359,17 @@ object ConstructParser {
         }
         if (groupBys.isEmpty) fail("empty GROUP BY")
       }
-      // HAVING (aggExpr CMP literal|?var)… — SPARQL 1.1 §11.3: filters at
-      // the aggregate level; aggregate operands become hidden agg columns
-      val havings = scala.collection.mutable
-        .ArrayBuffer[(Column, Boolean, String, Column)]()
+      // HAVING (expr)… — SPARQL 1.1 §11.3: filters at the aggregate
+      // level; an aggregating condition rides as a hidden agg column
+      val havings = scala.collection.mutable.ArrayBuffer[(Column, Boolean)]()
       skipWs()
       if (kw("HAVING")) {
         skipWs()
         while (peek == '(') {
           i += 1
-          val (lc, lAgg) = aggExpr()
-          skipWs()
-          if (peek == ')') {
-            // a non-aggregate expr() consumed the whole boolean condition
-            i += 1
-            havings += ((lc, lAgg, "bool", lit(true)))
-          } else {
-            val op =
-              if (kwSym(">=")) ">=" else if (kwSym("<=")) "<="
-              else if (kwSym("!=")) "!=" else if (kwSym("=")) "="
-              else if (kwSym(">")) ">" else if (kwSym("<")) "<"
-              else fail("expected comparison in HAVING")
-            skipWs()
-            val rhs: Column = peek match {
-              case '"' | '\'' => lit(stringLit())
-              case '?' => col(varName())
-              case c if c.isDigit || c == '-' => lit(number().toLong)
-              case _ => fail("HAVING rhs must be a literal or variable")
-            }
-            skipWs(); expect(')')
-            havings += ((lc, lAgg, op, rhs))
-          }
+          val (e, isAgg) = aggregating(expr())
+          skipWs(); expect(')')
+          havings += ((e.c, isAgg))
           skipWs()
         }
         if (havings.isEmpty) fail("empty HAVING")
@@ -1414,6 +1398,10 @@ object ConstructParser {
             if (scope.sawPattern && scope.bgpVarTerm.getOrElse(v, false))
               termOrdKey(col(v))
             else col(v)
+          def orderKey(): (Column, Boolean) = {
+            val (e, isAgg) = aggregating(expr())
+            (e.c, isAgg)
+          }
           if (desc || ascKw) {
             skipWs(); expect('(')
             skipWs()
@@ -1423,14 +1411,14 @@ object ConstructParser {
                 val v = varName()
                 skipWs()
                 if (peek == ')') (varKey(v), false)
-                else { i = save; aggExpr() } // DESC(?v + 1): full expression
-              } else aggExpr()
+                else { i = save; orderKey() } // DESC(?v + 1): full expression
+              } else orderKey()
             skipWs(); expect(')')
             orders += ((c, !desc, isAgg))
           } else if (peek == '?') orders += ((varKey(varName()), true, false))
           else if (peek == '(') {
             i += 1
-            val (c, isAgg) = aggExpr()
+            val (c, isAgg) = orderKey()
             skipWs(); expect(')')
             orders += ((c, true, isAgg))
           } else m2 = false
@@ -1451,6 +1439,10 @@ object ConstructParser {
       skipWs()
       if (expectEnd && i < n) fail("trailing input after SELECT query")
 
+      // the query groups: a GROUP BY, or an aggregate in the projection
+      def grouped: Boolean = groupBys.nonEmpty ||
+        items.exists { case Derived(_, _, true) => true; case _ => false }
+
       // inside GRAPH ?gv: ?gv is bound by the graph pattern at the OUTER
       // level (§18.2.1 in-scope rules), so expose it through the
       // projection, and make it a grouping key so aggregates compute per
@@ -1470,14 +1462,10 @@ object ConstructParser {
           if (!scope.bgpVarTerm.contains(v)) scope.bgpVarTerm(v) = true
         } else if (!items.exists {
           case PlainVar(x) => x == v
-          case Derived(x, _, _, _) => x == v
+          case Derived(x, _, _) => x == v
           case _ => false
         }) items = items :+ PlainVar(v)
-        val hasAggItems = items.exists {
-          case Derived(_, _, true, _) => true
-          case _ => false
-        }
-        if ((groupBys.nonEmpty || hasAggItems) && !groupBys.exists(_._1 == v))
+        if (grouped && !groupBys.exists(_._1 == v))
           groupBys += ((v, None))
       }
       subGraphCtx match {
@@ -1519,11 +1507,7 @@ object ConstructParser {
         // ADVICE r9: the empty-group divergence documented above was
         // silent — surface it whenever it CAN manifest (an aggregate
         // under the correlation), so affected users see the contract
-        val aggUnderLateral = groupBys.nonEmpty || items.exists {
-          case Derived(_, _, true, _) => true
-          case _ => false
-        }
-        if (aggUnderLateral)
+        if (grouped)
           System.err.println("[graft] LATERAL subselect with aggregates: " +
             "outer rows whose correlated group is EMPTY are dropped by " +
             "the decorrelated join; the reference's per-left evaluation " +
@@ -1542,7 +1526,7 @@ object ConstructParser {
       val proj = items.toSeq.flatMap {
         case PlainVar(v) => Seq(ProjVar(v,
           scope.bgpVarTerm.getOrElse(v, true), scope.intVars(v)))
-        case Derived(v, _, _, k) => Seq(ProjVar(v, k == KTerm, k == KInt))
+        case Derived(v, e, _) => Seq(ProjVar(v, e.term, e.int))
         case Star =>
           if (bgp) starVars.map { case (v, t) => ProjVar(v, t, int = false) }
           else Seq(ProjVar("*", term = false, int = false))
@@ -1555,12 +1539,11 @@ object ConstructParser {
         // renames and aggregates of nullables)
         val nulls = items.toSeq.flatMap {
           case PlainVar(v) if mn(v) || !bindings.columns.contains(v) => Seq(v)
-          case Derived(v, c, _, _) if refNames(c).exists(mn) => Seq(v)
+          case Derived(v, e, _) if refNames(e.c).exists(mn) => Seq(v)
           case Star => starVars.map(_._1).filter(mn)
           case _ => Nil
         }.toSet
-        val hasAgg = groupBys.nonEmpty ||
-          items.exists { case Derived(_, _, true, _) => true; case _ => false }
+        val hasAgg = grouped
         require(havings.isEmpty || hasAgg,
           "HAVING requires GROUP BY or an aggregate projection")
         val projected =
@@ -1575,7 +1558,7 @@ object ConstructParser {
               // a key referencing a DERIVED projection alias must wait
               // for the projection; everything else computes early
               val derivedNames =
-                items.collect { case Derived(v, _, _, _) => v }.toSet
+                items.collect { case Derived(v, _, _) => v }.toSet
               val early = orders.toSeq.zipWithIndex.collect {
                 case ((c, _, false), k)
                     if !distinctRows &&
@@ -1586,7 +1569,7 @@ object ConstructParser {
               // surfacing an unresolved-column analysis error
               val projNames = items.toSeq.collect {
                 case PlainVar(v) => v
-                case Derived(v, _, _, _) => v
+                case Derived(v, _, _) => v
               }.toSet
               orders.toSeq.zipWithIndex.foreach { case ((c, _, isAgg), k) =>
                 require(isAgg || early(k) || refNames(c).subsetOf(projNames),
@@ -1612,7 +1595,7 @@ object ConstructParser {
                   // SILENT-degraded SERVICE group
                   if (preOrd.columns.contains(v)) col(v)
                   else lit(null).cast("string").as(v)
-                case Derived(v, c, _, _) => c.as(v)
+                case Derived(v, e, _) => e.c.as(v)
                 case Star => throw new IllegalArgumentException(
                   "* cannot mix with named projections")
               } ++ ordCols: _*)
@@ -1626,42 +1609,33 @@ object ConstructParser {
             // HAVING + aggregate ORDER BY operands ride along as hidden
             // agg columns
             val hidden = havings.zipWithIndex.collect {
-              case ((c, true, _, _), k) => c.as("#having" + k)
+              case ((c, true), k) => c.as("#having" + k)
             }
             val hiddenOrd = orders.zipWithIndex.collect {
               case ((c, _, true), k) => c.as("#ord" + k)
             }
-            val aggs = items.collect { case Derived(v, c, _, _) => c.as(v) }.toSeq ++
+            val aggs = items.collect { case Derived(v, e, _) => e.c.as(v) }.toSeq ++
               hidden ++ hiddenOrd
-            require(aggs.nonEmpty, "GROUP BY without any aggregate projection")
             // derived (expression) keys materialize as columns first
             val keyed = groupBys.foldLeft(bindings) {
               case (df, (v, Some(c))) => df.withColumn(v, c)
               case (df, _) => df
             }
+            // no aggregate at all: GROUP BY alone yields one row per key
             val g =
-              if (groupBys.isEmpty) keyed.agg(aggs.head, aggs.tail: _*)
+              if (aggs.isEmpty) keyed.select(keyNames.map(col): _*).distinct()
               else keyed.groupBy(keyNames.map(col): _*)
                 .agg(aggs.head, aggs.tail: _*)
             val filtered = havings.zipWithIndex.foldLeft(g) {
-              case (df, ((c, isAgg, op, rhs), k)) =>
-                val lhs = if (isAgg) col("#having" + k) else c
-                df.filter(op match {
-                  case "bool" => lhs
-                  case "=" => lhs === rhs
-                  case "!=" => lhs =!= rhs
-                  case ">" => lhs > rhs
-                  case ">=" => lhs >= rhs
-                  case "<" => lhs < rhs
-                  case "<=" => lhs <= rhs
-                })
+              case (df, ((c, isAgg), k)) =>
+                df.filter(if (isAgg) col("#having" + k) else c)
             }
             filtered.select(items.toSeq.map {
               case PlainVar(v) => col(v)
               // backtick-quote: a bare-constant projection can be named
               // after a DECIMAL literal ("1.5") and col() would read the
               // dot as struct-field access
-              case Derived(v, _, _, _) => filtered("`" + v + "`")
+              case Derived(v, _, _) => filtered("`" + v + "`")
               case Star => throw new IllegalArgumentException(
                 "* cannot mix with aggregation")
             } ++ orders.zipWithIndex.collect {
@@ -1699,135 +1673,30 @@ object ConstructParser {
       SelectQ(run, proj, readsQuads(els))
     }
 
-    /** Possibly-aggregating projection expression: arithmetic (`+ - * /`)
-      * over aggregate terms (`SUM(?x) / COUNT(*)`, `MAX(?x) - MIN(?x)`),
-      * single aggregates, or a plain row-level expression. Mixed forms
-      * must LEAD with the aggregate (a leading numeric literal parses as
-      * a plain expression). Aggregate args use the column's NATIVE type
-      * (no string cast) so SUM/AVG over numeric binding columns keep
-      * their numeric semantics; term-typed args aggregate by VALUE.
-      */
-    private def aggExpr(): (Column, Boolean) = {
-      var (c, isAgg) = aggMulExpr(first = true)
-      skipWs()
-      var go = true
-      while (go) {
-        if (peek == '+') {
-          i += 1; val (r, ra) = aggMulExpr(first = false)
-          c = c + r; isAgg ||= ra; lastExprKind = KOther; skipWs()
-        } else if (peek == '-') {
-          i += 1; val (r, ra) = aggMulExpr(first = false)
-          c = c - r; isAgg ||= ra; lastExprKind = KOther; skipWs()
-        } else go = false
-      }
-      (c, isAgg)
+    /** Parse with `p`; did it consume an aggregate primary? */
+    private def aggregating[A](p: => A): (A, Boolean) = {
+      val k = aggsParsed.size
+      val a = p
+      (a, aggsParsed.size > k)
     }
 
-    private def aggMulExpr(first: Boolean): (Column, Boolean) = {
-      var (c, isAgg) = aggPrimary(narrow = !first)
-      skipWs()
-      var go = true
-      while (go) {
-        if (peek == '*') {
-          i += 1; val (r, ra) = aggPrimary(narrow = true)
-          c = c * r; isAgg ||= ra; lastExprKind = KOther; skipWs()
-        } else if (peek == '/') {
-          i += 1; val (r, ra) = aggPrimary(narrow = true)
-          c = c / r; isAgg ||= ra; lastExprKind = KOther; skipWs()
-        } else go = false
-      }
-      (c, isAgg)
+    /** Parse with `p` where SPARQL allows no aggregate (§18.2.4.1: they
+      * live in projections, HAVING and ORDER BY only).
+      */
+    private def noAggregate[A](where: String)(p: => A): A = {
+      val k = aggsParsed.size
+      val a = p
+      if (aggsParsed.size > k)
+        fail(s"aggregate ${aggsParsed(k)} is not allowed in $where")
+      a
     }
 
-    /** `narrow` = this primary is a RIGHT operand of the aggregate-level
-      * arithmetic, so the plain-expression fallback must stop at unary
-      * level (a full expr() would greedily swallow the additive tail and
-      * break precedence: SUM(?k) * 2 + 1 must not become SUM(?k) * 3).
-      */
-    private def aggPrimary(narrow: Boolean): (Column, Boolean) = {
-      skipWs()
-      if (kw("COUNT")) {
-        skipWs(); expect('('); skipWs()
-        val c =
-          if (peek == '*') { i += 1; count(lit(1)) }
-          else if (kw("DISTINCT")) countDistinct(expr().c)
-          else count(expr().c)
-        skipWs(); expect(')')
-        lastExprKind = KInt
-        (c, true)
-      } else if (kw("SUM") || kw("AVG") || kw("MIN") || kw("MAX")) {
-        val f = s.substring(i - 3, i).toUpperCase
-        skipWs(); expect('('); skipWs()
-        val dist = kw("DISTINCT")
-        val e = { skipWs(); expr() }
-        skipWs(); expect(')')
-        // a TERM-typed argument (pattern-bound var) aggregates its
-        // numeric VALUE for SUM/AVG (SPARQL numeric aggregation — the
-        // lexical string would cast-fail to NULL silently) and orders
-        // numerics by value / others lexically for MIN/MAX
-        val a = if (e.term) numTermVal(e.c) else e.c
-        val c = f match {
-          case "SUM" => if (dist) sum_distinct(a) else sum(a)
-          case "AVG" => if (dist) sum_distinct(a) / countDistinct(a) else avg(a)
-          case "MIN" => // DISTINCT is a no-op for MIN/MAX
-            if (e.term) min_by(e.c, termOrdKey(e.c)) else min(a)
-          case "MAX" =>
-            if (e.term) max_by(e.c, termOrdKey(e.c)) else max(a)
-        }
-        // MIN/MAX of a term column yields the term itself
-        lastExprKind =
-          if (e.term && (f == "MIN" || f == "MAX")) KTerm else KOther
-        (c, true)
-      } else if (kw("SAMPLE")) {
-        skipWs(); expect('(')
-        val e = expr()
-        val a = e.c
-        skipWs(); expect(')')
-        lastExprKind = if (e.term) KTerm else KOther
-        (min(a), true) // deterministic SAMPLE (SPARQL: any value)
-      } else if (kw("GROUP_CONCAT")) {
-        skipWs(); expect('('); skipWs()
-        val dist = kw("DISTINCT")
-        val e = { skipWs(); expr() }
-        skipWs()
-        var sep = " " // SPARQL default separator
-        if (peek == ';') {
-          i += 1; skipWs()
-          if (!kw("SEPARATOR")) fail("expected SEPARATOR")
-          skipWs(); expect('='); skipWs()
-          sep = stringLit()
-        }
-        skipWs(); expect(')')
-        // DISTINCT applies to the solution TERMS (§18.5.1.7: Distinct
-        // precedes the string conversion — "a" and "a"@en stay two
-        // elements), then term args concatenate their STR lexical forms;
-        // sorted for determinism (SPARQL leaves concat order unspecified)
-        val a = e.c.cast("string")
-        val lst = sort_array(if (dist) collect_set(a) else collect_list(a))
-        val strs = if (e.term) transform(lst, rawTermCol(_)) else lst
-        lastExprKind = KOther
-        (array_join(strs, sep), true)
-      } else if (kw("ROUND")) {
-        skipWs(); expect('(')
-        val (inner, isAgg) = aggExpr()
-        skipWs(); expect(',')
-        skipWs()
-        val d = number().toInt
-        skipWs(); expect(')')
-        lastExprKind = KOther
-        (round(inner, d), isAgg)
-      } else if (narrow) {
-        // right operand of aggregate arithmetic: numeric by construction,
-        // so coerce term/raw values to their numeric form here (unary()
-        // alone would feed a raw N-Triples term string into `*`/`+`)
-        lastExprKind = KOther
-        (numC(unary()), false)
-      } else {
-        val e = expr()
-        lastExprKind = if (e.term) KTerm else KOther
-        (e.c, false)
-      }
-    }
+    /** The argument of aggregate `fn`: aggregate-free itself. */
+    private def aggArg(fn: String): E =
+      noAggregate(s"the argument of $fn")(expr())
+
+    /** Record one parsed aggregate primary. */
+    private def aggregate(fn: String, e: E): E = { aggsParsed += fn; e }
 
     // ---------------------------------------------------------- templates
 
@@ -2092,8 +1961,8 @@ object ConstructParser {
         }
         else if (scope.propFnTermVars(v)) col(v) // pf output: already a term
         else scope.binds.get(v) match {
-          case Some(E(c, true, _)) => c
-          case Some(E(c, false, _)) => RdfTerms.strLit(c.cast("string"))
+          case Some(E(c, true, _, _)) => c
+          case Some(E(c, false, _, _)) => RdfTerms.strLit(c.cast("string"))
           case None => RdfTerms.strLit(col(v).cast("string"))
         }
       case PathT(_) => fail("property path in template position")
@@ -2302,7 +2171,7 @@ object ConstructParser {
       while (peek != '}') {
         if (kw("BIND")) {
           skipWs(); expect('(')
-          val e = expr()
+          val e = noAggregate("BIND")(expr())
           skipWs()
           if (!kw("AS")) fail("expected AS in BIND")
           skipWs()
@@ -2341,7 +2210,7 @@ object ConstructParser {
             expect('(')
             val slot = new Array[Column](1)
             scope.pendingFilters += ((slot, i))
-            slot(0) = expr().c
+            slot(0) = noAggregate("FILTER")(expr()).c
             if (pendingMapCompute.isDefined) fail(
               "map.computeIfAbsent is only supported as a BIND expression")
             skipWs(); expect(')')
@@ -3424,19 +3293,14 @@ object ConstructParser {
       left
     }
 
-    /** `=`/`!=` compare RDF terms: when exactly one side is already a
-      * term, the raw side is promoted to its plain-literal term form so
-      * `?role != "system"` works against pattern-bound term columns.
-      * `<`/`<=`/`>`/`>=` compare numerically when either side is numeric,
+    /** `=`/`!=` compare RDF terms ([[termEq]]). `<`/`<=`/`>`/`>=`
+      * compare numerically when either side is numeric,
       * else lexicographically on raw values; `<` is an operator only when
       * followed by whitespace (otherwise it opens an IRI).
       */
     private def cmp(): E = {
       val left = addExpr()
       skipWs()
-      def termSides(r: E): (Column, Column) =
-        if (left.term == r.term) (left.c, r.c)
-        else (termCol(left), termCol(r))
       // ordering: numeric when either side is statically numeric; for
       // term-term comparisons decide PER ROW — two numeric-typed literals
       // compare by value ("9"^^xsd:integer < "10"^^xsd:integer), anything
@@ -3449,11 +3313,9 @@ object ConstructParser {
           when(ln.isNotNull && rn.isNotNull, op(ln, rn))
             .otherwise(op(raw(left), raw(r)))
         } else op(raw(left), raw(r))
-      if (kwSym("!=")) {
-        val r = addExpr(); val (a, b) = termSides(r); E(a =!= b, term = false)
-      } else if (kwSym("=")) {
-        val r = addExpr(); val (a, b) = termSides(r); E(a === b, term = false)
-      } else if (kwSym("<=")) {
+      if (kwSym("!=")) E(!termEq(left, addExpr()), term = false)
+      else if (kwSym("=")) E(termEq(left, addExpr()), term = false)
+      else if (kwSym("<=")) {
         val r = addExpr(); E(ord(r, _ <= _), term = false)
       } else if (kwSym(">=")) {
         val r = addExpr(); E(ord(r, _ >= _), term = false)
@@ -3470,18 +3332,32 @@ object ConstructParser {
       } else left
     }
 
-    /** `e [NOT] IN (v, …)` — equality against each member with the same
-      * raw↔term promotion as `=`.
-      */
+    /** `e [NOT] IN (v, …)` — [[termEq]] against each member. */
     private def inList(left: E, neg: Boolean): E = {
       val items = argList()
       require(items.nonEmpty, "IN needs at least one value")
-      val cond = items.map { x =>
-        if (left.term == x.term) left.c === x.c
-        else termCol(left) === termCol(x)
-      }.reduce(_ || _)
+      val cond = items.map(termEq(left, _)).reduce(_ || _)
       E(if (neg) !cond else cond, term = false)
     }
+
+    /** RDF-term equality. When exactly one side is already a term, the
+      * raw side is promoted to its plain-literal term form so
+      * `?role != "system"` works against pattern-bound term columns —
+      * except against a number, where a numeric-typed term compares by
+      * VALUE (`?o = 1` holds for `"1"^^xsd:integer`; other terms keep the
+      * term comparison, as [[cmp]]'s ordering does per row).
+      */
+    private def termEq(l: E, r: E): Column =
+      if (l.term == r.term) l.c === r.c
+      else {
+        val (t, x) = if (l.term) (l, r) else (r, l)
+        val byTerm = termCol(l) === termCol(r)
+        if (!x.num) byTerm
+        else {
+          val v = numTermVal(t.c)
+          when(v.isNotNull, v === numC(x)).otherwise(byTerm)
+        }
+      }
 
     private def addExpr(): E = {
       var left = mulExpr()
@@ -3673,6 +3549,78 @@ object ConstructParser {
         case '(' => i += 1; val e = expr(); skipWs(); expect(')'); e
         case c if c.isDigit || c == '-' =>
           E(lit(exprNumber()).cast("string"), term = false, num = true)
+        // ---- §18.5 aggregates. Arguments use the column's NATIVE type (no
+        // string cast), so SUM/AVG over numeric binding columns keep their
+        // numeric semantics; term-typed arguments aggregate by VALUE.
+        case _ if kw("COUNT") =>
+          skipWs(); expect('('); skipWs()
+          val c =
+            if (peek == '*') { i += 1; count(lit(1)) }
+            else if (kw("DISTINCT")) countDistinct(aggArg("COUNT").c)
+            else count(aggArg("COUNT").c)
+          skipWs(); expect(')')
+          aggregate("COUNT", E(c, term = false, num = true, int = true))
+        case _ if kw("SUM") || kw("AVG") || kw("MIN") || kw("MAX") =>
+          val f = s.substring(i - 3, i).toUpperCase
+          skipWs(); expect('('); skipWs()
+          val dist = kw("DISTINCT")
+          val e = aggArg(f)
+          skipWs(); expect(')')
+          // a TERM-typed argument (pattern-bound var) aggregates its
+          // numeric VALUE for SUM/AVG (SPARQL numeric aggregation — the
+          // lexical string would cast-fail to NULL silently) and orders
+          // numerics by value / others lexically for MIN/MAX, which
+          // yield the term itself. DISTINCT is a no-op for MIN/MAX.
+          val a = if (e.term) numTermVal(e.c) else e.c
+          aggregate(f, f match {
+            case "SUM" =>
+              E(if (dist) sum_distinct(a) else sum(a), term = false, num = true)
+            case "AVG" =>
+              E(if (dist) sum_distinct(a) / countDistinct(a) else avg(a),
+                term = false, num = true)
+            case "MIN" =>
+              if (e.term) E(min_by(e.c, termOrdKey(e.c)), term = true)
+              else E(min(a), term = false, num = e.num)
+            case "MAX" =>
+              if (e.term) E(max_by(e.c, termOrdKey(e.c)), term = true)
+              else E(max(a), term = false, num = e.num)
+          })
+        case _ if kw("SAMPLE") =>
+          skipWs(); expect('(')
+          val e = aggArg("SAMPLE")
+          skipWs(); expect(')')
+          // deterministic SAMPLE (SPARQL: any value)
+          aggregate("SAMPLE", E(min(e.c), e.term, e.num))
+        case _ if kw("GROUP_CONCAT") =>
+          skipWs(); expect('('); skipWs()
+          val dist = kw("DISTINCT")
+          val e = aggArg("GROUP_CONCAT")
+          skipWs()
+          var sep = " " // SPARQL default separator
+          if (peek == ';') {
+            i += 1; skipWs()
+            if (!kw("SEPARATOR")) fail("expected SEPARATOR")
+            skipWs(); expect('='); skipWs()
+            sep = stringLit()
+          }
+          skipWs(); expect(')')
+          // DISTINCT applies to the solution TERMS (§18.5.1.7: Distinct
+          // precedes the string conversion — "a" and "a"@en stay two
+          // elements), then term args concatenate their STR lexical forms;
+          // sorted for determinism (SPARQL leaves concat order unspecified)
+          val a = e.c.cast("string")
+          val lst = sort_array(if (dist) collect_set(a) else collect_list(a))
+          val strs = if (e.term) transform(lst, rawTermCol(_)) else lst
+          aggregate("GROUP_CONCAT", E(array_join(strs, sep), term = false))
+        case _ if kw("ROUND") =>
+          // ROUND(e [, digits]) rounds e's own column, so ROUND(SUM(?v), 2)
+          // keeps SUM's type
+          skipWs(); expect('(')
+          val e = expr()
+          skipWs()
+          val d = if (peek == ',') { i += 1; skipWs(); number().toInt } else 0
+          skipWs(); expect(')')
+          E(round(if (e.term) numC(e) else e.c, d), term = false, num = true)
         case _ if kw("IRI") || kw("URI") =>
           val args = argList()
           require(args.size == 1, "IRI takes 1 argument")

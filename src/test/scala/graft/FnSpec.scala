@@ -406,4 +406,70 @@ class FnSpec extends AnyFunSuite {
     assert(got.length === 1 &&
       got(0).getDouble(0) === 643.0) // (1+20+300)*2+1, numeric coercion
   }
+
+  test("aggregates compose with any expression; = and IN compare numeric " +
+      "terms by value; GROUP BY needs no aggregate") {
+    val data = "PREFIX ex: <http://ex/> INSERT DATA { ex:a ex:v 1 . " +
+      "ex:a ex:v 2 . ex:a ex:v 3 . ex:b ex:v 10 . ex:c ex:v 5 . ex:c ex:v 7 }"
+    // ex: IRIs print as their local name, literal terms as their lexical
+    def cell(v: Any): Any = v match {
+      case t: String if t.startsWith("<http://ex/") =>
+        t.stripPrefix("<http://ex/").stripSuffix(">")
+      case t: String if t.startsWith("\"") => t.drop(1).takeWhile(_ != '"')
+      case x => x
+    }
+    def grouped(proj: String, tail: String = "ORDER BY ?s") =
+      s"SELECT ?s $proj WHERE { ?s ex:v ?o } GROUP BY ?s $tail"
+    def filtered(cond: String) =
+      s"SELECT ?s ?o WHERE { ?s ex:v ?o FILTER($cond) } ORDER BY ?s ?o"
+    val cases = Seq[(String, Seq[Seq[Any]])](
+      grouped("", "HAVING (COUNT(*) > 1 && COUNT(*) < 3) ORDER BY ?s") ->
+        Seq(Seq("c")),
+      grouped("", "HAVING (SUM(?o) > 2 * COUNT(*)) ORDER BY ?s") ->
+        Seq(Seq("b"), Seq("c")),
+      grouped("", "HAVING (1 < COUNT(*)) ORDER BY ?s") -> Seq(Seq("a"), Seq("c")),
+      grouped("", "HAVING (MAX(?o) > 6) ORDER BY ?s") -> Seq(Seq("b"), Seq("c")),
+      grouped("", "HAVING (MIN(?o) = 1) ORDER BY ?s") -> Seq(Seq("a")),
+      grouped("(2 * COUNT(*) AS ?n)") ->
+        Seq(Seq("a", 6.0), Seq("b", 2.0), Seq("c", 4.0)),
+      grouped("(STR(COUNT(*)) AS ?n)") ->
+        Seq(Seq("a", "3"), Seq("b", "1"), Seq("c", "2")),
+      grouped("""(IF(COUNT(*) > 1, "many", "one") AS ?n)""") ->
+        Seq(Seq("a", "many"), Seq("b", "one"), Seq("c", "many")),
+      grouped("(ABS(SUM(?o)) AS ?n)") ->
+        Seq(Seq("a", 6.0), Seq("b", 10.0), Seq("c", 12.0)),
+      grouped("((SUM(?o)) AS ?n)") ->
+        Seq(Seq("a", 6.0), Seq("b", 10.0), Seq("c", 12.0)),
+      grouped("(MAX(?o) + 1 AS ?n)") ->
+        Seq(Seq("a", 4.0), Seq("b", 11.0), Seq("c", 8.0)),
+      // aggregate ± aggregate takes arithmetic's double coercion
+      grouped("(COUNT(*) + COUNT(?o) AS ?n)") ->
+        Seq(Seq("a", 6.0), Seq("b", 2.0), Seq("c", 4.0)),
+      grouped("", "ORDER BY (0 - COUNT(*))") -> Seq(Seq("a"), Seq("c"), Seq("b")),
+      filtered("ROUND(?o / 2) = 2") -> Seq(Seq("a", "3")),
+      filtered("?o = 1") -> Seq(Seq("a", "1")),
+      filtered("?o IN (1, 10)") -> Seq(Seq("a", "1"), Seq("b", "10")),
+      filtered("?o != 1") -> Seq(Seq("a", "2"), Seq("a", "3"), Seq("b", "10"),
+        Seq("c", "5"), Seq("c", "7")),
+      grouped("") -> Seq(Seq("a"), Seq("b"), Seq("c")))
+    cases.foreach { case (q, want) =>
+      val got = graft.pipeline.Script.runSparql(spark, data + " ;\n" + q)
+        .lastQuery.get.collect().map(_.toSeq.map(cell)).toSeq
+      assert(got === want, q)
+    }
+  }
+
+  test("aggregates outside projections, HAVING and ORDER BY fail at parse") {
+    val where = "{ ?s <http://ex/v> ?o "
+    Seq(
+      s"SELECT ?s WHERE $where FILTER(COUNT(*) > 1) }" -> "FILTER",
+      s"SELECT ?n WHERE $where BIND(COUNT(*) AS ?n) }" -> "BIND",
+      s"SELECT (SUM(COUNT(*)) AS ?n) WHERE $where }" -> "the argument of SUM",
+      s"SELECT ?s WHERE $where } GROUP BY (COUNT(*))" -> "GROUP BY"
+    ).foreach { case (q, where) =>
+      val e = intercept[IllegalArgumentException](ConstructParser.parseSelect(q))
+      assert(e.getMessage.contains(s"aggregate COUNT is not allowed in $where"),
+        e.getMessage)
+    }
+  }
 }

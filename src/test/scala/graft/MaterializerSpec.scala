@@ -1,5 +1,6 @@
 package graft
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart}
@@ -11,12 +12,23 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 
-class MaterializerSpec extends AnyFunSuite {
+class MaterializerSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft-mat").toString
+  /** Every store of this spec lives under one directory, deleted after
+    * the last test.
+    */
+  private lazy val root = Files.createTempDirectory("graft-mat")
+
+  private def tmp(): String = Files.createTempDirectory(root, "store").toString
+
+  private def deleteTree(dir: Path): Unit =
+    Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.delete(p))
+
+  override def afterAll(): Unit =
+    try deleteTree(root) finally super.afterAll()
 
   private def parquetFiles(dir: Path): Seq[Path] =
     Files.list(dir).iterator.asScala
@@ -104,9 +116,7 @@ class MaterializerSpec extends AnyFunSuite {
       .filter($"bucket" === 2).count()
     assert(lost > 0)
     // wipe bucket 2's directory
-    val dir = Paths.get(s"$out/triples/bucket=2")
-    Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.delete(p))
+    deleteTree(Paths.get(s"$out/triples/bucket=2"))
     assert(spark.read.parquet(s"$out/triples").count() === full - lost)
     Materializer.write(triples, out, nBuckets = 4, resume = true)
     assert(spark.read.parquet(s"$out/triples").count() === full)
@@ -261,9 +271,7 @@ class MaterializerSpec extends AnyFunSuite {
     // `_staging/` (no `_SUCCESS`) holds a stale part and an attempt's tmp
     val stale = parquetFiles(bucketDirs(out).maxBy(_.getFileName.toString)).head
     Files.delete(Paths.get(s"$out/_bucket_0.done"))
-    val dir = Paths.get(s"$out/triples/bucket=0")
-    Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.delete(p))
+    deleteTree(Paths.get(s"$out/triples/bucket=0"))
     val staged = Files.createDirectories(Paths.get(s"$out/_staging/bucket=0"))
     Files.copy(stale, staged.resolve("part-00099.parquet"))
     Files.copy(stale, staged.resolve(".part-00000-7.tmp"))
@@ -324,8 +332,11 @@ class MaterializerSpec extends AnyFunSuite {
   }
 
   test("nquads serialization shape") {
-    val df = Seq(("<s>", "<p>", "\"o\"", "<g>")).toDF("subj", "pred", "obj", "graph")
-    assert(Materializer.toNQuads(df).as[String].head ===
-      "<s> <p> \"o\" <g> .")
+    val df = Seq(("<s>", "<p>", "\"o\"", "<g>"),
+      ("<s>", "<p>", "\"o\"", "<urn:x-arq:DefaultGraph>"))
+      .toDF("subj", "pred", "obj", "graph")
+    // a named graph is the fourth term; the default graph writes none
+    assert(graft.sources.RdfIO.nquadLines(df).as[String].collect().toSeq ===
+      Seq("<s> <p> \"o\" <g> .", "<s> <p> \"o\" ."))
   }
 }
