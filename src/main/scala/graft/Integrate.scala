@@ -1,15 +1,16 @@
 package graft
 
-import java.io.PrintStream
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.io.{BufferedOutputStream, OutputStream, PrintStream}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.zip.GZIPOutputStream
 
-import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.pipeline.Script
 import graft.rules.ConstructParser
-import graft.server.{DriverStream, SparqlHttpServer}
+import graft.server.SparqlHttpServer
 import graft.sources.RdfIO
 
 /** The `integrate` CLI front door — the reference's primary UX
@@ -29,16 +30,16 @@ import graft.sources.RdfIO
   * Spark-first scale notes:
   *  - serialization (N-Quads/TriG/TSV line crafting) is a distributed
   *    `select(concat_ws…)` — executors format, the driver only moves
-  *    bytes. The projections are the ones `/sparql` serves
+  *    bytes. The projections and bodies are the ones `/sparql` serves
   *    ([[graft.sources.RdfIO.quadLines]],
-  *    [[graft.server.SparqlHttpServer.tsvLines]]), and stdout and TSV
-  *    stream through [[graft.server.DriverStream]] like its response
-  *    bodies (one job per wave of partitions, never a full `collect`).
-  *  - `-o FILE` is single-file CLI semantics, so a merge to one file is
-  *    inherent: parts are written distributed to a staging dir, then
-  *    concatenated and ATOMICALLY moved into place (the reference writes
-  *    `.name.tmp` then moves — SparqlIntegrateCmdImpls.java:292-312).
-  *    `.gz` outputs concatenate gzip members (valid multi-member gzip).
+  *    [[graft.server.SparqlHttpServer.BodyStream]]): every output —
+  *    stdout, the stderr TSV, `-o FILE` and each `--split` file — streams
+  *    through [[graft.server.DriverStream]] (one job per wave of
+  *    partitions, never a full `collect`).
+  *  - `-o FILE` is single-file CLI semantics, so every byte passes
+  *    through this process anyway: it streams into a dot-tmp sibling (gzip
+  *    when the name ends in `.gz`) that is ATOMICALLY moved into place
+  *    ([[writeFile]]).
   *    Cluster-scale materialization (bucketed parquet, resumable) stays
   *    [[graft.materialize.Materializer]] — a single file IS the
   *    bottleneck at 100 TB, so that path is not offered here.
@@ -208,33 +209,34 @@ object Integrate {
 
   // ------------------------------------------------------------- sinks
 
-  /** Distributed single-file write: parts staged by executors, then
-    * concatenated in part order and atomically moved into place.
+  /** The quad lines `lines` as one file `out`, through [[writeFile]].
     * `mkdirs = false` preserves the reference's fail-without-flag
     * semantics for `-o` paths whose parent does not exist.
     */
   private[graft] def writeSingleFile(lines: DataFrame, out: Path,
-      gzip: Boolean, mkdirs: Boolean = true): Unit = {
-    val parent = Option(out.getParent).getOrElse(Paths.get("."))
+      gzip: Boolean, mkdirs: Boolean = true): Unit =
+    writeFile(out, gzip, mkdirs)(SparqlHttpServer.quadBody(lines).writeTo)
+
+  /** Every output file's one writer: `write` fills a dot-tmp sibling
+    * (gzip-compressed if `gzip`), which then replaces `out` in one atomic
+    * move, as the reference writes `.name.tmp` and moves it
+    * (SparqlIntegrateCmdImpls.java:292-312). On any failure the tmp is
+    * deleted and an existing `out` is left as it was.
+    */
+  private def writeFile(out: Path, gzip: Boolean, mkdirs: Boolean)(
+      write: OutputStream => Unit): Unit = {
     ensureParentDir(out, mkdirs)
-    val staging = parent.resolve("." + out.getFileName + ".staging")
-    val tmp = parent.resolve("." + out.getFileName + ".tmp")
-    val w = lines.write.mode("overwrite")
-    (if (gzip) w.option("compression", "gzip") else w).text(staging.toString)
-    val os = Files.newOutputStream(tmp, StandardOpenOption.CREATE,
-      StandardOpenOption.WRITE, StandardOpenOption.TRUNCATE_EXISTING)
+    val tmp = out.resolveSibling("." + out.getFileName + ".tmp")
     try {
-      val s = Files.list(staging)
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-"))
-        .toSeq.sortBy(_.getFileName.toString)
-        .foreach(part => Files.copy(part, os))
-      finally s.close()
-    } finally os.close()
-    Files.move(tmp, out, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    deleteRec(staging)
+      Using.resource(new BufferedOutputStream(
+        if (gzip) new GZIPOutputStream(Files.newOutputStream(tmp), Buf)
+        else Files.newOutputStream(tmp), Buf))(write)
+      Files.move(tmp, out, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
   }
+
+  private val Buf = 1 << 16
 
   /** Fail loudly when the output's parent directory is missing unless
     * directory creation was requested (`--out-mkdirs`).
@@ -247,23 +249,6 @@ object Integrate {
           "(pass --out-mkdirs to create it)")
       Files.createDirectories(parent)
     }
-  }
-
-  private def deleteRec(p: Path): Unit =
-    if (Files.exists(p)) {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try s.iterator().asScala.toSeq.foreach(deleteRec) finally s.close()
-      }
-      Files.deleteIfExists(p)
-    }
-
-  /** SPARQL 1.1 Query Results TSV, as `/sparql` serves it: `?var`
-    * header then term rows (unbound = empty field).
-    */
-  private def printTsv(df: DataFrame, to: PrintStream): Unit = {
-    to.println(SparqlHttpServer.tsvHeader(df))
-    DriverStream.lines(SparqlHttpServer.tsvLines(df)).foreach(to.println)
   }
 
   /** Pick the quad output format: explicit `--of` wins, else the output
@@ -344,6 +329,11 @@ object Integrate {
     val tables = outputs.collect { case (p, Script.TableOutput(df)) => (p, df) }
     val bindingsMode = quads.isEmpty && tables.nonEmpty
 
+    // stdout and stderr flush once per body, not once per line
+    def stream(ps: PrintStream): OutputStream =
+      new BufferedOutputStream(ps, Buf)
+    val tsv: OutputStream => Unit = os =>
+      tables.foreach { case (_, df) => SparqlHttpServer.tsvBody(df).writeTo(os) }
     cfg.split match {
       case Some(dir) =>
         // one output file per source argument, clustered by local name
@@ -361,14 +351,16 @@ object Integrate {
             writeSingleFile(union, Paths.get(dir).resolve(s"$name.$ext"),
               gzip = false)
         }
-        tables.foreach { case (_, df) => printTsv(df, err) }
+        tsv(stream(err))
       case None =>
-        val mainSink: DataFrame => Unit = lines => cfg.outFile match {
-          case Some(f) =>
-            writeSingleFile(lines, Paths.get(f),
-              gzip = f.matches("(?i).*\\.gz$"), mkdirs = cfg.outMkDirs)
-          case None => DriverStream.lines(lines).foreach(out.println)
-        }
+        // the main output: -o FILE (atomically) or stdout
+        val mainSink: (OutputStream => Unit) => Unit = write =>
+          cfg.outFile match {
+            case Some(f) =>
+              writeFile(Paths.get(f), gzip = f.matches("(?i).*\\.gz$"),
+                cfg.outMkDirs)(write)
+            case None => write(stream(out))
+          }
         if (quads.nonEmpty) {
           if (fmt == "hdt") {
             // binary single-file encode: triple view (graph names do not
@@ -381,28 +373,14 @@ object Integrate {
             graft.sources.HdtIO.writeHdt(
               quads.map(_._2.selectExpr("subj", "pred", "obj"))
                 .reduce(_ unionByName _), f)
-          } else mainSink(quads.map { case (_, df) =>
-            RdfIO.quadLines(df, trig) }.reduce(_ unionByName _))
-        }
-        if (bindingsMode) {
-          // bindings-only script: the TSV IS the main output
-          cfg.outFile match {
-            case Some(f) =>
-              // stream rows straight to the tmp file — buffering the whole
-              // TSV on the driver would break the no-driver-collect
-              // contract for large results
-              val p = Paths.get(f)
-              ensureParentDir(p, cfg.outMkDirs)
-              val tmp = p.resolveSibling("." + p.getFileName + ".tmp")
-              val ps = new PrintStream(Files.newOutputStream(tmp),
-                false, "UTF-8")
-              try tables.foreach { case (_, df) => printTsv(df, ps) }
-              finally ps.close()
-              Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-                StandardCopyOption.REPLACE_EXISTING)
-            case None => tables.foreach { case (_, df) => printTsv(df, out) }
+          } else {
+            val lines = quads.map { case (_, df) => RdfIO.quadLines(df, trig) }
+              .reduce(_ unionByName _)
+            mainSink(SparqlHttpServer.quadBody(lines).writeTo)
           }
-        } else tables.foreach { case (_, df) => printTsv(df, err) }
+        }
+        // a bindings-only script's TSV IS the main output
+        if (bindingsMode) mainSink(tsv) else tsv(stream(err))
     }
     if (cfg.server) {
       // serve the FINAL dataset state — the reference starts its server

@@ -3345,10 +3345,13 @@ object ConstructParser {
       * `?role != "system"` works against pattern-bound term columns —
       * except against a number, where a numeric-typed term compares by
       * VALUE (`?o = 1` holds for `"1"^^xsd:integer`; other terms keep the
-      * term comparison, as [[cmp]]'s ordering does per row).
+      * term comparison, as [[cmp]]'s ordering does per row). Two numeric
+      * raw values compare by value too (`2 = 2.0`), not by their lexical
+      * strings.
       */
     private def termEq(l: E, r: E): Column =
-      if (l.term == r.term) l.c === r.c
+      if (!l.term && !r.term && l.num && r.num) numC(l) === numC(r)
+      else if (l.term == r.term) l.c === r.c
       else {
         val (t, x) = if (l.term) (l, r) else (r, l)
         val byTerm = termCol(l) === termCol(r)
@@ -3618,9 +3621,18 @@ object ConstructParser {
           skipWs(); expect('(')
           val e = expr()
           skipWs()
-          val d = if (peek == ',') { i += 1; skipWs(); number().toInt } else 0
+          val digits =
+            if (peek == ',') { i += 1; skipWs(); Some(number().toInt) } else None
           skipWs(); expect(')')
-          E(round(if (e.term) numC(e) else e.c, d), term = false, num = true)
+          val x = if (e.term) numC(e) else e.c
+          val r = round(x, digits.getOrElse(0))
+          // SPARQL's one-argument ROUND is fn:round: halves round toward
+          // +INF, where Spark's HALF_UP rounds -2.5 to -3. The two-argument
+          // form is this engine's extension and keeps HALF_UP, as its
+          // DuckDB oracle rounds
+          E(if (digits.nonEmpty) r
+            else when(r - x.cast("double") === -0.5, r + 1).otherwise(r),
+            term = false, num = true)
         case _ if kw("IRI") || kw("URI") =>
           val args = argList()
           require(args.size == 1, "IRI takes 1 argument")

@@ -6,9 +6,9 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 
 /** Driver-side streaming of a distributed result into one driver stream:
-  * the only way a result reaches the driver, for the `integrate` CLI's
-  * stdout and TSV sinks and the `/sparql` response bodies of
-  * [[SparqlHttpServer]].
+  * the only way a result reaches the driver, for every output of the
+  * `integrate` CLI (stdout, the stderr TSV, `-o FILE` and the `--split`
+  * files) and the `/sparql` response bodies of [[SparqlHttpServer]].
   *
   * Spark's own local iterator runs one single-task job per partition, one
   * after another, so a lookup over P partitions pays P job launches and

@@ -239,12 +239,6 @@ final class SparqlHttpServer private (
 
   // --------------------------------------------------------- streaming
 
-  /** A streamed response: constant prefix/suffix around a line iterator
-    * (lines carry their own terminators; `sep` goes BETWEEN lines).
-    */
-  private final case class BodyStream(prefix: String,
-      lines: Iterator[String], sep: String, suffix: String)
-
   private def streamBody(ex: HttpExchange, code: Int, mime: String)(
       body: BodyStream): Unit = {
     // Force the FIRST wave before committing to 200/chunked: a planning
@@ -256,16 +250,7 @@ final class SparqlHttpServer private (
     ex.getResponseHeaders.set("Content-Type", s"$mime; charset=utf-8")
     ex.sendResponseHeaders(code, 0) // 0 = chunked
     val os = ex.getResponseBody
-    try {
-      os.write(body.prefix.getBytes(UTF_8))
-      var first = true
-      while (body.lines.hasNext) {
-        if (!first) os.write(body.sep.getBytes(UTF_8))
-        first = false
-        os.write(body.lines.next().getBytes(UTF_8))
-      }
-      os.write(body.suffix.getBytes(UTF_8))
-    } finally { os.close(); ex.close() }
+    try body.writeTo(os) finally { os.close(); ex.close() }
   }
 
   private def srjBody(df: DataFrame): BodyStream = {
@@ -285,13 +270,6 @@ final class SparqlHttpServer private (
       DriverStream.lines(resultXmlLines(df, vars)).map(_ + "\n"), "",
       "</results></sparql>")
   }
-
-  private def tsvBody(df: DataFrame): BodyStream =
-    BodyStream(tsvHeader(df) + "\n",
-      DriverStream.lines(tsvLines(df)).map(_ + "\n"), "", "")
-
-  private def quadBody(lines: DataFrame): BodyStream =
-    BodyStream("", DriverStream.lines(lines).map(_ + "\n"), "", "")
 
   private def serve(path: String)(h: HttpExchange => Unit): Unit =
     http.createContext(path, (ex: HttpExchange) =>
@@ -345,6 +323,39 @@ object SparqlHttpServer {
     df.columns.sameElements(Array("ask")) &&
       df.schema.head.dataType == org.apache.spark.sql.types.BooleanType
 
+  // ------------------------------------------------------------ bodies
+
+  /** A streamed result body: constant prefix/suffix around a line
+    * iterator (lines carry their own terminators; `sep` goes BETWEEN
+    * lines). The one body-writing loop: `/sparql` responses, and the
+    * `integrate` CLI's stdout, stderr and files.
+    */
+  private[graft] final case class BodyStream(prefix: String,
+      lines: Iterator[String], sep: String, suffix: String) {
+    def writeTo(os: OutputStream): Unit = {
+      os.write(prefix.getBytes(UTF_8))
+      var first = true
+      while (lines.hasNext) {
+        if (!first) os.write(sep.getBytes(UTF_8))
+        first = false
+        os.write(lines.next().getBytes(UTF_8))
+      }
+      os.write(suffix.getBytes(UTF_8))
+      os.flush()
+    }
+  }
+
+  /** SPARQL 1.1 Query Results TSV: the `?var` header line, then one line
+    * per row (unbound = empty field).
+    */
+  private[graft] def tsvBody(df: DataFrame): BodyStream =
+    BodyStream(df.columns.map("?" + _).mkString("", "\t", "\n"),
+      DriverStream.lines(tsvLines(df)).map(_ + "\n"), "", "")
+
+  /** One line per value of a one-string-column frame (N-Quads/TriG). */
+  private[graft] def quadBody(lines: DataFrame): BodyStream =
+    BodyStream("", DriverStream.lines(lines).map(_ + "\n"), "", "")
+
   // ------------------------------------------------- term serialization
 
   /** One term-string column → the SRJ term struct. `to_json` omits null
@@ -373,14 +384,10 @@ object SparqlHttpServer {
       java.util.Collections.singletonMap("ignoreNullFields", "true"))
       .as("line"))
 
-  /** SPARQL 1.1 Results TSV: the `?var` header line. */
-  private[graft] def tsvHeader(df: DataFrame): String =
-    df.columns.map("?" + _).mkString("\t")
-
   /** Distributed TSV formatting: one tab-joined line per row, an unbound
     * cell empty.
     */
-  private[graft] def tsvLines(df: DataFrame): DataFrame =
+  private def tsvLines(df: DataFrame): DataFrame =
     df.select(concat_ws("\t",
       df.columns.map(v => coalesce(term(v), lit(""))): _*).as("line"))
 

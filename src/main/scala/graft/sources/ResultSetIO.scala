@@ -109,17 +109,25 @@ object ResultSetIO {
     }: _*)
   }
 
-  /** Deterministic line-oriented SRJ fixture (same logical content as the
-    * document fixture, so both scans share one oracle).
+  /** The rows every result-set fixture encodes: `events` with
+    * event_id < 2000 as (id, event type, value in cents, user id, props.k),
+    * in id order.
     */
-  def writeSrjLinesFixture(spark: SparkSession, sfDir: String, path: String): Unit = {
-    val rows = spark.read.parquet(s"$sfDir/events.parquet")
+  private def fixtureRows(spark: SparkSession, sfDir: String)
+      : Array[org.apache.spark.sql.Row] =
+    spark.read.parquet(s"$sfDir/events.parquet")
       .filter(col("event_id") < 2000)
       .select(col("event_id").cast("long"), col("event_type"),
         round(col("value") * 100).cast("long"),
         col("user_id").cast("long"),
         get_json_object(col("props"), "$.k").cast("long"))
       .orderBy("event_id").collect()
+
+  /** Deterministic line-oriented SRJ fixture (same logical content as the
+    * document fixture, so both scans share one oracle).
+    */
+  def writeSrjLinesFixture(spark: SparkSession, sfDir: String, path: String): Unit = {
+    val rows = fixtureRows(spark, sfDir)
     val XsdInt = "http://www.w3.org/2001/XMLSchema#integer"
     def intLit(v: Long) =
       s"""{"type":"literal","value":"$v","datatype":"$XsdInt"}"""
@@ -156,13 +164,7 @@ object ResultSetIO {
     * the SRJ fixture, so the two scans share one oracle).
     */
   def writeTsvFixture(spark: SparkSession, sfDir: String, path: String): Unit = {
-    val rows = spark.read.parquet(s"$sfDir/events.parquet")
-      .filter(col("event_id") < 2000)
-      .select(col("event_id").cast("long"), col("event_type"),
-        round(col("value") * 100).cast("long"),
-        col("user_id").cast("long"),
-        get_json_object(col("props"), "$.k").cast("long"))
-      .orderBy("event_id").collect()
+    val rows = fixtureRows(spark, sfDir)
     val XsdInt = "<http://www.w3.org/2001/XMLSchema#integer>"
     val sb = new StringBuilder("?id\t?etype\t?cents\t?actor\t?k\n")
     rows.foreach { r =>
@@ -267,13 +269,7 @@ object ResultSetIO {
     * fixtures, so all three scans share one oracle).
     */
   def writeSrxFixture(spark: SparkSession, sfDir: String, path: String): Unit = {
-    val rows = spark.read.parquet(s"$sfDir/events.parquet")
-      .filter(col("event_id") < 2000)
-      .select(col("event_id").cast("long"), col("event_type"),
-        round(col("value") * 100).cast("long"),
-        col("user_id").cast("long"),
-        get_json_object(col("props"), "$.k").cast("long"))
-      .orderBy("event_id").collect()
+    val rows = fixtureRows(spark, sfDir)
     val XsdInt = "http://www.w3.org/2001/XMLSchema#integer"
     def b(v: String, inner: String) =
       s"""<binding name="$v">$inner</binding>"""
@@ -304,13 +300,7 @@ object ResultSetIO {
     * row. The oracle re-derives the decoded output from the same table.
     */
   def writeSrjFixture(spark: SparkSession, sfDir: String, path: String): Unit = {
-    val rows = spark.read.parquet(s"$sfDir/events.parquet")
-      .filter(col("event_id") < 2000)
-      .select(col("event_id").cast("long"), col("event_type"),
-        round(col("value") * 100).cast("long"),
-        col("user_id").cast("long"),
-        get_json_object(col("props"), "$.k").cast("long"))
-      .orderBy("event_id").collect()
+    val rows = fixtureRows(spark, sfDir)
     val XsdInt = "http://www.w3.org/2001/XMLSchema#integer"
     def intLit(v: Long) =
       s"""{"type":"literal","value":"$v","datatype":"$XsdInt"}"""

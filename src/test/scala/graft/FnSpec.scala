@@ -451,12 +451,24 @@ class FnSpec extends AnyFunSuite {
       filtered("?o IN (1, 10)") -> Seq(Seq("a", "1"), Seq("b", "10")),
       filtered("?o != 1") -> Seq(Seq("a", "2"), Seq("a", "3"), Seq("b", "10"),
         Seq("c", "5"), Seq("c", "7")),
-      grouped("") -> Seq(Seq("a"), Seq("b"), Seq("c")))
+      grouped("") -> Seq(Seq("a"), Seq("b"), Seq("c")),
+      // two numeric values compare by value, not by their lexical forms
+      "SELECT ?n WHERE { BIND(2 AS ?n) FILTER(?n = 2.0) }" -> Seq(Seq("2")),
+      "SELECT ?n WHERE { BIND(2 AS ?n) FILTER(?n != 2.0) }" -> Nil,
+      "SELECT ?n WHERE { BIND(2 AS ?n) FILTER(?n IN (2.0)) }" -> Seq(Seq("2")))
     cases.foreach { case (q, want) =>
       val got = graft.pipeline.Script.runSparql(spark, data + " ;\n" + q)
         .lastQuery.get.collect().map(_.toSeq.map(cell)).toSeq
       assert(got === want, q)
     }
+  }
+
+  test("ROUND rounds halves toward positive infinity and keeps its type") {
+    val out = graft.pipeline.Script.runSparql(spark,
+      "SELECT (ROUND(-2.5) AS ?a) (ROUND(2.5) AS ?b) (ROUND(-2.6) AS ?c) " +
+        "(ROUND(-2.4) AS ?d) WHERE { }").lastQuery.get
+    assert(out.schema.map(_.dataType.typeName).distinct === Seq("double"))
+    assert(out.collect().map(_.toSeq).toSeq === Seq(Seq(-2.0, 3.0, -3.0, -2.0)))
   }
 
   test("aggregates outside projections, HAVING and ORDER BY fail at parse") {

@@ -293,8 +293,8 @@ class IntegrateSpec extends AnyFunSuite {
     }.getMessage.contains("-o"))
   }
 
-  test("gzip output by extension: .nq.gz parts concatenate to a valid " +
-      "multi-member gzip") {
+  test("gzip output by extension: -o FILE.nq.gz holds the N-Quads " +
+      "gzip-compressed") {
     val dir = tmpDir()
     val nt = dir.resolve("d.nt")
     Files.writeString(nt, "<urn:a> <urn:p> \"1\" .\n<urn:b> <urn:p> \"2\" .\n")
@@ -308,5 +308,90 @@ class IntegrateSpec extends AnyFunSuite {
     assert(text.trim.split("\n").toSet === Set(
       "<urn:a> <urn:p> \"1\" .",
       "<urn:b> <urn:p> \"2\" ."))
+  }
+
+  private def gunzip(p: java.nio.file.Path): String =
+    new String(new java.util.zip.GZIPInputStream(Files.newInputStream(p))
+      .readAllBytes(), "UTF-8")
+
+  private def names(dir: java.nio.file.Path): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(dir)
+    try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+    finally s.close()
+  }
+
+  test("gzip output by extension for a bindings-only script: -o " +
+      "FILE.tsv.gz holds the TSV gzip-compressed") {
+    val dir = tmpDir()
+    val nt = dir.resolve("d.nt")
+    Files.writeString(nt, "<urn:a> <urn:p> \"1\" .\n")
+    val select = "SELECT ?s ?o WHERE { ?s <urn:p> ?o }"
+    val (_, plain, _) = cli(nt.toString, select)
+    val outFile = dir.resolve("t.tsv.gz")
+    val (code, out, err) = cli(nt.toString, select, "-o", outFile.toString)
+    assert(code === 0, err)
+    assert(out === "")
+    assert(gunzip(outFile) === "?s\t?o\n<urn:a>\t\"1\"\n")
+    assert(gunzip(outFile) === plain)
+  }
+
+  test("-o FILE holds the bytes stdout gets, for a quad script and a " +
+      "bindings-only script") {
+    val dir = tmpDir()
+    val nt = dir.resolve("d.nt")
+    Files.writeString(nt, (1 to 40).map(i =>
+      s"<urn:s$i> <urn:p> \"v$i\" <urn:g${i % 3}> .\n").mkString)
+    Seq("CONSTRUCT { GRAPH ?g { ?s <urn:q> ?o } } WHERE { GRAPH ?g { ?s <urn:p> ?o } }",
+      "SELECT ?s ?o WHERE { ?s <urn:p> ?o } ORDER BY ?o").foreach { q =>
+      val (c1, stdout, e1) = cli(nt.toString, q)
+      assert(c1 === 0, e1)
+      assert(stdout.count(_ == '\n') >= 40, q)
+      val f = dir.resolve("out")
+      val (c2, _, e2) = cli(nt.toString, q, "-o", f.toString)
+      assert(c2 === 0, e2)
+      assert(Files.readString(f) === stdout, q)
+    }
+  }
+
+  test("-o and --split leave only their output files: no .crc, _SUCCESS, " +
+      "staging directory or tmp") {
+    val dir = tmpDir()
+    val a = dir.resolve("alpha.sparql")
+    Files.writeString(a, "INSERT DATA { <urn:a> <urn:p> <urn:o> }\n" +
+      "CONSTRUCT { ?s <urn:q> ?o } WHERE { ?s <urn:p> ?o }")
+    val out = dir.resolve("o")
+    Files.createDirectories(out)
+    val (c1, _, e1) = cli(a.toString, "-o", out.resolve("main.nq").toString)
+    assert(c1 === 0, e1)
+    val (c2, _, e2) = cli("SELECT ?s WHERE { BIND(<urn:a> AS ?s) }",
+      "-o", out.resolve("table.tsv").toString)
+    assert(c2 === 0, e2)
+    val split = dir.resolve("split")
+    val (c3, _, e3) = cli("--split", split.toString, a.toString)
+    assert(c3 === 0, e3)
+    assert(names(out) === Seq("main.nq", "table.tsv"))
+    assert(names(split) === Seq("alpha.nq"))
+    assert(names(dir) === Seq("alpha.sparql", "o", "split"))
+  }
+
+  test("writeSingleFile over a frame that fails while it runs leaves the " +
+      "target as it was and no tmp beside it") {
+    import org.apache.spark.sql.functions._
+    val dir = tmpDir()
+    val target = dir.resolve("keep.nq")
+    Files.writeString(target, "<urn:old> <urn:p> <urn:o> .\n")
+    val before = Files.readAllBytes(target).toSeq
+    val failing = spark.range(0, 100, 1, 4).select(
+      when(col("id") === 77, raise_error(lit("planted failure")))
+        .otherwise(concat(lit("<urn:s"), col("id").cast("string"),
+          lit("> <urn:p> <urn:o> ."))).as("line"))
+    val ex = intercept[Exception] {
+      Integrate.writeSingleFile(failing, target, gzip = false)
+    }
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("planted failure")))
+    assert(Files.readAllBytes(target).toSeq === before)
+    assert(names(dir) === Seq("keep.nq"))
   }
 }
