@@ -306,19 +306,6 @@ object Materializer {
         : WriteSupport[InternalRow] = new ParquetWriteSupport
   }
 
-  /** Split output: one independent sink per rule group / provenance
-    * cluster (the reference clusters statements by source file and opens
-    * one sink per cluster — SparqlIntegrateCmdImpls.java:382-455). Each
-    * group gets its own resumable bucketed write under `outDir/<name>/`,
-    * so groups commit and resume independently.
-    */
-  def writeSplit(groups: Map[String, DataFrame], outDir: String,
-      nBuckets: Int = 64, resume: Boolean = false): Unit =
-    groups.foreach { case (name, df) =>
-      require(name.matches("[A-Za-z0-9_.-]+"), s"unsafe split name: $name")
-      write(df, s"$outDir/$name", nBuckets, resume)
-    }
-
   /** Point lookup of ONE named graph in a materialized store: the bucket
     * predicate is built from the same pmod(xxhash64) expression over a
     * LITERAL, so Catalyst constant-folds it and the parquet scan prunes

@@ -707,7 +707,10 @@ object AlgebraSuite {
           |        BIND(STR(?c_mktsegment) AS ?seg)
           |        FILTER(?c_mktsegment != "BUILDING") }
           |""".stripMargin
-      graft.pipeline.Script.runConstructSequence(customer(s, dir), seq)
+      val c = customer(s, dir)
+      graft.rules.ConstructParser.parseScript(seq)
+        .collect { case graft.rules.ConstructParser.QueryStmt(q) => q.run(c) }
+        .reduce(_ unionByName _)
     }),
     "sparql_fns" -> ((s, dir) =>
       // SPARQL 1.1 scalar battery (SURVEY §2.8: CONCAT/STR/STRLEN/UCASE/
@@ -763,8 +766,8 @@ object AlgebraSuite {
           |  BIND(IRI(CONCAT("http://ex.org/c/", STR(?c_custkey))) AS ?c)
           |  BIND(STR(?c_name) AS ?name)
           |}""".stripMargin
-      graft.rules.RuleCompiler.compile(customer(s, dir),
-        graft.rules.ConstructParser.parse(q, Map("TARGET_GRAPH" -> "urn:graft:out")))
+      graft.rules.ConstructParser.parseConstruct(graft.rules.ConstructParser
+        .envSubst(q, Map("TARGET_GRAPH" -> "urn:graft:out"))).run(customer(s, dir))
     }),
     "rdf_trig_scan" -> ((s, dir) => {
       val path = sys.props("java.io.tmpdir") +

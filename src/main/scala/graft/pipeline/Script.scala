@@ -16,17 +16,6 @@ import graft.Checkpoints.TruncateOps
   */
 object Script {
 
-  /** Run a CONSTRUCT statement-sequence TEXT over one binding stream and
-    * union the statements' outputs — the reference's `integrate` shape:
-    * every CONSTRUCT's triples stream to the same sink in order
-    * (SparqlIntegrateCmdImpls.java:337-345,865-884), prefixes carrying
-    * over between statements.
-    */
-  def runConstructSequence(bindings: DataFrame, text: String): DataFrame =
-    graft.rules.ConstructParser.parseSequence(text)
-      .map(rules => graft.rules.RuleCompiler.compile(bindings, rules))
-      .reduce(_ unionByName _)
-
   /** Result of a whole-script run: the final dataset state and the last
     * query statement's output (if the script had one).
     */

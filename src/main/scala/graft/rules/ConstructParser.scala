@@ -12,13 +12,16 @@ import graft.Checkpoints.TruncateOps
   * 207,337-345); this makes the rule layer driveable by query text
   * instead of hand-built Scala.
   *
-  * TWO WHERE modes, chosen by the query text itself:
+  * ONE WHERE compiler (`P.compileGroupN`) with two seeds, chosen by the
+  * query text itself:
   *
-  * 1. '''Binding-stream mode''' (`sbs map` semantics, SbsCmdImpls.java:
-  *    204-228): a WHERE containing only `BIND`/`FILTER` runs against an
-  *    incoming binding stream (a DataFrame, one var per column) that
-  *    REPLACES the query's pattern.
-  * 2. '''BGP mode''' (the reference's normal `integrate` queries,
+  * 1. '''Input-seeded''' (`sbs map` semantics, SbsCmdImpls.java:
+  *    204-228): a WHERE with no triple pattern, VALUES block or subquery
+  *    extends the incoming frame — a binding stream (one var per column)
+  *    or, in a dataset context, the unit solution. Each BIND becomes a
+  *    column at its position and the FILTERs apply at group end (§17.2),
+  *    as in any group.
+  * 2. '''Quad-seeded''' (the reference's normal `integrate` queries,
   *    SparqlIntegrateCmdImpls.java:337-345; algebra at :673-677): a WHERE
   *    containing triple patterns matches them against the input
   *    triple/quad table via [[graft.ops.Bgp]] — conjunction = equi-join on
@@ -28,6 +31,9 @@ import graft.Checkpoints.TruncateOps
   *    N-Triples term strings; BIND/FILTER compose on top. Style note:
   *    BIND/FILTER referencing a pattern variable must appear after the
   *    patterns that bind it (standard SPARQL text order).
+  *
+  * Either way a bound variable reads as its own column, with the kind
+  * (term, numeric, xsd:integer) its binder recorded.
   *
   * A template triple with any unbound (NULL) term is suppressed, per
   * SPARQL CONSTRUCT semantics (the compiled [[RuleCompiler]] already
@@ -63,19 +69,28 @@ object ConstructParser {
     * Combinators build a fresh E, so they drop `int`.
     */
   private final case class E(c: Column, term: Boolean, num: Boolean = false,
+      int: Boolean = false) {
+    def kind: Kind = Kind(term, num, int)
+  }
+
+  /** What a bound variable holds: [[E]]'s flags without the expression
+    * (a bound var reads as its own column).
+    */
+  private final case class Kind(term: Boolean, num: Boolean = false,
       int: Boolean = false)
 
-  /** One parsed CONSTRUCT statement. `where` is Some(compiler) in BGP
-    * mode (input = a triple/quad DataFrame with columns subj/pred/obj
-    * [/graph]); None in binding-stream mode (input = the binding stream).
-    * `needsRowId` = the templates mint fresh blank nodes (`_:label`), one
-    * per solution row (SPARQL §16.2.1): a hidden per-row id column is
-    * added BEFORE template evaluation so every template triple of one
-    * solution shares the same fresh node.
+  /** One parsed CONSTRUCT statement. `where` binds the input frame: the
+    * quad table (columns subj/pred/obj[/graph]) when the WHERE has a
+    * triple pattern, VALUES block or subquery, else the binding stream
+    * it extends; `rules` holds the one rule whose templates read the
+    * bound columns. `needsRowId` = the templates mint fresh blank nodes
+    * (`_:label`), one per solution row (SPARQL §16.2.1): a hidden per-row
+    * id column is added BEFORE template evaluation so every template
+    * triple of one solution shares the same fresh node.
     */
   final case class ParsedConstruct(
       rules: Seq[Rule],
-      where: Option[DataFrame => DataFrame],
+      where: DataFrame => DataFrame,
       needsRowId: Boolean = false,
       /** Does `run`'s input frame act as the QUAD DATASET?
         * False = the WHERE reads no quads (`P.readsQuads`: binding-
@@ -86,8 +101,7 @@ object ConstructParser {
         * template; an empty dataset would wrongly kill it).
         */
       usesQuads: Boolean = true) {
-    def run(input: DataFrame): DataFrame =
-      applyTo(where.map(_(input)).getOrElse(input))
+    def run(input: DataFrame): DataFrame = applyTo(where(input))
 
     /** Apply row-id prep + templates to an ALREADY-bound frame. */
     private[rules] def applyTo(bound: DataFrame): DataFrame = {
@@ -363,8 +377,7 @@ object ConstructParser {
     // pattern-less WHERE = the unit solution (see ParsedConstruct
     // .usesQuads), not one binding per quad of the dataset
     val in = if (del.usesQuads) dataset else unitFrame(dataset.sparkSession)
-    val bound = del.where.map(_(in)).getOrElse(in)
-      .truncateLineage(false)
+    val bound = del.where(in).truncateLineage(false)
     (del.applyTo(bound), ins.applyTo(bound))
   }
 
@@ -477,16 +490,6 @@ object ConstructParser {
     */
   def parseDescribe(text: String): ParsedSelect = new P(text).describeQuery()
 
-  /** Binding-stream-mode parse (legacy API): fails loudly on a BGP WHERE
-    * (those need the quad-table input that [[ParsedConstruct.run]] takes).
-    */
-  def parse(text: String): Seq[Rule] = {
-    val q = parseConstruct(text)
-    require(q.where.isEmpty,
-      "query has triple patterns in WHERE: use parseConstruct(...).run(quads)")
-    q.rules
-  }
-
   /** `<env:VAR>` IRI substitution (SparqlIntegrateCmdImpls.java:196-207;
     * NodeEnvsubst in SparqlStmtProcessor.java:48): every `<env:NAME>` IRI
     * in the statement text is replaced from the given map BEFORE parsing
@@ -502,30 +505,6 @@ object ConstructParser {
       java.util.regex.Matcher.quoteReplacement("<" + env.getOrElse(m.group(1),
         throw new IllegalArgumentException(
           s"env substitution: ${m.group(1)} is not defined")) + ">"))
-
-  def parse(text: String, env: Map[String, String]): Seq[Rule] =
-    parse(envSubst(text, env))
-
-  /** Parse a statement SEQUENCE (the reference's `.sparql` file model:
-    * several CONSTRUCT statements in order, PREFIX declarations carrying
-    * over across statements — SparqlScriptProcessor behavior, tested by
-    * the reference's namespace-test.sparql).
-    */
-  def parseConstructSequence(text: String): Seq[ParsedConstruct] = {
-    val p = new P(text)
-    val out = scala.collection.mutable.ArrayBuffer[ParsedConstruct]()
-    while (p.hasMore) { p.newStatement(); out += p.query(expectEnd = false) }
-    require(out.nonEmpty, "empty statement sequence")
-    out.toSeq
-  }
-
-  /** Legacy binding-stream-mode sequence parse. */
-  def parseSequence(text: String): Seq[Seq[Rule]] =
-    parseConstructSequence(text).map { q =>
-      require(q.where.isEmpty,
-        "query has triple patterns in WHERE: use parseConstructSequence")
-      q.rules
-    }
 
   // ------------------------------------------------------- script grammar
 
@@ -697,21 +676,14 @@ object ConstructParser {
     * call site's scope.
     */
   private final class Scope(var ds: DatasetClause = DatasetClause(Nil, Nil)) {
-    // BIND targets and their expressions, read in binding-stream mode
-    val binds = scala.collection.mutable.LinkedHashMap[String, E]()
     // pattern mode: flips when the first triple pattern, VALUES block
-    // or subquery is parsed; bgpVarTerm then maps every WHERE-bound
-    // variable to "holds a term?"
+    // or subquery is parsed; the WHERE then runs over the quad table,
+    // otherwise over its input frame
     var sawPattern = false
-    val bgpVarTerm = scala.collection.mutable.LinkedHashMap[String, Boolean]()
-    // vars known to hold xsd:integer VALUES (subselect COUNT
-    // projections) — templates serialize them as typed literals
-    val intVars = scala.collection.mutable.HashSet[String]()
-    // object vars bound by property functions before pattern mode
-    // flips, and the subset whose values are TERMS (csv:parse rows,
-    // xml:unnest matches), not raw strings like json:unnest elements
-    val propFnVars = scala.collection.mutable.ArrayBuffer[String]()
-    val propFnTermVars = scala.collection.mutable.HashSet[String]()
+    // every WHERE-bound variable (pattern, BIND, VALUES, subquery
+    // projection, property function, GROUP BY AS) and the kind of value
+    // it holds; the binder feeds it in both modes
+    val vars = scala.collection.mutable.LinkedHashMap[String, Kind]()
     // statically traceable lambdas: BIND target var → the full lambda
     // literal term (see the BIND parse)
     val lambdaBinds = scala.collection.mutable.HashMap[String, String]()
@@ -813,18 +785,13 @@ object ConstructParser {
     }
 
     /** Register a property-function output var (csv:parse/xml:unnest/
-      * url:text/json:unnest): tracked for the BGP-mode flip, term-ness
-      * recorded for expression resolution and projections.
+      * url:text/json:unnest) with its term-ness.
       */
     private def registerPfVar(v: String, isTerm: Boolean,
-        rebind: Boolean = true): Unit = {
-      scope.propFnVars += v
-      if (isTerm) scope.propFnTermVars += v
+        rebind: Boolean = true): Unit =
       // rebind = the PF OVERWRITES the var's value (its term-ness must
       // follow); zip-capable index vars join instead, keeping theirs
-      if (scope.sawPattern && (rebind || !scope.bgpVarTerm.contains(v)))
-        scope.bgpVarTerm(v) = isTerm
-    }
+      if (rebind || !scope.vars.contains(v)) scope.vars(v) = Kind(isTerm)
 
     /** Lookahead: does the `{` at the cursor open a `{ SELECT … }` subquery? */
     private def subselectAhead: Boolean = {
@@ -883,7 +850,7 @@ object ConstructParser {
       */
     private def whereClause(expectEnd: Boolean, form: String): Seq[WhereEl] = {
       val perRecord = stmt.perRecordGraph
-      if (perRecord) { skipWs(); scope.bgpVarTerm("#g") = true }
+      if (perRecord) { skipWs(); scope.vars("#g") = Kind(term = true) }
       else scope.ds = datasetClause()
       if (!kw("WHERE")) { // keyword is optional before a bare group
         skipWs()
@@ -906,62 +873,36 @@ object ConstructParser {
     }
 
     /** Resolve templates + WHERE elements into a [[ParsedConstruct]]
-      * (shared by CONSTRUCT queries and INSERT/DELETE … WHERE updates).
-      * In binding-stream mode the templates apply to the input directly,
-      * their BIND vars inline through `scope.binds` and the FILTERs forming
-      * the rule's `where`; otherwise [[compileWhere]] binds the input
-      * first.
+      * (shared by CONSTRUCT queries and INSERT/DELETE … WHERE updates):
+      * [[compileWhere]] binds the input, then the templates read the
+      * bound columns.
       */
     private def finishConstruct(templates: Seq[T], els: Seq[WhereEl],
         ds: DatasetClause = NoDataset): ParsedConstruct = {
       val mintsBnodes = templates.exists { case (a, b, c, g) =>
         Seq(a, b, c, g).exists(_.isInstanceOf[BnodeT])
       }
-      val stream = bindingStream(els)
-      val where =
-        if (stream) els.collect { case f: FilterE => f.c }
-          .reduceOption(_ && _).getOrElse(lit(true))
-        else lit(true)
-      val rules = Seq(Rule("construct", where,
+      val rules = Seq(Rule("construct", lit(true),
         templates.map { case (st, pt, ot, gt) =>
           TripleTemplate(termOf(st), termOf(pt), termOf(ot), termOf(gt))
         }))
-      ParsedConstruct(rules,
-        if (stream) None else Some(compileWhere(els, ds).andThen(_._1)),
+      ParsedConstruct(rules, compileWhere(els, ds).andThen(_._1),
         needsRowId = mintsBnodes, usesQuads = readsQuads(els))
     }
 
-    /** Binding-stream mode: no triple pattern and no property function,
-      * so the WHERE may only hold BIND and FILTER over the input stream
-      * (checked here, at parse time).
-      */
-    private def bindingStream(els: Seq[WhereEl]): Boolean = {
-      val stream = !scope.sawPattern && !containsPropFn(els)
-      if (stream) els.foreach {
-        case _: BindE | _: FilterE => ()
-        case other => fail(s"${elName(other)} requires triple patterns " +
-          "in WHERE (binding-stream mode allows only BIND and FILTER)")
-      }
-      stream
-    }
-
-    /** The one WHERE dispatch of CONSTRUCT, SELECT and ASK, chosen at
-      * parse time: BGP mode compiles the group against the quad table; a
-      * pattern-free group with a property function is a pipeline over the
-      * input stream; binding-stream mode folds its BINDs and FILTERs in
-      * order over the input. Yields the binding frame and its
-      * maybe-unbound vars ([[compileGroupN]]).
+    /** The one WHERE compiler of CONSTRUCT, SELECT and ASK: a group with
+      * a triple pattern, VALUES block or subquery matches against the
+      * quad table; any other group is seeded with the input frame (a
+      * binding stream, or the unit solution in a dataset context), its
+      * BINDs becoming columns and its FILTERs applying at group end.
+      * Yields the binding frame and its maybe-unbound vars
+      * ([[compileGroupN]]).
       */
     private def compileWhere(els: Seq[WhereEl],
-        ds: DatasetClause): DataFrame => (DataFrame, Set[String]) =
-      if (scope.sawPattern) compileGroupN(els, _, ds)
-      else if (!bindingStream(els)) compileGroupN(els, _, ds, seedWithInput = true)
-      else input => els.foldLeft((input, Set.empty[String])) {
-        case ((df, mn), BindE(v, e)) =>
-          (df.withColumn(v, e.c), if (bindMaybeNull(e.c, mn)) mn + v else mn)
-        case ((df, mn), f: FilterE) => (df.filter(f.c), mn)
-        case (acc, _) => acc // rejected by bindingStream
-      }
+        ds: DatasetClause): DataFrame => (DataFrame, Set[String]) = {
+      val seedWithInput = !scope.sawPattern
+      compileGroupN(els, _, ds, seedWithInput)
+    }
 
     // --------------------------------------------------------- script
 
@@ -1319,16 +1260,13 @@ object ConstructParser {
       val els = groupBlock(graphCtx = subGraphCtx)
       skipWs()
       // projection expressions were parsed BEFORE the WHERE, when no
-      // pattern variable's term-ness was known (everything defaulted to
-      // raw) — re-parse the projection span now that bgpVarTerm is final,
-      // so SUM(?v)/MIN(?v) over pattern-bound TERM vars compile with
-      // term-aware numeric/ordering semantics
-      if (scope.sawPattern) {
-        val save = i
-        i = projStart
-        items = parseItems()
-        i = save
-      }
+      // variable's kind was known — re-parse the projection span now that
+      // the var map is final, so SUM(?v)/MIN(?v) over TERM vars compile
+      // with term-aware numeric/ordering semantics
+      val save = i
+      i = projStart
+      items = parseItems()
+      i = save
       // GROUP BY keys: `?v`, `(expr)`, or `(expr AS ?v)` (SPARQL §11.2 —
       // ARQ accepts expression keys; an AS-named key is projectable)
       val groupBys = scala.collection.mutable.ArrayBuffer[(String, Option[Column])]()
@@ -1346,8 +1284,7 @@ object ConstructParser {
               skipWs()
               val v = varName()
               skipWs(); expect(')')
-              if (scope.sawPattern) scope.bgpVarTerm(v) = e.term
-              else scope.binds(v) = e
+              scope.vars(v) = e.kind
               groupBys += ((v, Some(e.c)))
             } else {
               expect(')')
@@ -1395,8 +1332,7 @@ object ConstructParser {
           // (before other terms, which sort lexically) — consistent with
           // MIN/MAX and SPARQL §15.1's numeric ordering
           def varKey(v: String): Column =
-            if (scope.sawPattern && scope.bgpVarTerm.getOrElse(v, false))
-              termOrdKey(col(v))
+            if (scope.vars.get(v).exists(_.term)) termOrdKey(col(v))
             else col(v)
           def orderKey(): (Column, Boolean) = {
             val (e, isAgg) = aggregating(expr())
@@ -1455,11 +1391,11 @@ object ConstructParser {
       def exposeVar(v: String): Unit = {
         val hasStar = items.exists { case Star => true; case _ => false }
         if (hasStar) {
-          // `SELECT *` expands from bgpVarTerm below — make sure the var
+          // `SELECT *` expands from the var map below — make sure the var
           // is in it (it was bound in the OUTER scope, so the subselect's
           // own var map doesn't have it yet). Appending PlainVar instead
           // would make the projection an illegal Star/named mix.
-          if (!scope.bgpVarTerm.contains(v)) scope.bgpVarTerm(v) = true
+          if (!scope.vars.contains(v)) scope.vars(v) = Kind(term = true)
         } else if (!items.exists {
           case PlainVar(x) => x == v
           case Derived(x, _, _) => x == v
@@ -1518,17 +1454,18 @@ object ConstructParser {
       val bgp = scope.sawPattern
       val where = compileWhere(els, ds)
       // `SELECT *` inside a subquery: expand to this query's WHERE-bound
-      // vars (SPARQL §18.2.4.4 — in BGP mode that's exactly bgpVarTerm,
-      // in insertion order). Binding-stream mode has no static var list,
-      // so '*' stays opaque there and subSelectEl keeps rejecting it.
-      val starVars: Seq[(String, Boolean)] =
-        if (bgp) scope.bgpVarTerm.toSeq else Nil
+      // vars (SPARQL §18.2.4.4 — in BGP mode that's exactly the var map,
+      // in insertion order). An input-seeded WHERE also sees the input's
+      // columns, which no static list holds, so '*' stays opaque there
+      // and subSelectEl keeps rejecting it.
+      val starVars: Seq[(String, Kind)] = if (bgp) scope.vars.toSeq else Nil
       val proj = items.toSeq.flatMap {
-        case PlainVar(v) => Seq(ProjVar(v,
-          scope.bgpVarTerm.getOrElse(v, true), scope.intVars(v)))
+        case PlainVar(v) =>
+          val k = scope.vars.get(v)
+          Seq(ProjVar(v, k.forall(_.term), k.exists(_.int)))
         case Derived(v, e, _) => Seq(ProjVar(v, e.term, e.int))
         case Star =>
-          if (bgp) starVars.map { case (v, t) => ProjVar(v, t, int = false) }
+          if (bgp) starVars.map { case (v, k) => ProjVar(v, k.term, k.int) }
           else Seq(ProjVar("*", term = false, int = false))
       }
       val run = { (input: DataFrame) =>
@@ -1930,6 +1867,15 @@ object ConstructParser {
       PathOps.NegatedSet(fwd.toSeq, inv.toSeq)
     }
 
+    /** A variable as an expression: its column, with the kind its binder
+      * recorded; a var nothing binds is an input column (terms under
+      * [[parseSelectTerms]]) or, in pattern mode, unbound.
+      */
+    private def varE(v: String): E = scope.vars.get(v) match {
+      case Some(k) => E(col(v), k.term, k.num, k.int)
+      case None => E(col(v), term = termInputVars && !scope.sawPattern)
+    }
+
     /** Template token → final term Column. */
     private def termOf(t: Tok): Column = t match {
       case IriT(iri) => lit("<" + iri + ">")
@@ -1939,31 +1885,23 @@ object ConstructParser {
       case NumT(lex) =>
         lit("\"" + lex + "\"^^<http://www.w3.org/2001/XMLSchema#integer>")
       case VarT(v) =>
-        if (scope.sawPattern) scope.bgpVarTerm.get(v) match {
-          case Some(true) => col(v) // pattern var: already a term
-          case Some(false) =>
-            if (scope.intVars(v))
-              // subselect COUNT projection: typed literal, as the
-              // SPARQL value semantics (and Jena's serializer) demand
-              concat(lit("\""), col(v).cast("string"),
-                lit("\"^^<http://www.w3.org/2001/XMLSchema#integer>"))
-            else RdfTerms.strLit(col(v).cast("string"))
-          case None =>
-            // SPARQL §16.2: a template triple with an unbound variable
-            // is suppressed — a var no pattern/BIND ever binds means the
-            // triple NEVER emits. The reference's own sportal queries
-            // ship this shape (qe2.rq templates ?c; its subselect only
-            // projects ?x ?p), so run it spec-true but say so loudly.
-            System.err.println(s"[sparql] template variable ?$v is bound " +
-              "by nothing in WHERE — its template triples are suppressed " +
-              "(SPARQL CONSTRUCT semantics)")
-            lit(null).cast("string")
-        }
-        else if (scope.propFnTermVars(v)) col(v) // pf output: already a term
-        else scope.binds.get(v) match {
-          case Some(E(c, true, _, _)) => c
-          case Some(E(c, false, _, _)) => RdfTerms.strLit(c.cast("string"))
-          case None => RdfTerms.strLit(col(v).cast("string"))
+        if (scope.sawPattern && !scope.vars.contains(v)) {
+          // SPARQL §16.2: a template triple with an unbound variable
+          // is suppressed — a var no pattern/BIND ever binds means the
+          // triple NEVER emits. The reference's own sportal queries
+          // ship this shape (qe2.rq templates ?c; its subselect only
+          // projects ?x ?p), so run it spec-true but say so loudly.
+          System.err.println(s"[sparql] template variable ?$v is bound " +
+            "by nothing in WHERE — its template triples are suppressed " +
+            "(SPARQL CONSTRUCT semantics)")
+          lit(null).cast("string")
+        } else varE(v) match {
+          case e if e.int =>
+            // a COUNT value: typed literal, as the SPARQL value
+            // semantics (and Jena's serializer) demand
+            concat(lit("\""), e.c.cast("string"),
+              lit("\"^^<http://www.w3.org/2001/XMLSchema#integer>"))
+          case e => termCol(e)
         }
       case PathT(_) => fail("property path in template position")
       case ListT(_) => fail(
@@ -1991,7 +1929,7 @@ object ConstructParser {
     private case class GroupE(els: Seq[WhereEl]) extends WhereEl
     private case class UnionE(groups: Seq[Seq[WhereEl]]) extends WhereEl
     /** `termSnap`: parse-time snapshot of each preceding var's term-ness
-      * (bgpVarTerm mutates across statements, so the pattern-free
+      * (the var map mutates across statements, so the pattern-free
       * OPTIONAL-BIND compile path cannot read it lazily at run time).
       */
     private case class OptionalE(els: Seq[WhereEl],
@@ -2144,24 +2082,10 @@ object ConstructParser {
         lateralExpose = lateralExpose) finally scope = outer
       require(!q.proj.exists(_.v == "*"),
         "SELECT * subqueries are not supported: project explicit variables")
-      enterPatternMode()
-      q.proj.foreach { p =>
-        scope.bgpVarTerm(p.v) = p.term
-        if (p.int) scope.intVars += p.v
-      }
+      scope.sawPattern = true
+      q.proj.foreach(p => scope.vars(p.v) = Kind(p.term, int = p.int))
       SubSelectE(q)
     }
-
-    /** Flip the scope into pattern mode; BINDs and property-function vars
-      * parsed before the flip become pattern vars.
-      */
-    private def enterPatternMode(): Unit =
-      if (!scope.sawPattern) {
-        scope.sawPattern = true
-        scope.binds.foreach { case (v, e) => scope.bgpVarTerm(v) = e.term }
-        scope.propFnVars.foreach(v =>
-          scope.bgpVarTerm(v) = scope.propFnTermVars(v))
-      }
 
     private def groupBlock(graphCtx: Option[Tok]): Seq[WhereEl] = {
       expect('{')
@@ -2186,8 +2110,7 @@ object ConstructParser {
               out += MapComputeE(v, mapId, keyVar, body, stmt.mapMemos)
             case None => out += BindE(v, e)
           }
-          if (scope.sawPattern) scope.bgpVarTerm(v) = e.term
-          else scope.binds(v) = e
+          scope.vars(v) = e.kind
           // a BIND of a constant lambda literal is statically traceable
           // in BOTH modes — fn.call resolves the var through this map
           org.apache.spark.sql.graft.bridge.staticStringLiteral(e.c)
@@ -2246,8 +2169,8 @@ object ConstructParser {
             while (peek != '}') { rows += Seq(cell()); skipWs() }
             expect('}')
           }
-          enterPatternMode()
-          vars.foreach(v => scope.bgpVarTerm(v) = true)
+          scope.sawPattern = true
+          vars.foreach(v => scope.vars(v) = Kind(term = true))
           out += ValuesE(vars.toSeq, rows.toSeq)
         } else if (kw("OPTIONAL")) {
           skipWs()
@@ -2255,7 +2178,7 @@ object ConstructParser {
           // re-registers its target var (term-ness of the EXPR), which
           // must not mask the LEFT binding's term-ness
           out += {
-            val termSnap = scope.bgpVarTerm.toMap
+            val termSnap = scope.vars.view.mapValues(_.term).toMap
             OptionalE(groupBlock(graphCtx), termSnap)
           }
         } else if (kw("LATERAL")) {
@@ -2277,7 +2200,7 @@ object ConstructParser {
           skipWs()
           if (selectAhead) {
             out += subSelectEl(graphCtx,
-              lateralExpose = scope.bgpVarTerm.keySet.toSet)
+              lateralExpose = scope.vars.keySet.toSet)
             skipWs(); expect('}')
           } else {
             i = save
@@ -2316,7 +2239,7 @@ object ConstructParser {
             // BIND it to the record graph and let the enclosing
             // compat join key on it if the var appears elsewhere
             // (VALUES, other patterns, a second GRAPH ?v group).
-            g match { case VarT(v) => scope.bgpVarTerm(v) = true; case _ => () }
+            g match { case VarT(v) => scope.vars(v) = Kind(term = true); case _ => () }
             val inner = groupBlock(Some(VarT("#g")))
             g match {
               case VarT(v) if boundVars(inner)(v) =>
@@ -2337,7 +2260,7 @@ object ConstructParser {
                 fail(s"GRAPH operand must be a variable or IRI, got $other")
             }
           } else {
-            g match { case VarT(v) => scope.bgpVarTerm(v) = true; case _ => () }
+            g match { case VarT(v) => scope.vars(v) = Kind(term = true); case _ => () }
             out += GroupE(groupBlock(Some(g)))
           }
         } else if (kw("SERVICE")) {
@@ -2464,10 +2387,8 @@ object ConstructParser {
               }
               val subj = subjTok match {
                 case VarT(sv) =>
-                  val sTerm =
-                    if (scope.sawPattern) scope.bgpVarTerm.getOrElse(sv, true)
-                    else scope.binds.get(sv).exists(_.term)
-                  Right((sv, sTerm))
+                  Right((sv,
+                    scope.vars.get(sv).fold(scope.sawPattern)(_.term)))
                 case StrT(t) => Left(t)
                 case TypedStrT(t, _) => Left(t)
                 case other => fail(
@@ -2486,10 +2407,10 @@ object ConstructParser {
                 "json:unnest)")
             case (a, b, c) =>
               // a real triple pattern flips the statement into BGP mode
-              enterPatternMode()
+              scope.sawPattern = true
               out += TpE(graphCtx, a, b, c)
               Seq(a, b, c).foreach {
-                case VarT(v) => scope.bgpVarTerm(v) = true
+                case VarT(v) => scope.vars(v) = Kind(term = true)
                 case _ => ()
               }
           }
@@ -2518,28 +2439,6 @@ object ConstructParser {
         i = endPos
       }
       out.toSeq
-    }
-
-    /** Human-readable name of a WHERE element for error messages. */
-    private def elName(e: WhereEl): String = e match {
-      case _: TpE => "a triple pattern"
-      case _: GroupE => "a group pattern"
-      case _: UnionE => "UNION"
-      case _: OptionalE => "OPTIONAL"
-      case _: MinusE => "MINUS"
-      case _: ExistsE => "FILTER [NOT] EXISTS"
-      case _: ValuesE => "VALUES"
-      case _: SubSelectE => "a subquery"
-      case _: PropFnE => "a property function"
-      case _: BindE => "BIND"
-      case _: FilterE => "FILTER"
-      case _: ServiceE => "SERVICE"
-      case _: ServiceVarE => "SERVICE ?var"
-      case _: FsFindE => "fs:find"
-      case _: CsvParseE => "csv:parse"
-      case _: XmlUnnestE => "xml:unnest"
-      case _: UrlTextE => "url:text"
-      case _: MapComputeE => "map.computeIfAbsent"
     }
 
     /** Does a query with this WHERE tree take the quad table as input?
@@ -2614,8 +2513,8 @@ object ConstructParser {
     private def compileGroupN(els: Seq[WhereEl], quads: DataFrame,
         ds: DatasetClause = NoDataset,
         seedWithInput: Boolean = false): (DataFrame, Set[String]) = {
-      // property-function-only groups (no triple pattern) run against the
-      // INPUT frame directly — the sbs pipeline shape
+      // a group with no triple pattern extends the INPUT frame directly —
+      // the sbs pipeline shape
       var acc: DataFrame = if (seedWithInput) quads else null
       // vars that may be NULL (unbound) in acc — every join below routes
       // through the §8.3 compatibility variants iff a SHARED var is in
@@ -3527,15 +3426,7 @@ object ConstructParser {
           // macro-body expansion: parameters substitute the CALLER's
           // argument expressions (term flags included)
           if (macroParams.contains(v)) macroParams(v)
-          else if (scope.sawPattern)
-            scope.bgpVarTerm.get(v).map(t => E(col(v), t))
-              .getOrElse(E(col(v), term = false))
-          // binding-stream mode: property-function outputs that carry
-          // TERMS (csv:parse rows, xml:unnest matches, url:text bodies)
-          // must resolve as terms or json:path would see the raw
-          // escaped term text
-          else if (scope.propFnTermVars(v)) E(col(v), term = true)
-          else scope.binds.getOrElse(v, E(col(v), term = termInputVars))
+          else varE(v)
         case '"' | '\'' =>
           val body = stringLit()
           // typed-literal constants in expression position — the docs'
@@ -4022,7 +3913,7 @@ object ConstructParser {
                 s"got ${plist.size}")
             val kv = keyVar.stripPrefix("?")
             val bodyE = lambdaBody(body, Map(plist.head ->
-              E(col(kv), term = scope.bgpVarTerm.getOrElse(kv, true))))
+              E(col(kv), term = scope.vars.get(kv).forall(_.term))))
             val placeholder = E(bodyE.c, bodyE.term, bodyE.num)
             pendingMapCompute = Some((spans(0).trim, kv, bodyE, placeholder))
             placeholder // BIND rewrites; any other consumer fails

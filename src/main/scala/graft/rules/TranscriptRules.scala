@@ -1,14 +1,16 @@
 package graft.rules
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.RdfTerms._
 
 /** The built-in CONSTRUCT rule set over the transcript table — the engine's
   * flagship workload (equivalent of the reference's `ngs map --sparql` /
   * `integrate` CONSTRUCT sequences run per named graph, here per
-  * conversation; NgsCmdImpls.java:191-216).
+  * conversation; NgsCmdImpls.java:191-216). The rules are SPARQL
+  * CONSTRUCT text ([[constructText]]) compiled by [[ConstructParser]], the
+  * reference's query-text front door (SparqlIntegrateCmdImpls.java:
+  * 337-345).
   *
   * Stable turn ordering is provided by Window.partitionBy(conv_id)
   * .orderBy(turn_idx) — the `next`-turn rule depends on it (per-turn text
@@ -17,57 +19,17 @@ import graft.functions.RdfTerms._
   */
 object TranscriptRules {
 
-  val NS = "http://graft.io/"
-
-  /** Augment transcripts with IRIs + the lead() successor — the shared
-    * per-row binding environment all rules compile against. One window
-    * shuffle on conv_id; everything else is per-row.
+  /** The rules: [[constructText]] over [[bindingStream]]. One window
+    * shuffle on conv_id; the BINDs are columns and the templates one
+    * explode, everything else per-row.
     */
-  def withIris(transcripts: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
-    transcripts
-      .withColumn("turn_iri",
-        concat(lit("<" + NS + "conv/"), col("conv_id"), lit("/turn/"),
-          col("turn_idx").cast("string"), lit(">")))
-      .withColumn("conv_iri",
-        concat(lit("<" + NS + "conv/"), col("conv_id"), lit(">")))
-      .withColumn("g",
-        concat(lit("<" + NS + "g/"), col("conv_id"), lit(">")))
-      .withColumn("next_iri", lead(col("turn_idx"), 1).over(w))
-  }
-
-  /** The built-in rule set (compiled against [[withIris]] columns). */
-  def baseRules: Seq[Rule] = {
-    def t(p: String, o: org.apache.spark.sql.Column) = TripleTemplate(
-      col("turn_iri"), lit("<" + NS + "p/" + p + ">"), o, col("g"))
-
-    Seq(
-      Rule("turn-core", lit(true), Seq(
-        TripleTemplate(col("turn_iri"), iri(RdfType),
-          lit("<" + NS + "Turn>"), col("g")),
-        t("role", strLit(col("role"))),
-        t("text", strLit(col("text"))),
-        t("ts", longLit(unix_micros(col("ts").cast("timestamp")))),
-        t("conv", col("conv_iri")),
-        TripleTemplate(col("conv_iri"), lit("<" + NS + "p/hasTurn>"),
-          col("turn_iri"), col("g")))),
-      Rule("turn-tool", col("tool").isNotNull, Seq(
-        t("tool", strLit(col("tool"))))),
-      Rule("turn-next", col("next_iri").isNotNull, Seq(
-        t("next", concat(lit("<" + NS + "conv/"), col("conv_id"),
-          lit("/turn/"), col("next_iri").cast("string"), lit(">")))))
-    )
-  }
-
   def triples(transcripts: DataFrame): DataFrame =
-    RuleCompiler.compile(withIris(transcripts), baseRules)
+    ConstructParser.parseConstruct(constructText).run(bindingStream(transcripts))
 
-  /** The SAME rule set as [[baseRules]], expressed as SPARQL CONSTRUCT
-    * text for [[ConstructParser]] — the reference's query-text front door
-    * (SparqlIntegrateCmdImpls.java:337-345). The WHERE pattern is replaced
-    * by the incoming binding stream ([[bindingStream]]), sbs-map style;
-    * tool/next triples are suppressed by unbound-term semantics (no
-    * FILTER needed).
+  /** The rule set as SPARQL CONSTRUCT text. The WHERE has no triple
+    * pattern, so it extends the incoming binding stream
+    * ([[bindingStream]]), sbs-map style; tool/next triples are suppressed
+    * by unbound-term semantics (no FILTER needed).
     */
   val constructText: String =
     """PREFIX rdf: <http://www.w3.org/1999/02/22-rdf-syntax-ns#>
@@ -96,7 +58,7 @@ object TranscriptRules {
 
   /** The binding stream [[constructText]] runs over: one row per turn,
     * epoch-micro timestamps, and the window-derived successor index (the
-    * stable-turn-order shuffle, same as [[withIris]]).
+    * stable-turn-order shuffle).
     */
   def bindingStream(transcripts: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
@@ -105,14 +67,6 @@ object TranscriptRules {
       unix_micros(col("ts").cast("timestamp")).as("ts_us"),
       lead(col("turn_idx"), 1).over(w).as("next_idx"))
   }
-
-  /** [[triples]] built from parsed CONSTRUCT text instead of hand-built
-    * rules — must produce the identical triple set (asserted in
-    * RulesSpec and by the construct_parse driver oracle).
-    */
-  def triplesFromText(transcripts: DataFrame): DataFrame =
-    RuleCompiler.compile(bindingStream(transcripts),
-      ConstructParser.parse(constructText))
 
   /** Oracle SQL (DuckDB) reproducing [[triples]] over the `transcripts`
     * CTE. NT escaping: our text has no backslash/quote/control chars by

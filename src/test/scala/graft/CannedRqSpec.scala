@@ -12,7 +12,7 @@ import graft.ops.CannedQueries
   * network SPARQL endpoints (scoped out with the other egress forms);
   * rename/tree/gtree run via documented variants (CannedQueries scaladoc).
   */
-class CannedRqSpec extends AnyFunSuite {
+class CannedRqSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -108,7 +108,7 @@ class CannedRqSpec extends AnyFunSuite {
       "substitution + file-SERVICE + INSERT...WHERE insert one typed triple") {
     // S = a self-referential N-Triples file: the dataset triple's subject
     // IS the file IRI, and the SERVICE reads the same file's own dataset
-    val dir = java.nio.file.Files.createTempDirectory("graft-envtest")
+    val dir = tmpDir("envtest")
     val f = dir.resolve("d.nt")
     val iri = "file://" + f
     java.nio.file.Files.writeString(f, s"<$iri> <urn:p> \"o\" .\n")

@@ -8,7 +8,7 @@ import graft.rules.ConstructParser
   * .sparql, io.sparql, namespace-test.sparql's prefix carry-over idea,
   * plus loud rejects for the documented out-of-scope corners.
   */
-class DocsExamplesSpec extends AnyFunSuite {
+class DocsExamplesSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import org.apache.spark.sql.Row
   import org.apache.spark.sql.types.StructType
@@ -34,7 +34,7 @@ class DocsExamplesSpec extends AnyFunSuite {
   }
 
   test("csv.sparql statement 1 verbatim: file IRI form, relative base") {
-    val base = java.nio.file.Files.createTempDirectory("graft_docs").toString
+    val base = tmpDir("docs").toString
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(base, "example-data"))
     java.nio.file.Files.writeString(
@@ -350,7 +350,7 @@ class DocsExamplesSpec extends AnyFunSuite {
   }
 
   test("url-local-file.sparql verbatim: url:text binds the file body") {
-    val base = java.nio.file.Files.createTempDirectory("graft_url").toString
+    val base = tmpDir("url").toString
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(base, "example-data"))
     java.nio.file.Files.writeString(

@@ -461,6 +461,34 @@ class FnSpec extends AnyFunSuite {
         .lastQuery.get.collect().map(_.toSeq.map(cell)).toSeq
       assert(got === want, q)
     }
+    // the same grammar over a binding stream: BINDs and GROUP BY keys are
+    // columns there too, so HAVING and ORDER BY read them after the
+    // aggregate, and a FILTER sees a BIND written after it
+    import spark.implicits._
+    val stream = Seq(("a", 1L), ("bb", 2L), ("ccc", 30L), ("dd", 9L))
+      .toDF("id", "v")
+    val keyed = "SELECT ?k (COUNT(*) AS ?n) WHERE { } " +
+      "GROUP BY (STRLEN(?id) AS ?k) HAVING (?k > 1)"
+    val streamCases = Seq[(String, Seq[Seq[Any]])](
+      keyed -> Seq(Seq(2L, 2L), Seq(3L, 1L)),
+      keyed + " ORDER BY DESC(?k)" -> Seq(Seq(3L, 1L), Seq(2L, 2L)),
+      "SELECT ?id ?x WHERE { FILTER(?x > 10) BIND(?v + 1 AS ?x) }" ->
+        Seq(Seq("ccc", 31.0)),
+      "SELECT ?id ?z WHERE { BIND(?v * 2 AS ?y) BIND(?y + 1 AS ?z) " +
+        "FILTER(?z > 5) } ORDER BY ?id" -> Seq(Seq("ccc", 61.0), Seq("dd", 19.0)))
+    streamCases.foreach { case (q, want) =>
+      val got = ConstructParser.parseSelect(q).run(stream).collect()
+        .map(_.toSeq).toSeq
+      if (q.contains("ORDER BY")) assert(got === want, q)
+      else assert(got.sortBy(_.toString) === want.sortBy(_.toString), q)
+    }
+    // a json:unnest element is a raw value even when the input columns are
+    // terms (it used to read as a term under parseSelectTerms, so this
+    // equality never held there)
+    val docs = Seq("""["a", 1]""").toDF("doc")
+    assert(ConstructParser.parseSelectTerms(
+      """SELECT ?x WHERE { ?doc json:unnest ?x FILTER(?x = "a") }""")
+      .run(docs).collect().map(_.getString(0)).toSeq === Seq("a"))
   }
 
   test("ROUND rounds halves toward positive infinity and keeps its type") {

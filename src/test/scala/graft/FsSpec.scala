@@ -9,7 +9,7 @@ import graft.rules.ConstructParser
   * fs-query-rdf-files.sparql, test4.sparql, workloads.sparql,
   * test.sparql; semantics documented in docs/examples/README.md:585-650).
   */
-class FsSpec extends AnyFunSuite {
+class FsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   import org.apache.spark.sql.Row
@@ -23,7 +23,7 @@ class FsSpec extends AnyFunSuite {
     * reference walk is recursive) and top-level {dcat.ttl, w1.json}.
     */
   private def withBase[A](f: String => A): A = {
-    val base = java.nio.file.Files.createTempDirectory("graft_fs").toString
+    val base = tmpDir("fs").toString
     def w(rel: String, body: String): Unit = {
       val p = java.nio.file.Paths.get(base, rel)
       java.nio.file.Files.createDirectories(p.getParent)

@@ -8,12 +8,12 @@ import graft.sources.{HdtIO, RdfIO}
   * routing. Byte-level interop with third-party HDT files cannot run in
   * this sandbox (no HDT library, no sample file) — documented in HdtIO.
   */
-class HdtSpec extends AnyFunSuite {
+class HdtSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory("graft-hdt")
+    tmpDir("hdt")
       .resolve(name).toString
 
   private def roundTrip(triples: Seq[(String, String, String)]): Set[(String, String, String)] = {

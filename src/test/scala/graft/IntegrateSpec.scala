@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * routing matrix (`rpt integrate` — SparqlIntegrateCmdImpls.java:163-345,
   * CmdSparqlIntegrateMain.java:30-240).
   */
-class IntegrateSpec extends AnyFunSuite {
+class IntegrateSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def res(name: String): String =
@@ -26,8 +26,6 @@ class IntegrateSpec extends AnyFunSuite {
     (code, o.toString("UTF-8"), e.toString("UTF-8"))
   }
 
-  private def tmpDir(): java.nio.file.Path =
-    Files.createTempDirectory("graft_integrate")
 
   private def withProp[A](key: String, value: String)(body: => A): A = {
     val old = sys.props.get(key)
@@ -65,7 +63,7 @@ class IntegrateSpec extends AnyFunSuite {
 
   test("example.sparql VERBATIM: the github URL remaps to a local fixture " +
       "via graft.fileAliases; CONSTRUCT quads land in -o file atomically") {
-    val dir = tmpDir()
+    val dir = tmpDir("integrate")
     val fixture = dir.resolve("trento-bike-sharing.json")
     Files.writeString(fixture,
       """[{"id":"295","name":"Stazione Uno","position":[11.12,46.04]},
@@ -104,7 +102,7 @@ class IntegrateSpec extends AnyFunSuite {
 
   test("RDF file arg becomes a LOAD workload; inline CONSTRUCT streams " +
       "N-Quads to stdout") {
-    val dir = tmpDir()
+    val dir = tmpDir("integrate")
     val nt = dir.resolve("data.nt")
     Files.writeString(nt,
       "<urn:a> <urn:p> \"x\" .\n<urn:b> <urn:p> \"y\" .\n")
@@ -118,7 +116,7 @@ class IntegrateSpec extends AnyFunSuite {
 
   test("quads + SELECT mix: quads own stdout, the SELECT table goes to " +
       "stderr as TSV") {
-    val dir = tmpDir()
+    val dir = tmpDir("integrate")
     val nt = dir.resolve("d.nt")
     Files.writeString(nt, "<urn:a> <urn:p> \"1\" .\n")
     val (code, out, err) = cli(nt.toString,
@@ -132,7 +130,7 @@ class IntegrateSpec extends AnyFunSuite {
   }
 
   test("--split writes one output file per source argument") {
-    val dir = tmpDir()
+    val dir = tmpDir("integrate")
     val a = dir.resolve("alpha.sparql")
     val b = dir.resolve("beta.sparql")
     Files.writeString(a,
@@ -151,7 +149,7 @@ class IntegrateSpec extends AnyFunSuite {
 
   test("--io FILE: the file is both first input and output, replaced " +
       "atomically on success") {
-    val dir = tmpDir()
+    val dir = tmpDir("integrate")
     val f = dir.resolve("inout.nq")
     Files.writeString(f, "<urn:a> <urn:p> \"v\" <urn:g> .\n")
     val (code, _, err) = cli("--io", f.toString,
@@ -162,7 +160,7 @@ class IntegrateSpec extends AnyFunSuite {
   }
 
   test("-o file.trig picks the TriG serialization from the extension") {
-    val dir = tmpDir()
+    val dir = tmpDir("integrate")
     val outFile = dir.resolve("o.trig")
     val (code, _, err) = cli(
       "INSERT DATA { GRAPH <urn:g> { <urn:s> <urn:p> <urn:o> } }",
@@ -175,7 +173,7 @@ class IntegrateSpec extends AnyFunSuite {
   }
 
   test("ASK routes as a result table; DESCRIBE routes as quads") {
-    val dir = tmpDir()
+    val dir = tmpDir("integrate")
     val nt = dir.resolve("d.nt")
     Files.writeString(nt, "<urn:a> <urn:p> \"1\" .\n")
     val (c1, out1, _) = cli(nt.toString, "ASK { ?s <urn:p> ?o }")
@@ -188,7 +186,7 @@ class IntegrateSpec extends AnyFunSuite {
 
   test("<env:VAR> substitution: --env first, process env fallback, " +
       "missing name fails loudly") {
-    val dir = tmpDir()
+    val dir = tmpDir("integrate")
     val nt = dir.resolve("envdata.nt")
     Files.writeString(nt, "<urn:e> <urn:p> \"z\" .\n")
     val (code, out, err) = cli("--env", s"SRC=$nt",
@@ -207,7 +205,7 @@ class IntegrateSpec extends AnyFunSuite {
     "order, one job per wave of partitions") {
     val dp = spark.sparkContext.defaultParallelism
     val p = 3 * dp
-    val dir = tmpDir()
+    val dir = tmpDir("integrate")
     val nt = dir.resolve("d.nt")
     val ids = new scala.util.Random(7).shuffle((1 to 60).toList)
     // odd subjects have no <urn:v> value: their ?o is unbound
@@ -270,7 +268,7 @@ class IntegrateSpec extends AnyFunSuite {
 
   test("HDT loop through the CLI: -o file.hdt encodes, a second " +
       "invocation LOADs the .hdt back") {
-    val dir = tmpDir()
+    val dir = tmpDir("integrate")
     val nt = dir.resolve("d.nt")
     Files.writeString(nt, "<urn:a> <urn:p> \"1\" .\n<urn:b> <urn:p> \"2\" .\n")
     val hdt = dir.resolve("o.hdt")
@@ -295,7 +293,7 @@ class IntegrateSpec extends AnyFunSuite {
 
   test("gzip output by extension: -o FILE.nq.gz holds the N-Quads " +
       "gzip-compressed") {
-    val dir = tmpDir()
+    val dir = tmpDir("integrate")
     val nt = dir.resolve("d.nt")
     Files.writeString(nt, "<urn:a> <urn:p> \"1\" .\n<urn:b> <urn:p> \"2\" .\n")
     val outFile = dir.resolve("o.nq.gz")
@@ -323,7 +321,7 @@ class IntegrateSpec extends AnyFunSuite {
 
   test("gzip output by extension for a bindings-only script: -o " +
       "FILE.tsv.gz holds the TSV gzip-compressed") {
-    val dir = tmpDir()
+    val dir = tmpDir("integrate")
     val nt = dir.resolve("d.nt")
     Files.writeString(nt, "<urn:a> <urn:p> \"1\" .\n")
     val select = "SELECT ?s ?o WHERE { ?s <urn:p> ?o }"
@@ -338,7 +336,7 @@ class IntegrateSpec extends AnyFunSuite {
 
   test("-o FILE holds the bytes stdout gets, for a quad script and a " +
       "bindings-only script") {
-    val dir = tmpDir()
+    val dir = tmpDir("integrate")
     val nt = dir.resolve("d.nt")
     Files.writeString(nt, (1 to 40).map(i =>
       s"<urn:s$i> <urn:p> \"v$i\" <urn:g${i % 3}> .\n").mkString)
@@ -356,7 +354,7 @@ class IntegrateSpec extends AnyFunSuite {
 
   test("-o and --split leave only their output files: no .crc, _SUCCESS, " +
       "staging directory or tmp") {
-    val dir = tmpDir()
+    val dir = tmpDir("integrate")
     val a = dir.resolve("alpha.sparql")
     Files.writeString(a, "INSERT DATA { <urn:a> <urn:p> <urn:o> }\n" +
       "CONSTRUCT { ?s <urn:q> ?o } WHERE { ?s <urn:p> ?o }")
@@ -378,7 +376,7 @@ class IntegrateSpec extends AnyFunSuite {
   test("writeSingleFile over a frame that fails while it runs leaves the " +
       "target as it was and no tmp beside it") {
     import org.apache.spark.sql.functions._
-    val dir = tmpDir()
+    val dir = tmpDir("integrate")
     val target = dir.resolve("keep.nq")
     Files.writeString(target, "<urn:old> <urn:p> <urn:o> .\n")
     val before = Files.readAllBytes(target).toSeq

@@ -6,7 +6,7 @@ import graft.sources.RdfIO
 import graft.sources.Transcripts
 import graft.linking.Gazetteer
 
-class IoAndPlanSpec extends AnyFunSuite {
+class IoAndPlanSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -53,7 +53,7 @@ class IoAndPlanSpec extends AnyFunSuite {
   }
 
   test("nquads write/read roundtrip preserves the triple set") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-nq").toString
+    val dir = tmpDir("nq").toString
     val quads = graft.pipeline.Kg.canonicalTriples(spark, TestSpark.sf0001)
       .select("graph", "subj", "pred", "obj")
     RdfIO.writeNQuads(quads, dir)
@@ -103,7 +103,7 @@ class IoAndPlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.Trigger
     val schema = spark.read.parquet(s"${TestSpark.sf0001}/events.parquet").schema
     // file stream source wants a directory; stage the single parquet file
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream")
+    val dir = tmpDir("stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"${TestSpark.sf0001}/events.parquet"),
       dir.resolve("events.parquet"))
@@ -134,7 +134,7 @@ class IoAndPlanSpec extends AnyFunSuite {
     def semi() = PathOps.closureSeminaive(edges).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     val localC = closure(); val localS = semi()
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = tmpDir("ckpt").toString
     sys.props("graft.checkpointDir") = dir
     try {
       assert(graft.Checkpoints.reliableDir === Some(dir))

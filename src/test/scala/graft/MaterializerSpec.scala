@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart}
@@ -12,23 +11,12 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 
-class MaterializerSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MaterializerSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  import TestSpark.deleteTree
 
-  /** Every store of this spec lives under one directory, deleted after
-    * the last test.
-    */
-  private lazy val root = Files.createTempDirectory("graft-mat")
-
-  private def tmp(): String = Files.createTempDirectory(root, "store").toString
-
-  private def deleteTree(dir: Path): Unit =
-    Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.delete(p))
-
-  override def afterAll(): Unit =
-    try deleteTree(root) finally super.afterAll()
+  private def tmp(): String = tmpDir("store").toString
 
   private def parquetFiles(dir: Path): Seq[Path] =
     Files.list(dir).iterator.asScala

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops.{NgsOps, SbsOps}
 
-class OpsSpec extends AnyFunSuite {
+class OpsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -17,7 +17,7 @@ class OpsSpec extends AnyFunSuite {
   ).toDF("graph", "subj", "pred", "obj")
 
   test("sbs split partitions bindings by key into per-value directories") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-split").toString
+    val dir = tmpDir("split").toString
     val n = SbsOps.splitWrite(quads, "graph", dir)
     assert(n === 4)
     // one directory per key, each readable and containing only its rows
@@ -166,7 +166,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("gitRevisions: one graph per commit, metadata + payload at each rev") {
-    val repo = java.nio.file.Files.createTempDirectory("graft-git")
+    val repo = tmpDir("git")
     gitAt(repo, "1600000000 +0000", "init", "-q", ".")
     gitAt(repo, "1600000000 +0000", "config", "user.name", "t")
     gitAt(repo, "1600000000 +0000", "config", "user.email", "t@example.org")
@@ -215,7 +215,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("gitRevisions: file in a repo SUBDIRECTORY resolves its revisions " +
       "(pathspecs are cwd-relative — review-found silent-empty bug)") {
-    val repo = java.nio.file.Files.createTempDirectory("graft-git-sub")
+    val repo = tmpDir("git-sub")
     gitAt(repo, "1600000000 +0000", "init", "-q", ".")
     gitAt(repo, "1600000000 +0000", "config", "user.name", "t")
     gitAt(repo, "1600000000 +0000", "config", "user.email", "t@example.org")
@@ -231,7 +231,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("gitRevisions: a deleting commit in the history is skipped, not " +
       "fatal (git log lists it; no blob exists at that revision)") {
-    val repo = java.nio.file.Files.createTempDirectory("graft-git-del")
+    val repo = tmpDir("git-del")
     gitAt(repo, "1600000000 +0000", "init", "-q", ".")
     gitAt(repo, "1600000000 +0000", "config", "user.name", "t")
     gitAt(repo, "1600000000 +0000", "config", "user.email", "t@example.org")
@@ -251,7 +251,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("gitRevisions: non-repo path and untracked file fail loudly") {
-    val lone = java.nio.file.Files.createTempDirectory("graft-nogit")
+    val lone = tmpDir("nogit")
       .resolve("x.ttl")
     java.nio.file.Files.writeString(lone, "<urn:a> <urn:p> \"1\" .\n")
     val e = intercept[IllegalArgumentException] {

@@ -10,6 +10,43 @@ class RulesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** The transcript rules built by hand from Scala `Rule`s: the reference
+    * the parsed [[TranscriptRules.constructText]] must reproduce.
+    */
+  private def handTriples(transcripts: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    import graft.rules.{Rule, RuleCompiler, TripleTemplate}
+    import RdfTerms.{iri, longLit, strLit, RdfType}
+    val NS = "http://graft.io/"
+    val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
+    val withIris = transcripts
+      .withColumn("turn_iri",
+        concat(lit("<" + NS + "conv/"), col("conv_id"), lit("/turn/"),
+          col("turn_idx").cast("string"), lit(">")))
+      .withColumn("conv_iri",
+        concat(lit("<" + NS + "conv/"), col("conv_id"), lit(">")))
+      .withColumn("g",
+        concat(lit("<" + NS + "g/"), col("conv_id"), lit(">")))
+      .withColumn("next_iri", lead(col("turn_idx"), 1).over(w))
+    def t(p: String, o: org.apache.spark.sql.Column) = TripleTemplate(
+      col("turn_iri"), lit("<" + NS + "p/" + p + ">"), o, col("g"))
+    RuleCompiler.compile(withIris, Seq(
+      Rule("turn-core", lit(true), Seq(
+        TripleTemplate(col("turn_iri"), iri(RdfType),
+          lit("<" + NS + "Turn>"), col("g")),
+        t("role", strLit(col("role"))),
+        t("text", strLit(col("text"))),
+        t("ts", longLit(unix_micros(col("ts").cast("timestamp")))),
+        t("conv", col("conv_iri")),
+        TripleTemplate(col("conv_iri"), lit("<" + NS + "p/hasTurn>"),
+          col("turn_iri"), col("g")))),
+      Rule("turn-tool", col("tool").isNotNull, Seq(
+        t("tool", strLit(col("tool"))))),
+      Rule("turn-next", col("next_iri").isNotNull, Seq(
+        t("next", concat(lit("<" + NS + "conv/"), col("conv_id"),
+          lit("/turn/"), col("next_iri").cast("string"), lit(">")))))))
+  }
+
   test("transcript derivation is deterministic and well-formed") {
     val t = Transcripts(spark, TestSpark.sf0001).cache()
     assert(t.count() === 1000)
@@ -46,16 +83,16 @@ class RulesSpec extends AnyFunSuite {
 
   test("parsed CONSTRUCT text == hand-built rules, triple for triple") {
     val t = Transcripts(spark, TestSpark.sf0001)
-    val hand = TranscriptRules.triples(t)
-    val parsed = TranscriptRules.triplesFromText(t)
+    val hand = handTriples(t)
+    val parsed = TranscriptRules.triples(t)
     assert(parsed.count() === hand.count())
     assert(parsed.exceptAll(hand).count() === 0)
     assert(hand.exceptAll(parsed).count() === 0)
   }
 
   test("CONSTRUCT parser: FILTER, literals, equality, unsupported fails") {
-    import graft.rules.{ConstructParser, RuleCompiler}
-    val in = Seq(("x", 1L, "keep"), ("y", 2L, "drop"))
+    import graft.rules.ConstructParser
+    val in = Seq(("x", 1L, "keep"), ("y", 2L, "drop"), ("z", 30L, "keep"))
       .toDF("id", "v", "mark")
     val q =
       """PREFIX ex: <http://ex.org/>
@@ -64,13 +101,27 @@ class RulesSpec extends AnyFunSuite {
         |  BIND(IRI(CONCAT("http://ex.org/", ?id)) AS ?s)
         |  FILTER(?mark = "keep" && BOUND(?v))
         |}""".stripMargin
-    val out = RuleCompiler.compile(in, ConstructParser.parse(q))
-    val rows = out.collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSet
-    assert(rows === Set(
+    def quads(q: String) = ConstructParser.parseConstruct(q).run(in).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSet
+    assert(quads(q) === Set(
       ("<http://ex.org/x>", "<http://ex.org/v>", "\"1\"", "<http://ex.org/g>"),
-      ("<http://ex.org/x>", "<http://ex.org/lit>", "\"const\"", "<http://ex.org/g>")))
-    intercept[IllegalArgumentException](
-      ConstructParser.parse("CONSTRUCT { ?s ?p ?o } WHERE { ?s ?p ?o }"))
+      ("<http://ex.org/x>", "<http://ex.org/lit>", "\"const\"", "<http://ex.org/g>"),
+      ("<http://ex.org/z>", "<http://ex.org/v>", "\"30\"", "<http://ex.org/g>"),
+      ("<http://ex.org/z>", "<http://ex.org/lit>", "\"const\"", "<http://ex.org/g>")))
+    // a FILTER written before the BIND it reads applies at group end and
+    // compares the bound VALUE: 31 > 10, 2 is not
+    assert(quads(
+      """CONSTRUCT { ?s <http://ex.org/x> ?x }
+        |WHERE {
+        |  FILTER(?x > 10)
+        |  BIND(IRI(CONCAT("http://ex.org/", ?id)) AS ?s)
+        |  BIND(?v + 1 AS ?x)
+        |}""".stripMargin) === Set(("<http://ex.org/z>", "<http://ex.org/x>",
+      "\"31.0\"", "<urn:x-arq:DefaultGraph>")))
+    val e = intercept[IllegalArgumentException](ConstructParser.parseConstruct(
+      "PREFIX ex: <http://ex.org/> CONSTRUCT { ?s ?p ?o } " +
+        "WHERE { BIND(ex:nofn(?id) AS ?s) }"))
+    assert(e.getMessage.contains("unknown function <http://ex.org/nofn>"))
   }
 
   test("BGP text WHERE equals the hand-built Bgp composition") {
@@ -102,8 +153,6 @@ class RulesSpec extends AnyFunSuite {
     assert(viaText.count() === hand.count())
     assert(viaText.exceptAll(hand).count() === 0)
     assert(hand.exceptAll(viaText).count() === 0)
-    // legacy parse() refuses a BGP WHERE loudly
-    intercept[IllegalArgumentException](ConstructParser.parse(q))
   }
 
   test("BGP text: UNION/MINUS/EXISTS/GRAPH shapes compile and misuse fails") {
@@ -160,7 +209,7 @@ class RulesSpec extends AnyFunSuite {
   }
 
   test("statement sequence parses with prefix carry-over across statements") {
-    import graft.rules.{ConstructParser, RuleCompiler}
+    import graft.rules.ConstructParser
     val seq =
       """PREFIX ex: <http://ex.org/>
         |CONSTRUCT { GRAPH ex:g1 { ?s ex:first "1" . } }
@@ -170,11 +219,12 @@ class RulesSpec extends AnyFunSuite {
         |CONSTRUCT { GRAPH p2:g2 { ?s ex:second "2" . } }
         |WHERE { BIND(IRI(CONCAT("http://ex.org/", ?id)) AS ?s) }
         |""".stripMargin
-    val stmts = graft.rules.ConstructParser.parseSequence(seq)
+    val stmts = ConstructParser.parseScript(seq).collect {
+      case ConstructParser.QueryStmt(q) => q }
     assert(stmts.size === 2)
     val in = Seq("a").toDF("id")
-    val out1 = RuleCompiler.compile(in, stmts(0)).collect()
-    val out2 = RuleCompiler.compile(in, stmts(1)).collect()
+    val out1 = stmts(0).run(in).collect()
+    val out2 = stmts(1).run(in).collect()
     assert(out1.head.getString(3) === "<http://ex.org/g1>")
     assert(out2.head.getString(1) === "<http://ex.org/second>") // ex: carried
     assert(out2.head.getString(3) === "<http://p2.org/g2>")

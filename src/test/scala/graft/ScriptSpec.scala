@@ -6,12 +6,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import graft.pipeline.{QuadDelta, QuadDeltaRDD, Script}
 
-class ScriptSpec extends AnyFunSuite {
+class ScriptSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   test("runSparql: LOAD INTO GRAPH, CLEAR GRAPH, SELECT statement, data ops") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-script")
+    val dir = tmpDir("script")
     val nq = dir.resolve("d.nq").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(nq),
       "<s1> <p> \"1\" .\n<s2> <p> \"2\" .\n")
@@ -138,21 +138,6 @@ class ScriptSpec extends AnyFunSuite {
       === "GRAPH <urn:g> {")
     intercept[IllegalArgumentException](
       ConstructParser.envSubst("<env:MISSING>", Map()))
-  }
-
-  test("writeSplit: one independent resumable sink per rule group") {
-    import graft.materialize.Materializer
-    val out = java.nio.file.Files.createTempDirectory("graft-split").toString
-    val a = Seq(("<s1>", "<p>", "\"1\"", "<g1>")).toDF("subj", "pred", "obj", "graph")
-    val b = Seq(("<s2>", "<p>", "\"2\"", "<g2>")).toDF("subj", "pred", "obj", "graph")
-    Materializer.writeSplit(Map("core" -> a, "mentions" -> b), out, nBuckets = 2)
-    val backA = spark.read.parquet(s"$out/core/triples")
-    val backB = spark.read.parquet(s"$out/mentions/triples")
-    assert(backA.select("subj").as[String].collect().toSeq === Seq("<s1>"))
-    assert(backB.select("subj").as[String].collect().toSeq === Seq("<s2>"))
-    assert(Materializer.verifyCounts(spark, s"$out/core"))
-    intercept[IllegalArgumentException](
-      Materializer.writeSplit(Map("../evil" -> a), out))
   }
 
   test("test-zip-arrays.sparql shape: INSERT DATA xsd:json payload + " +

@@ -17,7 +17,7 @@ import graft.server.SparqlHttpServer
   * CmdSparqlIntegrateMain.java:57,134-141) — every test talks real HTTP
   * over loopback via `java.net.http.HttpClient`.
   */
-class ServerSpec extends AnyFunSuite {
+class ServerSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private val client = HttpClient.newHttpClient()
@@ -76,7 +76,7 @@ class ServerSpec extends AnyFunSuite {
       assert(body.contains("line1\\nline2 \\\"q\\\""))
       // the engine's own SRJ reader parses the writer's output back to
       // the exact term strings the server serialized
-      val tmp = java.nio.file.Files.createTempFile("srv", ".srj")
+      val tmp = tmpDir("srv").resolve("body.srj")
       java.nio.file.Files.writeString(tmp, body)
       val back = graft.sources.ResultSetIO.readSrj(spark, tmp.toString)
         .collect().map(r => (r.getString(0), r.getString(1))).toSet

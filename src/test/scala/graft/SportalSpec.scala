@@ -13,7 +13,7 @@ import graft.sources.SyntheticQuads
   * checks assert profile numbers against directly computed ground truth,
   * and raw-vs-compact equivalence after bnode flattening.
   */
-class SportalSpec extends AnyFunSuite {
+class SportalSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   private lazy val trip = {
     val t = SyntheticQuads.sportalTriples(spark, TestSpark.sf0001)
@@ -166,7 +166,7 @@ class SportalSpec extends AnyFunSuite {
   }
 
   test("scriptFixture's driver write refuses a data-scale frame (loud bound)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_guard")
+    val root = tmpDir("guard")
     val big = trip // any frame larger than the tiny bound we pass
     val ex = intercept[IllegalArgumentException] {
       graft.ops.SportalSuite.writeSortedNt(big, root, maxTriples = 3)

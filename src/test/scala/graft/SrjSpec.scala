@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.ResultSetIO
 
-class SrjSpec extends AnyFunSuite {
+class SrjSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -19,7 +19,7 @@ class SrjSpec extends AnyFunSuite {
         |    "o":{"type":"literal","value":"42","datatype":"http://www.w3.org/2001/XMLSchema#integer"}},
         |   {"s":{"type":"uri","value":"http://ex.org/d"}}
         | ]}}""".stripMargin
-    val f = java.nio.file.Files.createTempFile("graft", ".srj")
+    val f = tmpDir("srj").resolve("doc.srj")
     java.nio.file.Files.writeString(f, doc)
     val df = ResultSetIO.readSrj(spark, f.toString)
     assert(df.columns.sorted.toSeq === Seq("ghost", "o", "s"))
@@ -38,7 +38,7 @@ class SrjSpec extends AnyFunSuite {
   }
 
   test("readSrjLines splits one big file across tasks and decodes identically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-srjl")
+    val dir = tmpDir("srjl")
     val lines = dir.resolve("b.jsonl").toString
     ResultSetIO.writeSrjLinesFixture(spark, TestSpark.sf0001, lines)
     val doc = dir.resolve("b.srj").toString

@@ -19,7 +19,7 @@ import graft.rules.ConstructParser
   * deterministic, shaped after what the query expects); the query TEXTS
   * are byte-for-byte upstream.
   */
-class StrayScriptsSpec extends AnyFunSuite {
+class StrayScriptsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   // the one shared classpath loader (RelationalSuite) — no second copy
@@ -56,7 +56,7 @@ class StrayScriptsSpec extends AnyFunSuite {
 
   test("sorted-service.sparql verbatim: binsearch file-SERVICE via fileAliases") {
     val lsq = "http://lsq.aksw.org/res/le-swdf-q-db01d0b8-02016-29-18_04:29:53-tp-1"
-    val dir = java.nio.file.Files.createTempDirectory("graft_lsq")
+    val dir = tmpDir("lsq")
     // stand-in for the machine-local deleteme.sorted.nt: the queried
     // subject plus a decoy, subject-sorted like a binsearch endpoint file
     java.nio.file.Files.writeString(dir.resolve("deleteme.sorted.nt"),
@@ -77,7 +77,7 @@ class StrayScriptsSpec extends AnyFunSuite {
 
   test("service-test-all-triples.sparql verbatim: INSERT from a UNION of " +
       "file SERVICEs, each a default/GRAPH UNION") {
-    val base = java.nio.file.Files.createTempDirectory("graft_stray").toString
+    val base = tmpDir("stray").toString
     for (n <- Seq("triples.ttl", "quads.trig"))
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(base, n), res("unsorted", n))
@@ -99,7 +99,7 @@ class StrayScriptsSpec extends AnyFunSuite {
 
   test("docs/examples/test3.sparql verbatim: FROM <file:///home/raven/…> " +
       "via fileAliases") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dcat")
+    val dir = tmpDir("dcat")
     // stand-in dcat.ttl (the real dataset file is machine-local): a
     // minimal DCAT description, exercising Turtle prefixes + typed parse
     java.nio.file.Files.writeString(dir.resolve("dcat.ttl"),
@@ -127,7 +127,7 @@ class StrayScriptsSpec extends AnyFunSuite {
 
   test("docs/examples/test2.sparql verbatim: SERVICE <file:///home/raven/…> " +
       "via fileAliases") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dcat2")
+    val dir = tmpDir("dcat2")
     java.nio.file.Files.writeString(dir.resolve("dcat.ttl"),
       """@prefix dct: <http://purl.org/dc/terms/> .
         |<http://ex.org/ds/bikes> dct:title "Electric bikesharing stations" .

@@ -8,11 +8,11 @@ import graft.streaming.StreamOps
 /** Structured Streaming operators equal their batch twins on a bounded
   * stream (Trigger.AvailableNow over a staged file directory).
   */
-class StreamSpec extends AnyFunSuite {
+class StreamSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def stageDir(copies: (String, String)*): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-streamspec")
+    val dir = tmpDir("streamspec")
     copies.foreach { case (src, name) =>
       java.nio.file.Files.copy(java.nio.file.Paths.get(src), dir.resolve(name))
     }
@@ -21,7 +21,7 @@ class StreamSpec extends AnyFunSuite {
 
   test("streaming N-Quads source parses like the batch reader") {
     val quads = graft.sources.SyntheticQuads(spark, TestSpark.sf0001).drop("idx")
-    val dir = java.nio.file.Files.createTempDirectory("graft-nqstream").toString
+    val dir = tmpDir("nqstream").toString
     graft.sources.RdfIO.writeNQuads(quads, dir + "/out")
     val q = StreamOps.readNQuadsStream(spark, dir + "/out")
       .writeStream.format("memory").queryName("nq_stream")
@@ -34,7 +34,7 @@ class StreamSpec extends AnyFunSuite {
 
   test("watermarked window aggregation equals the batch groupBy") {
     val t = graft.sources.Transcripts(spark, TestSpark.sf0001)
-    val dir = java.nio.file.Files.createTempDirectory("graft-wstream").toString
+    val dir = tmpDir("wstream").toString
     t.write.mode("overwrite").parquet(dir)
     val schema = spark.read.parquet(dir).schema
     val stream = spark.readStream.schema(schema).parquet(dir)
@@ -59,7 +59,7 @@ class StreamSpec extends AnyFunSuite {
 
   test("flatMapGroupsWithState running counts converge to batch counts") {
     val t = graft.sources.Transcripts(spark, TestSpark.sf0001)
-    val dir = java.nio.file.Files.createTempDirectory("graft-tstream").toString
+    val dir = tmpDir("tstream").toString
     t.write.mode("overwrite").parquet(dir)
     val schema = spark.read.parquet(dir).schema
     val stream = spark.readStream.schema(schema).parquet(dir)

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
@@ -7,11 +8,19 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** One shared local session for all suites (lazy, created on first use). */
 object TestSpark {
   lazy val spark: SparkSession = LocalSession("graft-test", "4")
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Delete `dir` and everything under it. */
+  def deleteTree(dir: Path): Unit = {
+    val all = Files.walk(dir)
+    try all.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    finally all.close()
+  }
 
   /** Runs `body`; returns its result and the job starts and other
     * (SQL, AQE) listener events posted meanwhile, in bus order.
@@ -50,4 +59,24 @@ object TestSpark {
         .map(_.getProperty("spark.job.description")).orNull)
     })
   }
+}
+
+/** A suite's scratch directories: all under one root in the JVM temp dir,
+  * deleted with everything in it after the suite's last test.
+  */
+trait TempDirs extends BeforeAndAfterAll { this: Suite =>
+  private var root: Option[Path] = None
+
+  /** A fresh, empty directory under this suite's root. */
+  protected def tmpDir(prefix: String): Path = synchronized {
+    val r = root.getOrElse {
+      val d = Files.createTempDirectory("graft-spec")
+      root = Some(d)
+      d
+    }
+    Files.createTempDirectory(r, prefix)
+  }
+
+  override def afterAll(): Unit =
+    try root.foreach(TestSpark.deleteTree) finally super.afterAll()
 }

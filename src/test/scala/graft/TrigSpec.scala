@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{RdfIO, TrigParser}
 
-class TrigSpec extends AnyFunSuite {
+class TrigSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def parse(doc: String): Set[(String, String, String, String)] =
@@ -133,7 +133,7 @@ class TrigSpec extends AnyFunSuite {
   }
 
   test("readRdfAuto: '{' inside a literal does not misroute N-Quads to TriG") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-auto-brace")
+    val dir = tmpDir("auto-brace")
     val nq = dir.resolve("json.nq").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(nq),
       "<s> <p> \"{\\\"k\\\":1}\"^^<http://www.w3.org/2001/XMLSchema#json> <g> .\n" +
@@ -244,7 +244,7 @@ class TrigSpec extends AnyFunSuite {
   }
 
   test("readRdfAuto probes content: nquads routes to line reader, trig to doc reader") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-auto")
+    val dir = tmpDir("auto")
     val trig = dir.resolve("a.trig").toString
     RdfIO.writeTrigFixture(spark, TestSpark.sf0001, trig)
     val viaAuto = RdfIO.readRdfAuto(spark, trig)
@@ -259,7 +259,7 @@ class TrigSpec extends AnyFunSuite {
   }
 
   test("readTrig over files (plain + gz) matches the fixture's oracle shape") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-trig")
+    val dir = tmpDir("trig")
     val f = dir.resolve("fix.trig").toString
     RdfIO.writeTrigFixture(spark, TestSpark.sf0001, f)
     val df = RdfIO.readTrig(spark, f)

@@ -8,7 +8,7 @@ import graft.rules.ConstructParser
   * turned into proper unit tests" — so they become ours). Copies +
   * provenance under src/test/resources/unsorted/.
   */
-class UnsortedTestsSpec extends AnyFunSuite {
+class UnsortedTestsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def res(name: String): String = {
@@ -22,7 +22,7 @@ class UnsortedTestsSpec extends AnyFunSuite {
     * RELATIVE file SERVICE IRIs, resolved against graft.sparql.base).
     */
   private def withBase[A](f: String => A): A = {
-    val base = java.nio.file.Files.createTempDirectory("graft_unsorted").toString
+    val base = tmpDir("unsorted").toString
     for (n <- Seq("triples.ttl", "quads.trig", "iotest.nt"))
       java.nio.file.Files.writeString(java.nio.file.Paths.get(base, n), res(n))
     val old = sys.props.get("graft.sparql.base")
